@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *    edge set via [[closeWedges]] — broadcast below MaxBroadcastEdges,
   *    shuffled hash join on (a, c) above (linear in wedges either way).
   *    The edge set itself comes from the bucketed band join
-  *    (graft.joins.NonEquiJoins.bandJoinLong), never a cross product.
+  *    (graft.joins.NonEquiJoins.bandJoin, exact long buckets), never a cross product.
   */
 object Graphs {
 
@@ -202,7 +202,7 @@ object Graphs {
     val b = cust.select(col("k").as("w"), col("v").as("wv"))
     // Oriented edge set, built once and reused by both sides of the wedge
     // join and by the closing semi join (three scans of one checkpoint).
-    val e = NonEquiJoins.bandJoinLong(a, b, "uv", "wv", TriEps)
+    val e = NonEquiJoins.bandJoin(a, b, "uv", "wv", TriEps.toDouble)
       .filter(col("u") < col("w"))
       .select(col("u"), col("w").as("v"))
       .localCheckpoint()
@@ -251,7 +251,7 @@ object Graphs {
         round(col("c_acctbal") * 100).cast("long").as("v"))
     val a = cust.select(col("k").as("u"), col("v").as("uv"))
     val b = cust.select(col("k").as("w"), col("v").as("wv"))
-    val edges = NonEquiJoins.bandJoinLong(a, b, "uv", "wv", CcEps)
+    val edges = NonEquiJoins.bandJoin(a, b, "uv", "wv", CcEps.toDouble)
       .filter(col("u") < col("w"))
       .select(col("u").as("ia"), col("w").as("ib"))
       .localCheckpoint()

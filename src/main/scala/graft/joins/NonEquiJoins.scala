@@ -1,8 +1,13 @@
 package graft.joins
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.Bucketing
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression, Literal, Subtract}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Shuffle-parallel non-equi (theta) join operators — the core capability of
   * the reference engine (a Hadoop MapReduce implementation of the
@@ -23,24 +28,42 @@ import org.apache.spark.sql.types.LongType
   */
 object NonEquiJoins {
 
-  /** `Math.floorDiv(c, d)` as Catalyst expressions: truncating integral
-    * `div`, minus 1 when the remainder is negative.  Exact over the whole
-    * long range (`%` and `div` cannot overflow for d > 0). */
-  private def floorDivLong(c: Column, d: Long): Column = {
-    val l = c.cast(LongType)
-    call_function("div", l, lit(d)) -
-      when(l % d < 0, lit(1L)).otherwise(lit(0L))
+  /** Rows each driver-side statistics pass samples per side. */
+  private val SampleSize = 2048
+
+  /** [[Bucketing.floorDiv]] over a DataFrame column. */
+  private def floorDiv(c: Column, d: Long): Column =
+    GraftSqlBridge.column(Bucketing.floorDiv(GraftSqlBridge.expression(c), d))
+
+  /** `left.join(right, cond)` rebuilt by a [[Bucketing]] rewrite of its
+    * analyzed Join; the rewrite gets the join plus a lookup of each
+    * side's columns by name.  Dataset.join has already de-duplicated the
+    * attributes of self-joins. */
+  private def rewriteJoin(left: DataFrame, right: DataFrame, cond: Column)(
+      rewrite: (Join, String => Attribute, String => Attribute) => LogicalPlan): DataFrame = {
+    val j = left.join(right, cond).queryExecution.analyzed.asInstanceOf[Join]
+    def attr(plan: LogicalPlan)(n: String): Attribute = plan.output.find(_.name == n)
+      .getOrElse(throw new IllegalArgumentException(
+        s"column '$n' not in ${plan.output.map(_.name).mkString(", ")}"))
+    GraftSqlBridge.ofRows(left.sparkSession.asInstanceOf[SparkSession],
+      rewrite(j, attr(j.left), attr(j.right)))
   }
 
   /** Band join: pairs with |left(lVal) − right(rVal)| ≤ eps (< eps if
     * `strict`), optionally under extra equi keys.
     *
-    * Rewrite: bucket width = eps; the left side is replicated to its bucket
-    * ±1 (`explode`), the right side keeps its single bucket, and the join is
-    * a plain shuffle equi join on (bucket, extraKeys).  Any qualifying pair
-    * lands in exactly one bucket (the right row's), so no dedup is needed.
-    * Replication factor is a constant 3 — at 100 TB this is a single
-    * hash-partitioned shuffle, never a nested loop.
+    * Rewrite ([[Bucketing.band]], the same one [[graft.plans.BandJoinAutoRewrite]]
+    * applies to a naive join): bucket width = eps; the left side is
+    * replicated to its bucket ±1, the right side keeps its single bucket,
+    * and the join is a plain shuffle equi join on (bucket, extraKeys).
+    * Any qualifying pair lands in exactly one bucket (the right row's), so
+    * no dedup is needed.  Replication factor is a constant 3 — at 100 TB
+    * this is a single hash-partitioned shuffle, never a nested loop.
+    *
+    * Integral values with a whole eps (e.g. epoch-micros) bucket by exact
+    * long floor-division — overflow-free over the whole long range, where
+    * a double quotient would mis-bucket values above 2^53; any other value
+    * type buckets by `floor(v / eps)`.
     */
   def bandJoin(
       left: DataFrame, right: DataFrame,
@@ -48,49 +71,23 @@ object NonEquiJoins {
       extraKeys: Seq[(String, String)] = Nil,
       strict: Boolean = false,
       bucketWithKeys: Boolean = false): DataFrame = {
-    val diff = abs(col(lVal) - col(rVal))
-    val band = if (strict) diff < eps else diff <= eps
-    if (extraKeys.nonEmpty && !bucketWithKeys) {
-      // With a selective equi key the bucket only triples the shuffle: join
-      // on the keys and post-filter the band.  Set bucketWithKeys=true when
-      // the keys are coarse (few distinct values) so the bucket still
-      // prunes within each key group.
-      val keyCond = extraKeys.map { case (a, b) => left(a) === right(b) }.reduce(_ && _)
-      left.join(right, keyCond).filter(band)
-    } else {
-      val lb = left.withColumn("__gb",
-        explode(array((-1 to 1).map(d => floor(col(lVal) / eps).cast(LongType) + d): _*)))
-      val rb = right.withColumn("__gb", floor(col(rVal) / eps).cast(LongType))
-      val keyCond = extraKeys.map { case (a, b) => lb(a) === rb(b) }
-        .foldLeft(lb("__gb") === rb("__gb"))(_ && _)
-      lb.join(rb, keyCond).filter(band).drop("__gb")
-    }
-  }
-
-  /** Long-typed band join (e.g. epoch-micros intervals). Same rewrite with
-    * integer bucket arithmetic. */
-  def bandJoinLong(
-      left: DataFrame, right: DataFrame,
-      lVal: String, rVal: String, eps: Long,
-      extraKeys: Seq[(String, String)] = Nil,
-      strict: Boolean = false): DataFrame = {
-    // Time-style keys (e.g. user_id) are usually coarse, so the bucket is
-    // kept even alongside equi keys — it prunes within each key group.
-    // Buckets use exact long floor-division: truncating `div` corrected by
-    // one when the remainder is negative (Math.floorDiv as expressions) —
-    // overflow-free over the whole long range, where a double quotient
-    // would mis-bucket values above 2^53 and a pmod-subtraction would wrap
-    // within eps of Long.MinValue, silently dropping qualifying pairs.
     require(eps > 0, s"eps must be > 0, got $eps")
-    def bucketOf(c: Column): Column = floorDivLong(c, eps)
-    val lb = left.withColumn("__gb",
-      explode(array((-1 to 1).map(d => bucketOf(col(lVal)) + d): _*)))
-    val rb = right.withColumn("__gb", bucketOf(col(rVal)))
-    val keyCond = extraKeys.map { case (a, b) => lb(a) === rb(b) }
-      .foldLeft(lb("__gb") === rb("__gb"))(_ && _)
+    def integral(df: DataFrame, c: String) =
+      Seq(LongType, IntegerType).contains(df.schema(c).dataType)
+    val epsVal: Any =
+      if (eps.isWhole && integral(left, lVal) && integral(right, rVal)) eps.toLong else eps
     val diff = abs(col(lVal) - col(rVal))
-    val band = if (strict) diff < eps else diff <= eps
-    lb.join(rb, keyCond).filter(band).drop("__gb")
+    val band = if (strict) diff < lit(epsVal) else diff <= lit(epsVal)
+    val cond = extraKeys.map { case (a, b) => col(a) === col(b) }.foldLeft(band)(_ && _)
+    // With a selective equi key the bucket only triples the shuffle: join
+    // on the keys and re-check the band.  Set bucketWithKeys=true when the
+    // keys are coarse (few distinct values) so the bucket still prunes
+    // within each key group.
+    if (extraKeys.nonEmpty && !bucketWithKeys) left.join(right, cond)
+    else rewriteJoin(left, right, cond) { (j, l, r) =>
+      val (la, ra) = (l(lVal), r(rVal))
+      Bucketing.band(j, la, ra, Bucketing.bandBucket(la.dataType, epsVal).get)
+    }
   }
 
   /** Inequality (theta) join: pairs with left(lVal) < right(rVal).
@@ -110,11 +107,18 @@ object NonEquiJoins {
   def lessThanJoin(
       left: DataFrame, right: DataFrame,
       lVal: String, rVal: String,
-      lo: Double, hi: Double, buckets: Int = 32): DataFrame = {
-    val clampL = least(greatest(width_bucket(col(lVal), lit(lo), lit(hi), lit(buckets)), lit(1L)), lit(buckets.toLong))
-    val clampR = least(greatest(width_bucket(col(rVal), lit(lo), lit(hi), lit(buckets)), lit(1L)), lit(buckets.toLong))
-    val lb = left.withColumn("__tb", explode(sequence(clampL, lit(buckets.toLong))))
-    val rb = right.withColumn("__tb", clampR)
+      lo: Double, hi: Double, buckets: Int = 32): DataFrame =
+    suffixJoin(left, right, lVal, rVal, buckets, c =>
+      least(greatest(width_bucket(c, lit(lo), lit(hi), lit(buckets)), lit(1L)), lit(buckets.toLong)))
+
+  /** The inequality rewrite shared by the bucketed shapes: a left row in
+    * bucket b can only match right rows in buckets ≥ b, so it is
+    * replicated to its suffix of buckets up to `last`; equi join on the
+    * bucket, exact predicate re-applied. */
+  private def suffixJoin(left: DataFrame, right: DataFrame, lVal: String, rVal: String,
+      last: Long, bucketOf: Column => Column): DataFrame = {
+    val lb = left.withColumn("__tb", explode(sequence(bucketOf(col(lVal)), lit(last))))
+    val rb = right.withColumn("__tb", bucketOf(col(rVal)))
     lb.join(rb, lb("__tb") === rb("__tb"))
       .filter(col(lVal) < col(rVal))
       .drop("__tb")
@@ -123,13 +127,15 @@ object NonEquiJoins {
   /** Interval-overlap join on integer endpoints (e.g. epoch micros):
     * pairs whose [start, start+len) windows overlap, under extra equi keys.
     * Overlap with equal fixed lengths reduces to a strict band on the
-    * starts, which reuses the band rewrite.
+    * starts, which reuses the band rewrite.  Time-style keys (e.g.
+    * user_id) are usually coarse, so the bucket is kept alongside them.
     */
   def intervalOverlapJoin(
       left: DataFrame, right: DataFrame,
       lStart: String, rStart: String, len: Long,
       extraKeys: Seq[(String, String)] = Nil): DataFrame =
-    bandJoinLong(left, right, lStart, rStart, len, extraKeys, strict = true)
+    bandJoin(left, right, lStart, rStart, len.toDouble, extraKeys, strict = true,
+      bucketWithKeys = true)
 
   /** Inequality join with DATA-DRIVEN bucket boundaries — the skew-proof
     * form of [[lessThanJoin]] and the full Spark analog of M-Bucket-I's
@@ -145,22 +151,11 @@ object NonEquiJoins {
   def lessThanJoinQuantile(
       left: DataFrame, right: DataFrame,
       lVal: String, rVal: String, buckets: Int = 32): DataFrame = {
-    val vals = left.select(col(lVal).cast("double").as("v"))
-      .unionByName(right.select(col(rVal).cast("double").as("v")))
-    val probes = (1 until buckets).map(_.toDouble / buckets).toArray
-    // distinct+sorted: duplicate quantiles on heavy hitters would create
-    // zero-width buckets
-    val bounds = vals.stat.approxQuantile("v", probes, 0.001).distinct.sorted
-    def bucketOf(c: Column): Column =
+    val bounds = Bucketing.quantileBounds(left, right, lVal, rVal, buckets)
+    suffixJoin(left, right, lVal, rVal, bounds.length.toLong, c =>
       bounds.zipWithIndex.foldLeft(lit(0L)) { case (acc, (b, i)) =>
         when(c > b, lit(i.toLong + 1)).otherwise(acc)
-      }
-    val n = bounds.length.toLong
-    val lb = left.withColumn("__tb", explode(sequence(bucketOf(col(lVal)), lit(n))))
-    val rb = right.withColumn("__tb", bucketOf(col(rVal)))
-    lb.join(rb, lb("__tb") === rb("__tb"))
-      .filter(col(lVal) < col(rVal))
-      .drop("__tb")
+      })
   }
 
   /** Driver-side sampled statistics feeding [[lessThanStrategy]]: input
@@ -181,16 +176,16 @@ object NonEquiJoins {
   def lessThanStats(
       left: DataFrame, right: DataFrame,
       lVal: String, rVal: String,
-      buckets: Int = 32, sampleSize: Int = 2048): LessThanStats = {
+      buckets: Int = 32): LessThanStats = {
     val nL = left.count()
     val nR = right.count()
     def sampleVals(df: DataFrame, c: String, n: Long): Array[Double] = {
       val frac =
-        if (n <= sampleSize) 1.0
-        else math.min(1.0, sampleSize * 4.0 / n)
+        if (n <= SampleSize) 1.0
+        else math.min(1.0, SampleSize * 4.0 / n)
       df.select(col(c).cast("double").as("v")).filter(col("v").isNotNull)
         .sample(withReplacement = false, frac, 42L)
-        .limit(sampleSize).collect().map(_.getDouble(0))
+        .limit(SampleSize).collect().map(_.getDouble(0))
     }
     val sl = sampleVals(left, lVal, nL)
     val sr = sampleVals(right, rVal, nR)
@@ -221,13 +216,8 @@ object NonEquiJoins {
         }
         hits.toDouble / (sl.length.toDouble * srSorted.length)
       }
-    // the sort-merge operator's supported key types (plans/IEJoin.scala)
-    val supported: Seq[org.apache.spark.sql.types.DataType] = Seq(
-      org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType,
-      org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.FloatType)
     val typesOk = left.schema(lVal).dataType == right.schema(rVal).dataType &&
-      supported.contains(left.schema(lVal).dataType)
+      graft.plans.IEJoin.KeyTypes.contains(left.schema(lVal).dataType)
     LessThanStats(nL, nR, hotFrac, p * nL * nR, typesOk, lo, hi)
   }
 
@@ -266,21 +256,22 @@ object NonEquiJoins {
     * spec asserts both the routing and result equality across shapes. */
   def lessThanJoinAuto(
       left: DataFrame, right: DataFrame,
-      lVal: String, rVal: String,
-      buckets: Int = 32,
-      cellRowBudget: Long = 4000000L,
-      densePairBar: Long = 500000000L,
-      sampleSize: Int = 2048): DataFrame = {
-    val st = lessThanStats(left, right, lVal, rVal, buckets, sampleSize)
-    lessThanStrategy(st, cellRowBudget, densePairBar) match {
-      case "quantile" => lessThanJoinQuantile(left, right, lVal, rVal, buckets)
-      case "iejoin" => graft.plans.IEJoin(left, right, lVal, rVal, buckets)
+      lVal: String, rVal: String): DataFrame = {
+    val st = lessThanStats(left, right, lVal, rVal)
+    lessThanJoinRouted(lessThanStrategy(st), st, left, right, lVal, rVal)
+  }
+
+  /** The inequality join through one named route of [[lessThanStrategy]]. */
+  private[joins] def lessThanJoinRouted(route: String, st: LessThanStats,
+      left: DataFrame, right: DataFrame, lVal: String, rVal: String): DataFrame =
+    route match {
+      case "quantile" => lessThanJoinQuantile(left, right, lVal, rVal)
+      case "iejoin" => graft.plans.IEJoin(left, right, lVal, rVal)
       case _ =>
         val (lo, hi) =
           if (st.lo < st.hi) (st.lo, st.hi) else (st.lo - 1.0, st.hi + 1.0)
-        lessThanJoin(left, right, lVal, rVal, lo, hi, buckets)
+        lessThanJoin(left, right, lVal, rVal, lo, hi)
     }
-  }
 
   /** Point-in-interval join with VARIABLE-length intervals: each point row
     * (pCol) matches interval rows with startCol <= p < endCol, under extra
@@ -301,7 +292,7 @@ object NonEquiJoins {
       bucketWidth: Long,
       extraKeys: Seq[(String, String)] = Nil): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be > 0, got $bucketWidth")
-    def bucketOf(c: Column): Column = floorDivLong(c, bucketWidth)
+    def bucketOf(c: Column): Column = floorDiv(c, bucketWidth)
     val ib = intervals.withColumn("__pb",
       explode(sequence(bucketOf(col(startCol)), bucketOf(col(endCol)))))
     val pb = points.withColumn("__pb", bucketOf(col(pCol)))
@@ -322,16 +313,15 @@ object NonEquiJoins {
     * [[lessThanStats]]; a 100 TB deployment substitutes TABLESAMPLE or
     * column statistics). */
   def medianIntervalWidth(
-      intervals: DataFrame, startCol: String, endCol: String,
-      sampleSize: Int = 2048): Long = {
+      intervals: DataFrame, startCol: String, endCol: String): Long = {
     val lens = intervals
       .select((col(endCol).cast(LongType) - col(startCol).cast(LongType)).as("len"))
       .filter(col("len") > 0)
     val n = lens.count()
     if (n == 0) return 1L
-    val frac = if (n <= sampleSize) 1.0 else math.min(1.0, sampleSize * 4.0 / n)
+    val frac = if (n <= SampleSize) 1.0 else math.min(1.0, SampleSize * 4.0 / n)
     val sample = lens.sample(withReplacement = false, frac, 42L)
-      .limit(sampleSize).collect().map(_.getLong(0)).sorted
+      .limit(SampleSize).collect().map(_.getLong(0)).sorted
     if (sample.isEmpty) 1L else math.max(1L, sample(sample.length / 2))
   }
 
@@ -343,10 +333,9 @@ object NonEquiJoins {
   def pointInIntervalJoinAuto(
       points: DataFrame, intervals: DataFrame,
       pCol: String, startCol: String, endCol: String,
-      extraKeys: Seq[(String, String)] = Nil,
-      sampleSize: Int = 2048): DataFrame =
+      extraKeys: Seq[(String, String)] = Nil): DataFrame =
     pointInIntervalJoin(points, intervals, pCol, startCol, endCol,
-      medianIntervalWidth(intervals, startCol, endCol, sampleSize), extraKeys)
+      medianIntervalWidth(intervals, startCol, endCol), extraKeys)
 
   /** Interval-interval overlap join with VARIABLE lengths on BOTH sides:
     * pairs whose half-open windows [lStart, lEnd) and [rStart, rEnd)
@@ -354,9 +343,11 @@ object NonEquiJoins {
     * family (fixed-length overlap reduces to a band; point-in-interval is
     * the one-sided case).
     *
-    * Rewrite: BOTH sides are replicated across every fixed-width bucket
-    * their interval spans; equi join on (bucket, keys); exact overlap
-    * predicate re-applied.  Exactly-once emission without a distinct: a
+    * Rewrite ([[Bucketing.overlap]], the same one
+    * [[graft.plans.IntervalOverlapAutoRewrite]] applies to a naive join):
+    * BOTH sides are replicated across every fixed-width bucket their
+    * interval spans; equi join on (bucket, keys); exact overlap predicate
+    * re-applied.  Exactly-once emission without a distinct: a
     * qualifying pair is kept only in the bucket containing the overlap
     * start `greatest(lStart, rStart)` — a point both intervals span, so
     * both replicas exist there and nowhere else is the pair accepted.
@@ -369,18 +360,14 @@ object NonEquiJoins {
       bucketWidth: Long,
       extraKeys: Seq[(String, String)] = Nil): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be > 0, got $bucketWidth")
-    def bucketOf(c: Column): Column = floorDivLong(c, bucketWidth)
-    // end is exclusive: an interval ending exactly on a bucket boundary
-    // does not occupy the next bucket
-    val lb = left.withColumn("__vb",
-      explode(sequence(bucketOf(col(lStart)), bucketOf(col(lEnd) - 1))))
-    val rb = right.withColumn("__vb", explode(
-      sequence(bucketOf(col(rStart)), bucketOf(col(rEnd) - 1))))
-    val keyCond = extraKeys.map { case (a, b) => lb(a) === rb(b) }
-      .foldLeft(lb("__vb") === rb("__vb"))(_ && _)
     val overlap = col(lStart) < col(rEnd) && col(rStart) < col(lEnd)
-    val once = lb("__vb") === bucketOf(greatest(col(lStart), col(rStart)))
-    lb.join(rb, keyCond).filter(overlap && once).drop("__vb")
+    val cond = extraKeys.map { case (a, b) => col(a) === col(b) }.foldLeft(overlap)(_ && _)
+    rewriteJoin(left, right, cond) { (j, l, r) =>
+      // end is exclusive: an interval ending exactly on a bucket boundary
+      // does not occupy the next bucket
+      def last(e: Expression) = Subtract(Cast(e, LongType), Literal(1L))
+      Bucketing.overlap(j, l(lStart), last(l(lEnd)), r(rStart), last(r(rEnd)), bucketWidth)
+    }
   }
 
   /** As-of join: for each left row, the single latest right row with
@@ -398,27 +385,9 @@ object NonEquiJoins {
     */
   def asofJoin(
       probe: DataFrame, quote: DataFrame,
-      key: String, ts: String, probeId: String, quoteId: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val p = probe.select(col(key).as("__k"), col(ts).as("__t"),
-      col(probeId).as("__pid"), lit(true).as("__isProbe"))
-    val q = quote.select(col(key).as("__k"), col(ts).as("__t"),
-      col(quoteId).as("__qid"))
-      .withColumn("__pid", lit(null).cast(p.schema("__pid").dataType))
-      .withColumn("__isProbe", lit(false))
-      .select("__k", "__t", "__pid", "__isProbe", "__qid")
-    val u = p.withColumn("__qid", lit(null).cast(q.schema("__qid").dataType))
-      .select("__k", "__t", "__pid", "__isProbe", "__qid")
-      .unionByName(q)
-    val w = Window.partitionBy(col("__k")).orderBy(col("__t"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    u.withColumn("__match",
-        max(when(!col("__isProbe"), struct(col("__t").as("t"), col("__qid").as("id")))).over(w))
-      .filter(col("__isProbe"))
-      .select(
-        col("__k").as(key), col("__pid").as(probeId), col("__t").as(ts),
-        col("__match.id").as(quoteId), col("__match.t").as(s"${quoteId}_ts"))
-  }
+      key: String, ts: String, probeId: String, quoteId: String): DataFrame =
+    asofPick(asofUnion(probe, quote, key, ts, probeId, quoteId),
+      quoteMatch(backward = true), key, ts, probeId, quoteId)
 
   /** Forward as-of join: the single EARLIEST right row with right(ts)
     * strictly after left(ts), per key — the "next event" resolution
@@ -428,27 +397,9 @@ object NonEquiJoins {
     * AND UNBOUNDED FOLLOWING)`); ties on ts break to the smallest id. */
   def asofJoinFwd(
       probe: DataFrame, quote: DataFrame,
-      key: String, ts: String, probeId: String, quoteId: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val p = probe.select(col(key).as("__k"), col(ts).as("__t"),
-      col(probeId).as("__pid"), lit(true).as("__isProbe"))
-    val q = quote.select(col(key).as("__k"), col(ts).as("__t"),
-      col(quoteId).as("__qid"))
-      .withColumn("__pid", lit(null).cast(p.schema("__pid").dataType))
-      .withColumn("__isProbe", lit(false))
-      .select("__k", "__t", "__pid", "__isProbe", "__qid")
-    val u = p.withColumn("__qid", lit(null).cast(q.schema("__qid").dataType))
-      .select("__k", "__t", "__pid", "__isProbe", "__qid")
-      .unionByName(q)
-    val w = Window.partitionBy(col("__k")).orderBy(col("__t"))
-      .rangeBetween(1, Window.unboundedFollowing)
-    u.withColumn("__match",
-        min(when(!col("__isProbe"), struct(col("__t").as("t"), col("__qid").as("id")))).over(w))
-      .filter(col("__isProbe"))
-      .select(
-        col("__k").as(key), col("__pid").as(probeId), col("__t").as(ts),
-        col("__match.id").as(quoteId), col("__match.t").as(s"${quoteId}_ts"))
-  }
+      key: String, ts: String, probeId: String, quoteId: String): DataFrame =
+    asofPick(asofUnion(probe, quote, key, ts, probeId, quoteId),
+      quoteMatch(backward = false), key, ts, probeId, quoteId)
 
   /** Nearest as-of join: the single right row CLOSEST in time to each
     * probe row, in EITHER direction (strictly earlier or strictly later —
@@ -464,34 +415,46 @@ object NonEquiJoins {
   def asofJoinNearest(
       probe: DataFrame, quote: DataFrame,
       key: String, ts: String, probeId: String, quoteId: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val p = probe.select(col(key).as("__k"), col(ts).as("__t"),
-      col(probeId).as("__pid"), lit(true).as("__isProbe"))
-    val q = quote.select(col(key).as("__k"), col(ts).as("__t"),
-      col(quoteId).as("__qid"))
-      .withColumn("__pid", lit(null).cast(p.schema("__pid").dataType))
-      .withColumn("__isProbe", lit(false))
-      .select("__k", "__t", "__pid", "__isProbe", "__qid")
-    val u = p.withColumn("__qid", lit(null).cast(q.schema("__qid").dataType))
-      .select("__k", "__t", "__pid", "__isProbe", "__qid")
-      .unionByName(q)
-    val base = Window.partitionBy(col("__k")).orderBy(col("__t"))
-    val wb = base.rangeBetween(Window.unboundedPreceding, -1)
-    val wf = base.rangeBetween(1, Window.unboundedFollowing)
-    val qStruct = when(!col("__isProbe"), struct(col("__t").as("t"), col("__qid").as("id")))
-    val withBoth = u
-      .withColumn("__bwd", max(qStruct).over(wb))
-      .withColumn("__fwd", min(qStruct).over(wf))
-      .filter(col("__isProbe"))
+    val withBoth = asofUnion(probe, quote, key, ts, probeId, quoteId)
+      .withColumn("__bwd", quoteMatch(backward = true))
+      .withColumn("__fwd", quoteMatch(backward = false))
     val pickBwd = col("__fwd").isNull || (col("__bwd").isNotNull &&
       (col("__t") - col("__bwd.t")) <= (col("__fwd.t") - col("__t")))
-    val chosen = when(pickBwd, col("__bwd")).otherwise(col("__fwd"))
-    withBoth.select(
-      col("__k").as(key), col("__pid").as(probeId), col("__t").as(ts),
-      chosen.getField("id").as(quoteId),
-      chosen.getField("t").as(s"${quoteId}_ts"),
-      abs(chosen.getField("t") - col("__t")).as("gap"))
+    asofPick(withBoth, when(pickBwd, col("__bwd")).otherwise(col("__fwd")),
+      key, ts, probeId, quoteId, abs(col("__match.t") - col("__t")).as("gap"))
   }
+
+  /** Probe and quote rows as one tagged union (__k, __t, __pid, __isProbe,
+    * __qid): probe rows carry a null __qid, quote rows a null __pid. */
+  private def asofUnion(probe: DataFrame, quote: DataFrame,
+      key: String, ts: String, probeId: String, quoteId: String): DataFrame =
+    probe.select(col(key).as("__k"), col(ts).as("__t"),
+        col(probeId).as("__pid"), lit(true).as("__isProbe"))
+      .unionByName(quote.select(col(key).as("__k"), col(ts).as("__t"),
+        col(quoteId).as("__qid"), lit(false).as("__isProbe")), allowMissingColumns = true)
+
+  /** Over the tagged union, per key in time order: the (t, id) of the
+    * latest quote strictly before each row (`backward`), or of the
+    * earliest quote strictly after it; ties on t keep the largest
+    * (backward) or smallest (forward) id. */
+  private def quoteMatch(backward: Boolean): Column = {
+    val q = when(!col("__isProbe"), struct(col("__t").as("t"), col("__qid").as("id")))
+    val w = Window.partitionBy(col("__k")).orderBy(col("__t"))
+    if (backward) max(q).over(w.rangeBetween(Window.unboundedPreceding, -1))
+    else min(q).over(w.rangeBetween(1, Window.unboundedFollowing))
+  }
+
+  /** The probe rows with their chosen (t, id) `__match`: (key, probeId,
+    * ts, quoteId, quoteId_ts, extra...), quote columns null when nothing
+    * matched. */
+  private def asofPick(union: DataFrame, chosen: Column,
+      key: String, ts: String, probeId: String, quoteId: String,
+      extra: Column*): DataFrame =
+    union.withColumn("__match", chosen)
+      .filter(col("__isProbe"))
+      .select(Seq(
+        col("__k").as(key), col("__pid").as(probeId), col("__t").as(ts),
+        col("__match.id").as(quoteId), col("__match.t").as(s"${quoteId}_ts")) ++ extra: _*)
 
   /** Guarded cross join (the degenerate all-pairs theta join). Broadcast the
     * smaller side explicitly so the plan is BroadcastNestedLoopJoin, not a
@@ -517,15 +480,6 @@ object NonEquiJoins {
       .drop("__salt")
   }
 
-  /** Reference-shape fallback: 1-Bucket-Theta for an *arbitrary* theta
-    * predicate with no exploitable structure.  Partitions the |S|×|T| join
-    * matrix into an rS×rT grid: S rows are assigned a deterministic matrix
-    * row (hash, not random — results must be reproducible) and replicated
-    * across the rT grid columns; T rows symmetrically.  Every pair meets in
-    * exactly one grid cell; cells are hash-partitioned across the cluster.
-    * Cost is |S|·rT + |T|·rS replicated rows — use only when no bucketed
-    * rewrite applies.
-    */
   /** Edit-distance ≤ 2 self-join via the position-keyed FastSS 2-deletion
     * index: rows (ka, kb, d) with ka < kb and d = levenshtein ≤ 2.  One
     * map-only index build ([[graft.fns.TextKernels.deletionVariantPos2]]),
@@ -560,9 +514,19 @@ object NonEquiJoins {
       .distinct() // one row per true pair (d is determined by the pair)
   }
 
+  /** Reference-shape fallback: 1-Bucket-Theta for an *arbitrary* theta
+    * predicate with no exploitable structure.  Partitions the |S|×|T| join
+    * matrix into an rS×rT grid: S rows are assigned a deterministic matrix
+    * row (hash, not random — results must be reproducible) and replicated
+    * across the rT grid columns; T rows symmetrically.  Every pair meets in
+    * exactly one grid cell; cells are hash-partitioned across the cluster.
+    * Cost is |S|·rT + |T|·rS replicated rows — use only when no bucketed
+    * rewrite applies.  Requires rS, rT >= 1.
+    */
   def oneBucketThetaJoin(
       s: DataFrame, t: DataFrame, sKey: String, tKey: String,
       rS: Int, rT: Int, theta: Column): DataFrame = {
+    require(rS >= 1 && rT >= 1, s"grid must be at least 1x1, got rS=$rS rT=$rT")
     val sRep = s
       .withColumn("__row", pmod(xxhash64(col(sKey)), lit(rS.toLong)))
       .withColumn("__col", explode(array((0 until rT).map(lit(_)): _*)))

@@ -71,10 +71,10 @@ object DedupIncr {
     val sh = cappedShingles(spark, sfDir)
     val mins = sh.groupBy("doc_id").agg(min(col("s")).as("mk"), count(lit(1)).as("n"))
     val ranked = graft.fns.TotalOrder.globalRank(mins, graft.fns.TotalOrder.defaultParts(spark), col("mk"), col("doc_id"))
-    val cand = graft.joins.NonEquiJoins.bandJoinLong(
+    val cand = graft.joins.NonEquiJoins.bandJoin(
       ranked.select(col("doc_id").as("ia"), col("n").as("na"), col("rn").as("rna")),
       ranked.select(col("doc_id").as("ib"), col("n").as("nb"), col("rn").as("rnb")),
-      "rna", "rnb", WINDOW.toLong)
+      "rna", "rnb", WINDOW.toDouble)
       .filter(col("rnb") > col("rna"))
       .select("ia", "ib", "na", "nb")
     // verify join keys on (doc, shingle) BOTH sides — keying on ib alone
@@ -130,10 +130,10 @@ object DedupIncr {
     (0 until seeds).map { i =>
       val ranked = graft.fns.TotalOrder.globalRank(
         mins, graft.fns.TotalOrder.defaultParts(spark), col(s"mk$i"), col("doc_id"))
-      graft.joins.NonEquiJoins.bandJoinLong(
+      graft.joins.NonEquiJoins.bandJoin(
         ranked.select(col("doc_id").as("ia"), col("n").as("na"), col("rn").as("rna")),
         ranked.select(col("doc_id").as("ib"), col("n").as("nb"), col("rn").as("rnb")),
-        "rna", "rnb", window)
+        "rna", "rnb", window.toDouble)
         .filter(col("rnb") > col("rna"))
         .select("ia", "ib", "na", "nb")
     }.reduce(_ unionByName _).distinct()

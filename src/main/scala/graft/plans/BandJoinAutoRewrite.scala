@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Optimizer rule: turn a naive band theta-join into the bucketed equi join.
   *
@@ -18,31 +18,15 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * predicate.  Result sets are identical: every qualifying pair meets in
   * exactly the right row's bucket, and the exact predicate is re-checked.
   *
-  * This is the planner-integrated version of
+  * The rewrite itself is [[Bucketing.band]], shared with
   * [[graft.joins.NonEquiJoins.bandJoin]]: with the rule installed, a user
   * writing the naive `a.join(b, abs(a("v") - b("v")) <= 0.5)` gets the
   * scalable plan with no API change.  Install per session via
-  * `spark.experimental.extraOptimizations :+= BandJoinAutoRewrite`, or for
+  * `GraftExtensions.addRule(spark, BandJoinAutoRewrite)`, or for
   * every session with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object BandJoinAutoRewrite extends Rule[LogicalPlan] with PredicateHelper {
-
-  /** Bucket id for a DOUBLE band value: floor(v / eps) (LongType out). */
-  private def doubleBucket(eps: Double)(v: Expression): Expression =
-    Floor(Divide(v, Literal(eps)))
-
-  /** Bucket id for an INTEGRAL band value: exact `Math.floorDiv(v, eps)` as
-    * expressions — truncating `div` corrected by 1 when the remainder is
-    * negative.  Overflow-free over the whole long range, where a double
-    * quotient would mis-bucket values above 2^53 (epoch-micros timestamps
-    * are already past 2^50). */
-  private def integralBucket(eps: Long)(v: Expression): Expression = {
-    val l = Cast(v, LongType)
-    Subtract(
-      IntegralDivide(l, Literal(eps)),
-      If(LessThan(Remainder(l, Literal(eps)), Literal(0L)), Literal(1L), Literal(0L)))
-  }
 
   /** (leftValue, rightValue, bucketizer) for the first rewritable band
     * conjunct: `abs(l - r) <= eps` (or `<`, or flipped `>=`) with both
@@ -51,67 +35,28 @@ object BandJoinAutoRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * common integral type and int literals against long values are already
     * long — matching the coerced literal type is the general case. */
   private def findBand(cond: Expression, left: LogicalPlan, right: LogicalPlan)
-      : Option[(Expression, Expression, Expression => Expression)] = {
-    def sideOf(e: Expression): Option[Boolean] = {
-      val refs = e.references
-      if (refs.isEmpty) None
-      else if (refs.subsetOf(left.outputSet)) Some(true)
-      else if (refs.subsetOf(right.outputSet)) Some(false)
-      else None
-    }
-    def bucketizer(valType: org.apache.spark.sql.types.DataType, eps: Literal)
-        : Option[Expression => Expression] = (valType, eps) match {
-      case (DoubleType, Literal(e: Double, DoubleType)) if e > 0 => Some(doubleBucket(e))
-      case (LongType | IntegerType, Literal(e: Long, LongType)) if e > 0 => Some(integralBucket(e))
-      case (LongType | IntegerType, Literal(e: Int, IntegerType)) if e > 0 => Some(integralBucket(e.toLong))
-      case _ => None
-    }
-    splitConjunctivePredicates(cond).iterator.map {
+      : Option[(Expression, Expression, Expression => Expression)] =
+    splitConjunctivePredicates(cond).iterator.collect {
       case LessThanOrEqual(Abs(Subtract(x, y, _), _), l: Literal) => (x, y, l)
       case LessThan(Abs(Subtract(x, y, _), _), l: Literal) => (x, y, l)
       case GreaterThanOrEqual(l: Literal, Abs(Subtract(x, y, _), _)) => (x, y, l)
-      case _ => null
-    }.collect {
-      case (x, y, epsLit) if x != null && x.dataType == y.dataType =>
-        bucketizer(x.dataType, epsLit).flatMap { mk =>
-          (sideOf(x), sideOf(y)) match {
-            case (Some(true), Some(false)) => Some((x, y, mk))
-            case (Some(false), Some(true)) => Some((y, x, mk))
-            case _ => None
-          }
+    }.flatMap { case (x, y, eps) =>
+      if (x.dataType != y.dataType) None
+      else Bucketing.bandBucket(x.dataType, eps.value).flatMap { mk =>
+        (Bucketing.sideOf(x, left, right), Bucketing.sideOf(y, left, right)) match {
+          case (Some(true), Some(false)) => Some((x, y, mk))
+          case (Some(false), Some(true)) => Some((y, x, mk))
+          case _ => None
         }
-    }.flatten.nextOption()
-  }
-
-  /** True if the join already has a usable equi conjunct (Catalyst will pick
-    * a hash/sort-merge join by itself — no rewrite needed). */
-  private def hasEquiKey(cond: Expression, left: LogicalPlan, right: LogicalPlan): Boolean =
-    splitConjunctivePredicates(cond).exists {
-      case EqualTo(a, b) =>
-        (a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) ||
-          (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
-      case _ => false
-    }
+      }
+    }.nextOption()
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case j @ Join(left, right, Inner, Some(cond), hint)
-        if !hasEquiKey(cond, left, right) =>
-      findBand(cond, left, right) match {
-        case Some((lVal, rVal, mkBucket)) =>
-          val bL = mkBucket(lVal)
-          val gb = AttributeReference("__graft_gb", LongType)()
-          val buckets = CreateArray(Seq(
-            Subtract(bL, Literal(1L)), bL, Add(bL, Literal(1L))))
-          val leftGen = Generate(Explode(buckets),
-            unrequiredChildIndex = Nil, outer = false, qualifier = None,
-            generatorOutput = Seq(gb), child = left)
-          val gbr = Alias(mkBucket(rVal), "__graft_gbr")()
-          val rightProj = Project(right.output :+ gbr, right)
-          val newJoin = Join(leftGen, rightProj, Inner,
-            Some(And(EqualTo(gb, gbr.toAttribute), cond)), hint)
-          Project(j.output, newJoin)
-        case None => j
-      }
+    case j @ Join(left, right, Inner, Some(cond), _)
+        if !Bucketing.hasEquiKey(cond, left, right) =>
+      findBand(cond, left, right)
+        .map { case (lVal, rVal, mk) => Bucketing.band(j, lVal, rVal, mk) }
+        .getOrElse(j)
   }
 }
 
@@ -124,4 +69,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => TopKStrategy)
     e.injectPlannerStrategy(_ => IEJoinStrategy)
   }
+}
+
+/** The same pieces installed into one running session, each at most once.
+  * `spark.experimental` is session-global mutable state, so the
+  * check-then-append is synchronized: concurrent callers cannot drop each
+  * other's entry. */
+object GraftExtensions {
+  def addRule(spark: SparkSession, rule: Rule[LogicalPlan]): Unit =
+    spark.experimental.synchronized {
+      if (!spark.experimental.extraOptimizations.contains(rule))
+        spark.experimental.extraOptimizations :+= rule
+    }
+
+  def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit =
+    spark.experimental.synchronized {
+      if (!spark.experimental.extraStrategies.contains(strategy))
+        spark.experimental.extraStrategies :+= strategy
+    }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType}
 
 /** Sort-based inequality join (IEJoin-family, after Khayyat et al.,
   * "Lightning Fast and Space Efficient Inequality Joins", VLDB 2015) —
@@ -188,35 +188,29 @@ case class LessThanJoinExec(
 }
 
 object IEJoin {
+  /** Key types the operator merges on.  Comparisons run in the NATIVE key
+    * type (exact past 2^53 for longs); only cell routing uses a double
+    * view.  Both sides must agree on the type — mixed-type joins should
+    * cast explicitly first. */
+  val KeyTypes: Seq[DataType] = Seq(LongType, IntegerType, ShortType, ByteType, DoubleType, FloatType)
+
   /** Inequality join left(lVal) < right(rVal) through the sort-merge
-    * operator.  Boundary selection (approxQuantile over both inputs) and
-    * the join itself mirror
-    * [[graft.joins.NonEquiJoins.lessThanJoinQuantile]]; only the physical
-    * execution differs.  Sides must share no column names (callers
-    * pre-rename, like every NonEquiJoins operator). */
+    * operator.  Boundary selection ([[Bucketing.quantileBounds]]) is the
+    * one [[graft.joins.NonEquiJoins.lessThanJoinQuantile]] uses; only the
+    * physical execution differs.  Sides must share no column names
+    * (callers pre-rename, like every NonEquiJoins operator). */
   def apply(left: DataFrame, right: DataFrame,
       lVal: String, rVal: String, buckets: Int = 32): DataFrame = {
     val spark = left.sparkSession.asInstanceOf[SparkSession]
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(IEJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ IEJoinStrategy
-    }
-    val vals = left.select(org.apache.spark.sql.functions.col(lVal).cast("double").as("v"))
-      .unionByName(right.select(org.apache.spark.sql.functions.col(rVal).cast("double").as("v")))
-    val probes = (1 until buckets).map(_.toDouble / buckets).toArray
-    val bounds = vals.stat.approxQuantile("v", probes, 0.001).distinct.sorted.toSeq
+    GraftExtensions.addStrategy(spark, IEJoinStrategy)
+    val bounds = Bucketing.quantileBounds(left, right, lVal, rVal, buckets).toSeq
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(plan: LogicalPlan, n: String): Attribute = plan.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(
         s"column '$n' not in ${plan.output.map(_.name).mkString(", ")}"))
     val (la, ra) = (attr(lPlan, lVal), attr(rPlan, rVal))
-    // merge comparisons run in the NATIVE key type (exact past 2^53 for
-    // longs); only cell routing uses a double view.  Both sides must agree
-    // on that type — mixed-type joins should cast explicitly first.
-    val supported = Seq(LongType, IntegerType, ShortType, ByteType, DoubleType, FloatType)
-    require(la.dataType == ra.dataType && supported.contains(la.dataType),
+    require(la.dataType == ra.dataType && KeyTypes.contains(la.dataType),
       s"IEJoin requires matching numeric key types, got ${la.dataType.sql} vs ${ra.dataType.sql}")
     GraftSqlBridge.ofRows(spark,
       LessThanJoinNode(lPlan, rPlan, la, ra, bounds))

@@ -16,16 +16,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * (`Generate(Explode(Sequence(...)))`), joins on bucket equality, and
   * keeps a pair only in its OVERLAP-START bucket
   * (`bucket == floor(max(aStart, bStart) / w)`) — exactly-once without a
-  * distinct, the planner-integrated version of
+  * distinct.  The rewrite itself is [[Bucketing.overlap]], shared with
   * [[graft.joins.NonEquiJoins.intervalOverlapJoinVar]].
   *
   * Correctness does not depend on which crossing inequality pair is
-  * matched: for ANY expressions with `x1 <= y2` and `x2 <= y1` (x from one
-  * side, y from the other), `m = max(x1, x2)` is either an endpoint of, or
-  * bounded inside, each side's value range, so `floor(m/w)` lies in both
-  * generated bucket sets (the two-argument Sequence yields the same bucket
-  * SET for descending "intervals").  Matching a different conjunct pair
-  * can only change replication cost, never results.
+  * matched (see [[Bucketing.overlap]]): matching a different conjunct
+  * pair can only change replication cost, never results.
   *
   * The bucket width is data-dependent (an interval spans len/w + 1
   * buckets), so the rule only fires when the session sets
@@ -38,25 +34,11 @@ object IntervalOverlapAutoRewrite extends Rule[LogicalPlan] with PredicateHelper
 
   val WidthConf = "graft.interval.rewrite.bucketWidth"
 
-  private def fd(e: Expression, w: Long): Expression = {
-    val l = Cast(e, LongType)
-    Subtract(
-      IntegralDivide(l, Literal(w)),
-      If(LessThan(Remainder(l, Literal(w)), Literal(0L)), Literal(1L), Literal(0L)))
-  }
-
-  private case class Overlap(aStart: Expression, aEnd: Expression,
-      bStart: Expression, bEnd: Expression)
-
+  /** (aStart, aEnd, bStart, bEnd) from two crossing integral inequalities
+    * `aStart <= bEnd` and `bStart <= aEnd` (strict or flipped forms too),
+    * a* reading only the left side and b* only the right. */
   private def findOverlap(cond: Expression, left: LogicalPlan, right: LogicalPlan)
-      : Option[Overlap] = {
-    def sideOf(e: Expression): Option[Boolean] = {
-      val refs = e.references
-      if (refs.isEmpty) None
-      else if (refs.subsetOf(left.outputSet)) Some(true)
-      else if (refs.subsetOf(right.outputSet)) Some(false)
-      else None
-    }
+      : Option[(Expression, Expression, Expression, Expression)] = {
     def integral(e: Expression): Boolean = e.dataType match {
       case LongType | IntegerType => true
       case _ => false
@@ -67,54 +49,24 @@ object IntervalOverlapAutoRewrite extends Rule[LogicalPlan] with PredicateHelper
       case GreaterThanOrEqual(a, b) => (b, a)
       case GreaterThan(a, b) => (b, a)
     }.filter { case (lo, hi) => integral(lo) && integral(hi) }
-    val lr = ineqs.find { case (lo, hi) =>
-      sideOf(lo).contains(true) && sideOf(hi).contains(false)
+    def crossing(loLeft: Boolean) = ineqs.find { case (lo, hi) =>
+      Bucketing.sideOf(lo, left, right).contains(loLeft) &&
+        Bucketing.sideOf(hi, left, right).contains(!loLeft)
     }
-    val rl = ineqs.find { case (lo, hi) =>
-      sideOf(lo).contains(false) && sideOf(hi).contains(true)
-    }
-    (lr, rl) match {
-      case (Some((aStart, bEnd)), Some((bStart, aEnd))) =>
-        Some(Overlap(aStart, aEnd, bStart, bEnd))
-      case _ => None
-    }
+    for ((aStart, bEnd) <- crossing(true); (bStart, aEnd) <- crossing(false))
+      yield (aStart, aEnd, bStart, bEnd)
   }
-
-  private def hasEquiKey(cond: Expression, left: LogicalPlan, right: LogicalPlan): Boolean =
-    splitConjunctivePredicates(cond).exists {
-      case EqualTo(a, b) =>
-        (a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) ||
-          (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet))
-      case _ => false
-    }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val w = SQLConf.get.getConfString(WidthConf, "0").toLong
     if (w <= 0) plan
     else plan.transform {
-      case j @ Join(left, right, Inner, Some(cond), hint)
-          if !hasEquiKey(cond, left, right) =>
-        findOverlap(cond, left, right) match {
-          case Some(o) =>
-            val gbL = AttributeReference("__graft_ivl", LongType)()
-            val gbR = AttributeReference("__graft_ivr", LongType)()
-            // Sequence is TimeZoneAwareExpression — an unset zone leaves the
-            // rewritten plan unresolved even for integral bounds
-            val tz = Some(SQLConf.get.sessionLocalTimeZone)
-            val leftGen = Generate(
-              Explode(Sequence(fd(o.aStart, w), fd(o.aEnd, w), None, tz)),
-              unrequiredChildIndex = Nil, outer = false, qualifier = None,
-              generatorOutput = Seq(gbL), child = left)
-            val rightGen = Generate(
-              Explode(Sequence(fd(o.bStart, w), fd(o.bEnd, w), None, tz)),
-              unrequiredChildIndex = Nil, outer = false, qualifier = None,
-              generatorOutput = Seq(gbR), child = right)
-            val startBucket = fd(Greatest(Seq(o.aStart, o.bStart)), w)
-            val newJoin = Join(leftGen, rightGen, Inner,
-              Some(And(And(EqualTo(gbL, gbR), EqualTo(gbL, startBucket)), cond)), hint)
-            Project(j.output, newJoin)
-          case None => j
-        }
+      case j @ Join(left, right, Inner, Some(cond), _)
+          if !Bucketing.hasEquiKey(cond, left, right) =>
+        findOverlap(cond, left, right)
+          .map { case (aStart, aEnd, bStart, bEnd) =>
+            Bucketing.overlap(j, aStart, aEnd, bStart, bEnd, w) }
+          .getOrElse(j)
     }
   }
 }

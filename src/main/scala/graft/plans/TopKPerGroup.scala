@@ -29,7 +29,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * aggregate whose hot-key state can grow).
   *
   * Pieces: logical node + planner Strategy (injected via GraftExtensions or
-  * `spark.experimental.extraStrategies`) + physical exec with a codegen'd
+  * `GraftExtensions.addStrategy`) + physical exec with a codegen'd
   * row ordering.  `TopKPerGroup.apply` is the user-facing API.
   */
 case class TopKPerGroupNode(
@@ -111,13 +111,7 @@ object TopKPerGroup {
       order: Seq[(String, Boolean)], k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession.asInstanceOf[SparkSession]
-    // extraStrategies is session-global mutable state; synchronize the
-    // check-then-append so concurrent callers can't drop each other's entry.
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ TopKStrategy
-    }
+    GraftExtensions.addStrategy(spark, TopKStrategy)
     val plan = df.queryExecution.analyzed
     def attr(n: String): Attribute = plan.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(

@@ -67,11 +67,7 @@ object Relational5 {
   val joinBandRule: GraftQuery = GraftQuery("q_join_band_rule",
     """SELECT s_suppkey, c_custkey, s_acctbal, c_acctbal
       |FROM supplier JOIN customer ON abs(s_acctbal - c_acctbal) <= 50.0""".stripMargin) { (spark, sfDir) =>
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.BandJoinAutoRewrite))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.BandJoinAutoRewrite
-    }
+    graft.plans.GraftExtensions.addRule(spark, graft.plans.BandJoinAutoRewrite)
     supplier(spark, sfDir).select("s_suppkey", "s_acctbal")
       .join(customer(spark, sfDir).select("c_custkey", "c_acctbal"),
         abs(col("s_acctbal") - col("c_acctbal")) <= 50.0)

@@ -11,11 +11,7 @@ import org.apache.spark.sql.functions._
 object Relational6 {
 
   private def installBandRule(spark: SparkSession): Unit =
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.BandJoinAutoRewrite))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.BandJoinAutoRewrite
-    }
+    graft.plans.GraftExtensions.addRule(spark, graft.plans.BandJoinAutoRewrite)
 
   /** The statistics-driven inequality join (M-Bucket-I analog) as a judged
     * query: bucket boundaries come from `approxQuantile` over both inputs,

@@ -290,12 +290,7 @@ object Relational7 {
   }
 
   private def installIntervalRule(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.IntervalOverlapAutoRewrite))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.IntervalOverlapAutoRewrite
-    }
+    graft.plans.GraftExtensions.addRule(spark, graft.plans.IntervalOverlapAutoRewrite)
 
   /** Planner-integrated interval-overlap rewrite, judged end to end: the
     * query writes the NAIVE overlap join (`sa <= eb AND sb <= ea`, no equi

@@ -96,7 +96,8 @@ class NonEquiJoinsSpec extends AnyFunSuite {
     assertSameRows(fast, naive)
   }
 
-  test("bandJoinLong exact buckets above 2^53 (double quotient would mis-bucket)") {
+  test("bandJoin on longs: exact buckets above 2^53") {
+    // a double quotient would mis-bucket here
     // offsets near 2^62: double arithmetic has 512-ulp granularity here, so
     // a cast-to-double bucket would shift by more than the ±1 replication
     val base = 1L << 62
@@ -104,21 +105,29 @@ class NonEquiJoinsSpec extends AnyFunSuite {
       .zipWithIndex.map { case (d, i) => (i.toLong, base + d) }
     val a = vals.toDF("ida", "va")
     val b = vals.toDF("idb", "vb")
-    val fast = bandJoinLong(a, b, "va", "vb", 1000L)
+    val fast = bandJoin(a, b, "va", "vb", 1000.0)
     val naive = a.crossJoin(b).filter(abs($"va" - $"vb") <= 1000L)
     assertSameRows(fast, naive)
   }
 
-  test("bandJoinLong at the Long.MinValue edge (pmod-subtraction would wrap)") {
+  test("bandJoin on longs at the Long.MinValue edge") {
+    // a pmod-subtraction bucket would wrap here
     // all values clustered near MinValue so the naive |va-vb| never overflows
     val vals = Seq(Long.MinValue + 800, Long.MinValue + 900, Long.MinValue + 2000,
       Long.MinValue, Long.MinValue + 999, Long.MinValue + 1000)
       .zipWithIndex.map { case (v, i) => (i.toLong, v) }
     val a = vals.toDF("ida", "va")
     val b = vals.toDF("idb", "vb")
-    val fast = bandJoinLong(a, b, "va", "vb", 1000L)
+    val fast = bandJoin(a, b, "va", "vb", 1000.0)
     val naive = a.crossJoin(b).filter(abs($"va" - $"vb") <= 1000L)
     assertSameRows(fast, naive)
+  }
+
+  test("bandJoin rejects a non-positive eps when called") {
+    val a = rnd.select($"id".as("ida"), $"v".as("va"))
+    val b = rnd.select($"id".as("idb"), $"v".as("vb"))
+    intercept[IllegalArgumentException](bandJoin(a, b, "va", "vb", 0.0))
+    intercept[IllegalArgumentException](bandJoin(a, b, "va", "vb", -1.0))
   }
 
   test("intervalOverlapJoin == naive overlap predicate") {
@@ -231,6 +240,15 @@ class NonEquiJoinsSpec extends AnyFunSuite {
       .select("ida", "idb", "va", "vb")
     val naive = a.crossJoin(b).filter(theta).select("ida", "idb", "va", "vb")
     assertSameRows(fast, naive)
+  }
+
+  test("oneBucketThetaJoin rejects an empty grid dimension when called") {
+    val a = rnd.select($"id".as("ida"), $"v".as("va"))
+    val b = rnd.select($"id".as("idb"), $"v".as("vb"))
+    val theta = $"va" < $"vb"
+    intercept[IllegalArgumentException](oneBucketThetaJoin(a, b, "ida", "idb", rS = 0, rT = 4, theta))
+    intercept[IllegalArgumentException](oneBucketThetaJoin(a, b, "ida", "idb", rS = 4, rT = 0, theta))
+    intercept[IllegalArgumentException](oneBucketThetaJoin(a, b, "ida", "idb", rS = -1, rT = 4, theta))
   }
 
   test("fuzzySelfJoin2 == naive levenshtein ≤ 2 (varied lengths, runs, indels)") {
@@ -346,11 +364,11 @@ class NonEquiJoinsSpec extends AnyFunSuite {
     val a = (1 to 300).map(i => (i.toLong, r.nextDouble() * 100)).toDF("ida", "va")
     val b = (1 to 300).map(i => (i.toLong, r.nextDouble() * 100)).toDF("idb", "vb")
     val naive = a.crossJoin(b).filter($"va" < $"vb")
-    // three parameterizations forcing each route on the same input
+    val st = lessThanStats(a, b, "va", "vb")
+    assert(lessThanStrategy(st) == "iejoin", st.toString)
     assertSameRows(lessThanJoinAuto(a, b, "va", "vb"), naive) // iejoin
-    assertSameRows(
-      lessThanJoinAuto(a, b, "va", "vb", densePairBar = 1L), naive) // static
-    assertSameRows(
-      lessThanJoinAuto(a, b, "va", "vb", cellRowBudget = 1L), naive) // quantile
+    // the same input forced through each of the other two routes
+    assertSameRows(lessThanJoinRouted("static", st, a, b, "va", "vb"), naive)
+    assertSameRows(lessThanJoinRouted("quantile", st, a, b, "va", "vb"), naive)
   }
 }

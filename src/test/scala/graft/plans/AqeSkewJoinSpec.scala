@@ -103,7 +103,7 @@ class AqeSkewJoinSpec extends AnyFunSuite {
       // one right row per bucket, mid-bucket
       val right = spark.range(0, 997).select((col("id") * 100 + 50).as("rv"),
         col("id").cast("string").as("dim"))
-      val joined = graft.joins.NonEquiJoins.bandJoinLong(left, right, "lv", "rv", eps)
+      val joined = graft.joins.NonEquiJoins.bandJoin(left, right, "lv", "rv", eps.toDouble)
       val n = joined.collect().length
       // closed form: hot rows (1800 per v in 0..99) match the bucket-0 row
       // always and the bucket-1 row iff v >= 50: 180000 + 50*1800 = 270000;

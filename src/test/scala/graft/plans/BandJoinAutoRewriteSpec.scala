@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The auto-rewrite must (a) remove the nested-loop/cartesian plan for a
-  * naive band join, and (b) preserve results exactly. */
+  * naive band join, and (b) preserve results exactly.  The public
+  * `bandJoin` shares the rewrite, so on the same inputs it must return the
+  * same rows through the same plan shape. */
 class BandJoinAutoRewriteSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -16,6 +18,20 @@ class BandJoinAutoRewriteSpec extends AnyFunSuite {
     try f
     finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ == BandJoinAutoRewrite)
+  }
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** The naive join under the rule and the API operator agree on rows and
+    * on plan shape, and neither plans a nested loop. */
+  private def assertApiParity(naive: => org.apache.spark.sql.DataFrame,
+      api: org.apache.spark.sql.DataFrame): Unit = {
+    val (ruleRows, ruleShape) = withRule { val df = naive; (pairs(df), PlanShape(df)) }
+    val apiShape = PlanShape(api)
+    assert(pairs(api) == ruleRows)
+    assert(apiShape == ruleShape, s"api $apiShape vs rule $ruleShape")
+    assert(apiShape.nestedLoops == 0 && apiShape.generates == 1, apiShape.toString)
   }
 
   private lazy val a = {
@@ -48,6 +64,8 @@ class BandJoinAutoRewriteSpec extends AnyFunSuite {
     }
     assert(got == expected)
     assert(got.nonEmpty)
+    assertApiParity(a.join(b, abs($"va" - $"vb") <= 10.0),
+      graft.joins.NonEquiJoins.bandJoin(a, b, "va", "vb", 10.0))
   }
 
   test("joins with an existing equi key are left alone") {
@@ -89,6 +107,8 @@ class BandJoinAutoRewriteSpec extends AnyFunSuite {
         .map(row => (row.getLong(0), row.getLong(1))).toSet
       assert(got == Set((1L, 10L), (2L, 10L)), s"got $got")
     }
+    assertApiParity(xs.join(ys, abs($"ta" - $"tb") <= 5L),
+      graft.joins.NonEquiJoins.bandJoin(xs, ys, "ta", "tb", 5.0))
   }
 
   test("int-typed band values with an int literal are rewritten") {

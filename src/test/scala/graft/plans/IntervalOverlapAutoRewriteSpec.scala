@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The interval-overlap auto-rewrite must remove the nested-loop plan for
   * a naive `sa <= eb AND sb <= ea` join and preserve results exactly —
   * including degenerate (end < start) intervals, negatives, and NULL
-  * bounds. */
+  * bounds.  The public `intervalOverlapJoinVar` shares the rewrite, so on
+  * the same inputs it must return the same rows through the same plan
+  * shape. */
 class IntervalOverlapAutoRewriteSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -68,9 +70,19 @@ class IntervalOverlapAutoRewriteSpec extends AnyFunSuite {
     val cond = $"sa" <= $"eb" && $"sb" <= $"ea"
     val expected = bare { pairs(a.join(b, cond)) }
     assert(expected.nonEmpty)
+    // the API takes half-open [s, e): e + 1 closes the same intervals
+    val ah = a.select($"ia", $"sa", ($"ea" + 1).as("ea1"))
+    val bh = b.select($"ib", $"sb", ($"eb" + 1).as("eb1"))
     for (w <- Seq(64L, 1024L, 1000000L)) {
-      val got = withRule(w) { pairs(a.join(b, cond)) }
+      val (got, ruleShape) = withRule(w) { val df = a.join(b, cond); (pairs(df), PlanShape(df)) }
       assert(got == expected, s"width=$w: missing=${expected.diff(got).take(3)}")
+      val api = bare {
+        graft.joins.NonEquiJoins.intervalOverlapJoinVar(ah, bh, "sa", "ea1", "sb", "eb1", w)
+      }
+      val apiShape = PlanShape(api)
+      assert(pairs(api) == expected, s"width=$w: api rows differ")
+      assert(apiShape == ruleShape, s"width=$w: api $apiShape vs rule $ruleShape")
+      assert(apiShape.nestedLoops == 0 && apiShape.generates == 2, apiShape.toString)
     }
   }
 
