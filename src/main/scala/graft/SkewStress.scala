@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Dev-only skew stress for the inequality-join bucketing strategies.
   * Zipfian values (u^8: ~80% of rows in the lowest ~6% of the value
   * range) drive an `a < b` join through (a) static uniform [lo, hi]
-  * buckets (lessThanJoin) and (b) approxQuantile data-driven buckets
+  * buckets (lessThanJoin) and (b) sampled equi-depth data-driven buckets
   * (lessThanJoinQuantile).  An inequality join's output is inherently
   * pair-sized, so the comparison is about BALANCE: with uniform cells
   * nearly all value mass (both sides) lands in one bucket and one task

@@ -28,8 +28,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   */
 object NonEquiJoins {
 
-  /** Rows each driver-side statistics pass samples per side. */
-  private val SampleSize = 2048
+  /** Cells of the sampled hot-cell histogram and of the quantile
+    * boundaries [[lessThanStats]] derives. */
+  private val Cells = 32
 
   /** [[Bucketing.floorDiv]] over a DataFrame column. */
   private def floorDiv(c: Column, d: Long): Column =
@@ -42,11 +43,8 @@ object NonEquiJoins {
   private def rewriteJoin(left: DataFrame, right: DataFrame, cond: Column)(
       rewrite: (Join, String => Attribute, String => Attribute) => LogicalPlan): DataFrame = {
     val j = left.join(right, cond).queryExecution.analyzed.asInstanceOf[Join]
-    def attr(plan: LogicalPlan)(n: String): Attribute = plan.output.find(_.name == n)
-      .getOrElse(throw new IllegalArgumentException(
-        s"column '$n' not in ${plan.output.map(_.name).mkString(", ")}"))
     GraftSqlBridge.ofRows(left.sparkSession.asInstanceOf[SparkSession],
-      rewrite(j, attr(j.left), attr(j.right)))
+      rewrite(j, Bucketing.attr(j.left), Bucketing.attr(j.right)))
   }
 
   /** Band join: pairs with |left(lVal) − right(rVal)| ≤ eps (< eps if
@@ -100,9 +98,9 @@ object NonEquiJoins {
     * only tune bucket balance — rows outside are clamped and still join
     * correctly because the exact predicate is re-applied.
     *
-    * At 100 TB, replace the static [lo,hi] with `approxQuantile` boundaries
-    * per relation (same plan shape, skew-proof); AQE then splits any hot
-    * bucket.
+    * [[lessThanJoinQuantile]] replaces the static [lo,hi] with sampled
+    * equi-depth boundaries (same plan shape, skew-proof); AQE then splits
+    * any hot bucket.
     */
   def lessThanJoin(
       left: DataFrame, right: DataFrame,
@@ -139,86 +137,67 @@ object NonEquiJoins {
 
   /** Inequality join with DATA-DRIVEN bucket boundaries — the skew-proof
     * form of [[lessThanJoin]] and the full Spark analog of M-Bucket-I's
-    * statistics-driven candidate cells [OR11 §5]: boundaries come from
-    * `approxQuantile` over the union of both value distributions, so every
+    * statistics-driven candidate cells [OR11 §5]: boundaries are the
+    * equi-depth quantiles of one bounded sample of both sides
+    * ([[Bucketing.sample]], each side weighted by its row count), so every
     * bucket holds ~|data|/buckets rows no matter how skewed the values
     * (uniform [lo,hi] cells degrade to one hot bucket on zipfian data).
     * Same join shape after planning: left replicated to its suffix of
     * buckets, equi join on bucket id, exact predicate re-applied.
-    * The quantile scan is one extra pass (at 100 TB: run it on a sample or
-    * reuse table statistics); the join itself is unchanged.
+    * The statistics job is one extra pass; the join itself is unchanged.
     */
   def lessThanJoinQuantile(
       left: DataFrame, right: DataFrame,
-      lVal: String, rVal: String, buckets: Int = 32): DataFrame = {
-    val bounds = Bucketing.quantileBounds(left, right, lVal, rVal, buckets)
+      lVal: String, rVal: String, buckets: Int = 32): DataFrame =
+    quantileJoin(left, right, lVal, rVal, Bucketing.quantileBounds(
+      Bucketing.sample(Seq(left -> col(lVal), right -> col(rVal))), buckets))
+
+  /** [[lessThanJoinQuantile]] over given cell boundaries. */
+  private def quantileJoin(left: DataFrame, right: DataFrame,
+      lVal: String, rVal: String, bounds: Seq[Double]): DataFrame =
     suffixJoin(left, right, lVal, rVal, bounds.length.toLong, c =>
       bounds.zipWithIndex.foldLeft(lit(0L)) { case (acc, (b, i)) =>
         when(c > b, lit(i.toLong + 1)).otherwise(acc)
       })
-  }
 
   /** Driver-side sampled statistics feeding [[lessThanStrategy]]: input
-    * cardinalities, the mass fraction of the hottest uniform value cell
-    * (the skew signal), the estimated output pair count (sample-estimated
-    * P(a < b) × nL × nR — the density signal), the sampled value range
-    * (reused as static bucket bounds), and whether the key types admit the
-    * sort-merge operator. */
+    * cardinalities (rows with a non-null value), the mass fraction of the
+    * hottest uniform value cell (the skew signal), the estimated output
+    * pair count (sample-estimated P(a < b) × nL × nR — the density
+    * signal), the sampled value range (reused as static bucket bounds),
+    * whether the key types admit the sort-merge operator, and the
+    * equi-depth cell boundaries of the quantile and IEJoin routes. */
   final case class LessThanStats(
       nLeft: Long, nRight: Long, hotCellFrac: Double, estPairs: Double,
-      typesOk: Boolean, lo: Double, hi: Double)
+      typesOk: Boolean, lo: Double, hi: Double, bounds: Seq[Double])
 
-  /** One deterministic sample pass per side (seeded, bounded driver
-    * footprint).  Cardinalities come from `count()` here — one scan each;
-    * a 100 TB deployment substitutes catalog statistics for the counts and
-    * a TABLESAMPLE for the value sample, leaving the routing logic
-    * unchanged. */
+  /** One statistics job over both sides ([[Bucketing.sample]]: counts and
+    * a deterministic bounded sample per side); every statistic, the
+    * quantile boundaries included, is derived from it on the driver.  A
+    * 100 TB deployment could substitute catalog statistics for the counts,
+    * leaving the routing logic unchanged.  Missing columns fail before the
+    * job. */
   def lessThanStats(
       left: DataFrame, right: DataFrame,
-      lVal: String, rVal: String,
-      buckets: Int = 32): LessThanStats = {
-    val nL = left.count()
-    val nR = right.count()
-    def sampleVals(df: DataFrame, c: String, n: Long): Array[Double] = {
-      val frac =
-        if (n <= SampleSize) 1.0
-        else math.min(1.0, SampleSize * 4.0 / n)
-      df.select(col(c).cast("double").as("v")).filter(col("v").isNotNull)
-        .sample(withReplacement = false, frac, 42L)
-        .limit(SampleSize).collect().map(_.getDouble(0))
-    }
-    val sl = sampleVals(left, lVal, nL)
-    val sr = sampleVals(right, rVal, nR)
+      lVal: String, rVal: String): LessThanStats = {
+    val (lType, rType) = (left.schema(lVal).dataType, right.schema(rVal).dataType)
+    val sides = Bucketing.sample(Seq(left -> col(lVal), right -> col(rVal)))
+    val Seq(Bucketing.SideSample(nL, sl), Bucketing.SideSample(nR, sr)) = sides
     val all = sl ++ sr
-    val (lo, hi) =
-      if (all.isEmpty) (0.0, 0.0) else (all.min, all.max)
+    val (lo, hi) = if (all.isEmpty) (0.0, 0.0) else (all.min, all.max)
+    val cellOf = (v: Double) => math.min(Cells - 1, ((v - lo) / (hi - lo) * Cells).toInt)
     val hotFrac =
       if (all.isEmpty) 0.0
       else if (lo == hi) 1.0
-      else {
-        val counts = new Array[Long](buckets)
-        all.foreach { v =>
-          val i = math.min(buckets - 1, ((v - lo) / (hi - lo) * buckets).toInt)
-          counts(i) += 1
-        }
-        counts.max.toDouble / all.length
-      }
-    val srSorted = sr.sorted
-    val p =
-      if (sl.isEmpty || sr.isEmpty) 0.0
-      else {
-        var hits = 0L
-        sl.foreach { a =>
-          var i = java.util.Arrays.binarySearch(srSorted, a)
-          if (i < 0) i = -i - 1
-          else { while (i < srSorted.length && srSorted(i) == a) i += 1 }
-          hits += (srSorted.length - i)
-        }
-        hits.toDouble / (sl.length.toDouble * srSorted.length)
-      }
-    val typesOk = left.schema(lVal).dataType == right.schema(rVal).dataType &&
-      graft.plans.IEJoin.KeyTypes.contains(left.schema(lVal).dataType)
-    LessThanStats(nL, nR, hotFrac, p * nL * nR, typesOk, lo, hi)
+      else all.groupBy(cellOf).values.map(_.length).max.toDouble / all.length
+    // sampled P(a < b): merge the sorted samples, counting the a below each b
+    val ls = sl.sorted
+    var i = 0
+    val hits = sr.sorted.map { b => while (i < ls.length && ls(i) < b) i += 1; i.toLong }.sum
+    val p = if (ls.isEmpty || sr.isEmpty) 0.0 else hits.toDouble / (ls.length.toDouble * sr.length)
+    val typesOk = lType == rType && graft.plans.IEJoin.KeyTypes.contains(lType)
+    LessThanStats(nL, nR, hotFrac, p * nL * nR, typesOk, lo, hi,
+      Bucketing.quantileBounds(sides, Cells))
   }
 
   /** Route an inequality join to its measured-best physical shape
@@ -228,8 +207,8 @@ object NonEquiJoins {
     *    value cell would hold more build rows than `cellRowBudget` —
     *    planned balance is a MEMORY guarantee at the 100 TB margin (a hot
     *    cell whose hash/sort buffer exceeds executor memory spills or
-    *    OOMs), which the measurements show is the only regime where the
-    *    quantile pass earns its extra scan;
+    *    OOMs), which the measurements show is the only regime where
+    *    quantile cells pay for themselves;
     *  - "iejoin" ([[graft.plans.IEJoin]]) otherwise while the estimated
     *    output stays under `densePairBar` — the regime where the
     *    sort-merge sweep's zero per-pair predicate work measured 25-30%
@@ -249,11 +228,13 @@ object NonEquiJoins {
     else "static"
   }
 
-  /** Stats-driven inequality join `left(lVal) < right(rVal)`: samples both
-    * sides, routes via [[lessThanStrategy]], and dispatches to the chosen
-    * shape.  All three shapes are exact (the predicate is re-applied or
-    * natively merged), so routing affects only performance — the chooser
-    * spec asserts both the routing and result equality across shapes. */
+  /** Stats-driven inequality join `left(lVal) < right(rVal)`: one
+    * statistics job ([[lessThanStats]]) routes via [[lessThanStrategy]]
+    * and hands its sampled boundaries to the chosen shape, which scans
+    * nothing more before the join.  All three shapes are exact (the
+    * predicate is re-applied or natively merged), so routing affects only
+    * performance — the chooser spec asserts both the routing and result
+    * equality across shapes. */
   def lessThanJoinAuto(
       left: DataFrame, right: DataFrame,
       lVal: String, rVal: String): DataFrame = {
@@ -265,8 +246,8 @@ object NonEquiJoins {
   private[joins] def lessThanJoinRouted(route: String, st: LessThanStats,
       left: DataFrame, right: DataFrame, lVal: String, rVal: String): DataFrame =
     route match {
-      case "quantile" => lessThanJoinQuantile(left, right, lVal, rVal)
-      case "iejoin" => graft.plans.IEJoin(left, right, lVal, rVal)
+      case "quantile" => quantileJoin(left, right, lVal, rVal, st.bounds)
+      case "iejoin" => graft.plans.IEJoin.onBounds(left, right, lVal, rVal)(st.bounds)
       case _ =>
         val (lo, hi) =
           if (st.lo < st.hi) (st.lo, st.hi) else (st.lo - 1.0, st.hi + 1.0)
@@ -309,20 +290,14 @@ object NonEquiJoins {
     * typical row while each point still probes exactly one bucket; a
     * caller-guessed width that is 100× too small replicates every interval
     * 100×, and 100× too large degrades bucketing to an all-in-one-cell
-    * join.  One deterministic bounded sample (same posture as
-    * [[lessThanStats]]; a 100 TB deployment substitutes TABLESAMPLE or
-    * column statistics). */
+    * join.  One statistics job ([[Bucketing.sample]], as in
+    * [[lessThanStats]]): the median of a deterministic bounded sample of
+    * the positive lengths. */
   def medianIntervalWidth(
       intervals: DataFrame, startCol: String, endCol: String): Long = {
-    val lens = intervals
-      .select((col(endCol).cast(LongType) - col(startCol).cast(LongType)).as("len"))
-      .filter(col("len") > 0)
-    val n = lens.count()
-    if (n == 0) return 1L
-    val frac = if (n <= SampleSize) 1.0 else math.min(1.0, SampleSize * 4.0 / n)
-    val sample = lens.sample(withReplacement = false, frac, 42L)
-      .limit(SampleSize).collect().map(_.getLong(0)).sorted
-    if (sample.isEmpty) 1L else math.max(1L, sample(sample.length / 2))
+    val len = col(endCol).cast(LongType) - col(startCol).cast(LongType)
+    val lens = Bucketing.sample(Seq(intervals -> when(len > 0, len))).head.values.sorted
+    if (lens.isEmpty) 1L else math.max(1L, lens(lens.length / 2).toLong)
   }
 
   /** [[pointInIntervalJoin]] with a STATS-DRIVEN bucket width (the sampled

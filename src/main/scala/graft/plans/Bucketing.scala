@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -48,6 +48,11 @@ object Bucketing extends PredicateHelper {
     else if (refs.subsetOf(right.outputSet)) Some(false)
     else None
   }
+
+  /** The output attribute of `plan` named `n`. */
+  def attr(plan: LogicalPlan)(n: String): Attribute = plan.output.find(_.name == n)
+    .getOrElse(throw new IllegalArgumentException(
+      s"column '$n' not in ${plan.output.map(_.name).mkString(", ")}"))
 
   /** True if the condition already has an equi conjunct across the sides
     * (Catalyst picks a hash/sort-merge join by itself). */
@@ -106,14 +111,59 @@ object Bucketing extends PredicateHelper {
       Some(And(And(EqualTo(gbL, gbR), EqualTo(gbL, startBucket)), j.condition.get)), j.hint))
   }
 
-  /** Up to `buckets - 1` cell boundaries from `approxQuantile` over the
-    * union of both value columns, distinct and sorted (duplicate quantiles
-    * on heavy hitters would create zero-width cells). */
-  def quantileBounds(left: DataFrame, right: DataFrame,
-      lVal: String, rVal: String, buckets: Int): Array[Double] = {
-    val vals = left.select(F.col(lVal).cast("double").as("v"))
-      .unionByName(right.select(F.col(rVal).cast("double").as("v")))
-    val probes = (1 until buckets).map(_.toDouble / buckets).toArray
-    vals.stat.approxQuantile("v", probes, 0.001).distinct.sorted
+  /** Values the statistics job samples per side. */
+  val SampleSize = 2048
+
+  /** One side's statistics: the number of rows whose value is non-null,
+    * and a uniform sample of at most [[SampleSize]] of those values. */
+  final case class SideSample(rows: Long, values: Array[Double])
+
+  /** The one driver-side statistics job of the theta family: a single
+    * pass over the tagged value columns of all `sides` returning, per
+    * side, its non-null row count and a bounded uniform sample of its
+    * values (as doubles: a routing-only view, since the exact predicate is
+    * always re-applied).  The sample is bottom-k by a seeded hash of
+    * (partition, row position), so it is deterministic for a given input
+    * and partitioning, and bounded on every executor and on the driver —
+    * M-Bucket-I's sampling pre-job (OR11 §5). */
+  def sample(sides: Seq[(DataFrame, Column)]): Seq[SideSample] = {
+    val tagged = sides.zipWithIndex
+      .map { case ((df, v), i) => df.select(F.lit(i).as("s"), v.cast(DoubleType).as("v")) }
+      .reduce(_ union _)
+    val (n, k) = (sides.length, SampleSize)
+    val parts = tagged.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      // SplitMix64 from a per-partition seed: the i-th draw hashes (pid, i)
+      val hash = new java.util.SplittableRandom(0x5eed1e55L + pid)
+      val counts = new Array[Long](n)
+      // max-heaps on the hash: the root is the first value to evict
+      val heaps = Array.fill(n)(new java.util.PriorityQueue[(Long, Double)](k + 1,
+        Ordering.by[(Long, Double), Long](_._1).reverse))
+      rows.foreach { row =>
+        val h = hash.nextLong()
+        if (!row.isNullAt(1)) {
+          val s = row.getInt(0)
+          counts(s) += 1
+          heaps(s).add((h, row.getDouble(1)))
+          if (heaps(s).size > k) heaps(s).poll()
+        }
+      }
+      Iterator.single((counts, heaps.map(_.toArray(Array.empty[(Long, Double)]))))
+    }.collect()
+    (0 until n).map { s =>
+      SideSample(parts.map(_._1(s)).sum, parts.flatMap(_._2(s)).sortBy(_._1).take(k).map(_._2))
+    }
+  }
+
+  /** Up to `buckets - 1` equi-depth cell boundaries over the union of the
+    * sides, each sampled value weighted by its side's rows per sample
+    * value; distinct and sorted (duplicate quantiles on heavy hitters
+    * would create zero-width cells). */
+  def quantileBounds(sides: Seq[SideSample], buckets: Int): Seq[Double] = {
+    val weighted = sides.flatMap(s => s.values.map(v => (v, s.rows.toDouble / s.values.length)))
+      .sortBy(_._1)
+    val cum = weighted.scanLeft(0.0)(_ + _._2).tail
+    val total = cum.lastOption.getOrElse(0.0)
+    (1 until buckets).flatMap(j => weighted.lift(cum.indexWhere(_ >= total * j / buckets)))
+      .map(_._1).distinct
   }
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Attribute, BindReferences, Expression, JoinedRow, UnsafeProjection, UnsafeRow}
@@ -195,24 +195,29 @@ object IEJoin {
   val KeyTypes: Seq[DataType] = Seq(LongType, IntegerType, ShortType, ByteType, DoubleType, FloatType)
 
   /** Inequality join left(lVal) < right(rVal) through the sort-merge
-    * operator.  Boundary selection ([[Bucketing.quantileBounds]]) is the
-    * one [[graft.joins.NonEquiJoins.lessThanJoinQuantile]] uses; only the
-    * physical execution differs.  Sides must share no column names
-    * (callers pre-rename, like every NonEquiJoins operator). */
+    * operator.  The cell boundaries come from one statistics job
+    * ([[Bucketing.sample]] + [[Bucketing.quantileBounds]]), the same ones
+    * [[graft.joins.NonEquiJoins.lessThanJoinQuantile]] uses; only the
+    * physical execution differs.  Missing columns and mismatched key types
+    * fail before that job.  Sides must share no column names (callers
+    * pre-rename, like every NonEquiJoins operator). */
   def apply(left: DataFrame, right: DataFrame,
       lVal: String, rVal: String, buckets: Int = 32): DataFrame = {
+    val join = onBounds(left, right, lVal, rVal)
+    join(Bucketing.quantileBounds(
+      Bucketing.sample(Seq(left -> F.col(lVal), right -> F.col(rVal))), buckets))
+  }
+
+  /** Checks the key columns now (no job) and returns the join over given
+    * cell boundaries. */
+  private[graft] def onBounds(left: DataFrame, right: DataFrame,
+      lVal: String, rVal: String): Seq[Double] => DataFrame = {
     val spark = left.sparkSession.asInstanceOf[SparkSession]
-    GraftExtensions.addStrategy(spark, IEJoinStrategy)
-    val bounds = Bucketing.quantileBounds(left, right, lVal, rVal, buckets).toSeq
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
-    def attr(plan: LogicalPlan, n: String): Attribute = plan.output.find(_.name == n)
-      .getOrElse(throw new IllegalArgumentException(
-        s"column '$n' not in ${plan.output.map(_.name).mkString(", ")}"))
-    val (la, ra) = (attr(lPlan, lVal), attr(rPlan, rVal))
+    val (lPlan, rPlan) = (left.queryExecution.analyzed, right.queryExecution.analyzed)
+    val (la, ra) = (Bucketing.attr(lPlan)(lVal), Bucketing.attr(rPlan)(rVal))
     require(la.dataType == ra.dataType && KeyTypes.contains(la.dataType),
       s"IEJoin requires matching numeric key types, got ${la.dataType.sql} vs ${ra.dataType.sql}")
-    GraftSqlBridge.ofRows(spark,
-      LessThanJoinNode(lPlan, rPlan, la, ra, bounds))
+    GraftExtensions.addStrategy(spark, IEJoinStrategy)
+    bounds => GraftSqlBridge.ofRows(spark, LessThanJoinNode(lPlan, rPlan, la, ra, bounds))
   }
 }

@@ -14,10 +14,11 @@ object Relational6 {
     graft.plans.GraftExtensions.addRule(spark, graft.plans.BandJoinAutoRewrite)
 
   /** The statistics-driven inequality join (M-Bucket-I analog) as a judged
-    * query: bucket boundaries come from `approxQuantile` over both inputs,
-    * so the plan stays balanced no matter how skewed the value
-    * distributions — the static-bounds variant (q_join_theta_ineq) would
-    * degrade to one hot bucket on zipfian data.  Same results, same oracle
+    * query: bucket boundaries are the equi-depth quantiles of one bounded
+    * sample of both inputs (one statistics job), so the plan stays
+    * balanced no matter how skewed the value distributions — the
+    * static-bounds variant (q_join_theta_ineq) would degrade to one hot
+    * bucket on zipfian data.  Same results, same oracle
     * shape; only the physical bucketing differs. */
   val joinThetaIneqQuantile: GraftQuery = GraftQuery("q_join_theta_ineq_quantile",
     """SELECT s_suppkey, count(*) AS n_richer, max(c_acctbal) AS max_cbal

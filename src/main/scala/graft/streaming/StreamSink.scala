@@ -76,6 +76,12 @@ object StreamSink {
     d
   }
 
+  /** The GRAFT_STREAM_SHUFFLE_PARTITIONS override: a positive count, or
+    * an error naming the variable and the value. */
+  private[graft] def shufflePartitionsOverride(value: String): Int =
+    value.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"GRAFT_STREAM_SHUFFLE_PARTITIONS must be a positive integer, got '$value'"))
+
   /** SCALE-ADAPTIVE state/shuffle partitioning for the streaming runs.
     * A Structured Streaming query pins its STATEFUL-operator partition
     * count to `spark.sql.shuffle.partitions` at first start, and every
@@ -100,7 +106,7 @@ object StreamSink {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val prevN = try prev.toInt catch { case _: NumberFormatException => -1 }
     if (prevN <= 0) return body // non-numeric session setting: leave it be
-    val n = sys.env.get("GRAFT_STREAM_SHUFFLE_PARTITIONS").map(_.toInt)
+    val n = sys.env.get("GRAFT_STREAM_SHUFFLE_PARTITIONS").map(shufflePartitionsOverride)
       .getOrElse {
         val p = new org.apache.hadoop.fs.Path(eventsPath)
         val bytes =

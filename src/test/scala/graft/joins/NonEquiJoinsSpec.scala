@@ -1,6 +1,6 @@
 package graft.joins
 
-import graft.TestSpark
+import graft.{JobCount, TestSpark}
 import graft.joins.NonEquiJoins._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -370,5 +370,77 @@ class NonEquiJoinsSpec extends AnyFunSuite {
     // the same input forced through each of the other two routes
     assertSameRows(lessThanJoinRouted("static", st, a, b, "va", "vb"), naive)
     assertSameRows(lessThanJoinRouted("quantile", st, a, b, "va", "vb"), naive)
+  }
+
+  // ---- the one statistics job (Bucketing.sample): its cost, its bounds
+  // and its determinism
+
+  /** 3000 uniform rows per side over several partitions, no exchange. */
+  private def uniformSides = {
+    val v = (col("id") * 7919 % 100003).cast("double") / 100.0
+    (spark.range(0, 3000, 1, 3).select(col("id").as("ida"), v.as("va")),
+      spark.range(5000, 8000, 1, 4).select(col("id").as("idb"), v.as("vb")))
+  }
+
+  private def intervals(n: Int) = spark.range(0, n, 1, 3).select(col("id").as("iid"),
+    (col("id") * 37).as("s"), (col("id") * 37 + col("id") % 500 + 10).as("e"))
+
+  test("each statistics call and each stats-driven construction runs one Spark job") {
+    val (a, b) = uniformSides
+    val iv = intervals(2000)
+    val pts = spark.range(0, 500, 1, 2).select(col("id").as("pid"), (col("id") * 101).as("p"))
+    assert(JobCount(spark)(lessThanStats(a, b, "va", "vb")) == 1)
+    assert(JobCount(spark)(lessThanJoinAuto(a, b, "va", "vb")) == 1)
+    assert(JobCount(spark)(lessThanJoinQuantile(a, b, "va", "vb")) == 1)
+    assert(JobCount(spark)(graft.plans.IEJoin(a, b, "va", "vb")) == 1)
+    assert(JobCount(spark)(medianIntervalWidth(iv, "s", "e")) == 1)
+    assert(JobCount(spark)(pointInIntervalJoinAuto(pts, iv, "p", "s", "e")) == 1)
+    // every route takes its boundaries from the stats: no further scan
+    val st = lessThanStats(a, b, "va", "vb")
+    for (route <- Seq("static", "quantile", "iejoin"))
+      assert(JobCount(spark)(lessThanJoinRouted(route, st, a, b, "va", "vb")) == 0, route)
+  }
+
+  test("lessThanJoinAuto rejects a missing column before any job") {
+    val (a, b) = uniformSides
+    assert(JobCount(spark)(
+      intercept[IllegalArgumentException](lessThanJoinAuto(a, b, "va", "nope"))) == 0)
+    assert(JobCount(spark)(
+      intercept[IllegalArgumentException](lessThanJoinAuto(a, b, "nope", "vb"))) == 0)
+  }
+
+  test("the statistics are deterministic: equal on equal input") {
+    val (a, b) = uniformSides
+    val st = lessThanStats(a, b, "va", "vb")
+    assert(st.bounds.nonEmpty, st.toString)
+    assert(lessThanStats(a, b, "va", "vb") == st)
+    val iv = intervals(20000)
+    assert(medianIntervalWidth(iv, "s", "e") == medianIntervalWidth(iv, "s", "e"))
+  }
+
+  test("the sample holds at most 2048 non-null values per side, drawn uniformly") {
+    val big = spark.range(0, 20000, 1, 6)
+      .select(when(col("id") % 10 =!= 0, col("id")).as("v"))
+    val small = spark.range(0, 500, 1, 2).select(col("id").as("w"))
+    val Seq(bs, ss) = graft.plans.Bucketing.sample(Seq(big -> col("v"), small -> col("w")))
+    assert(bs.rows == 18000 && bs.values.length == 2048, (bs.rows, bs.values.length))
+    assert(bs.values.forall(v => v >= 0 && v < 20000 && v % 10 != 0))
+    assert(bs.values.distinct.length == 2048) // without replacement
+    val mean = bs.values.sum / bs.values.length
+    assert(math.abs(mean - 10000) < 600, s"sample mean $mean far from 10000")
+    assert(ss.rows == 500 && ss.values.sorted.toSeq == (0 until 500).map(_.toDouble))
+  }
+
+  test("quantile boundaries weight each side by its row count") {
+    // 10k rows on [0, 1000) against 200 on [5000, 6000): equal sample
+    // weights would put the top boundaries in the small side's range
+    val big = spark.range(0, 10000, 1, 4).select(col("id").as("ida"),
+      (col("id") / 10.0).as("va"))
+    val small = spark.range(0, 200, 1, 2).select(col("id").as("idb"),
+      (col("id") * 5.0 + 5000).as("vb"))
+    val st = lessThanStats(big, small, "va", "vb")
+    assert(st.nLeft == 10000 && st.nRight == 200, st.toString)
+    assert(st.bounds.length >= 24 && st.bounds.forall(_ < 1000), st.toString)
+    assert(st.bounds == st.bounds.sorted.distinct, st.toString)
   }
 }

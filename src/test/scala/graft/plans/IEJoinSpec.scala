@@ -85,8 +85,12 @@ class IEJoinSpec extends AnyFunSuite {
     val xs = Seq((1L, base), (2L, base + 1L)).toDF("ida", "va")
     val ys = Seq((10L, base + 1L)).toDF("idb", "vb")
     assert(pairsOf(IEJoin(xs, ys, "va", "vb")) == Set((1L, 10L)))
-    // mixed-type keys are rejected, not silently double-cast
+    // mixed-type keys are rejected, not silently double-cast, and before
+    // any job scans the data; so is a missing column
     val ints = Seq((20L, 5)).toDF("idb", "vb")
-    intercept[IllegalArgumentException](IEJoin(xs, ints, "va", "vb"))
+    assert(graft.JobCount(spark)(
+      intercept[IllegalArgumentException](IEJoin(xs, ints, "va", "vb"))) == 0)
+    assert(graft.JobCount(spark)(
+      intercept[IllegalArgumentException](IEJoin(xs, ys, "va", "nope"))) == 0)
   }
 }

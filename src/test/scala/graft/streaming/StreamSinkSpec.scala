@@ -66,4 +66,14 @@ class StreamSinkSpec extends AnyFunSuite {
       maxFilesPerTrigger = Some(1)))
     assert(day3 == batchAll)
   }
+
+  test("GRAFT_STREAM_SHUFFLE_PARTITIONS accepts a positive count, rejects anything else") {
+    assert(StreamSink.shufflePartitionsOverride("8") == 8)
+    assert(StreamSink.shufflePartitionsOverride(" 12 ") == 12)
+    for (bad <- Seq("0", "-3", "eight", "", "2.5", "99999999999")) {
+      val e = intercept[IllegalArgumentException](StreamSink.shufflePartitionsOverride(bad))
+      assert(e.getMessage.contains("GRAFT_STREAM_SHUFFLE_PARTITIONS") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }
