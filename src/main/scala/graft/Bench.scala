@@ -91,29 +91,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // ts_us derivation (io.Tables.eventsUs) casts NTZ→LTZ and is only a
-      // bit-identity on the underlying micros when the session zone is UTC;
-      // pin it instead of inheriting the host default.
-      .config("spark.sql.session.timeZone", "UTC")
-      // Interleaved passes cycle all ~166 queries through one JVM, which
-      // evicts the default 100-entry generated-class cache between a
-      // query's reps — every rep then re-pays janino compilation (~30-50%
-      // inflation, worst on iterative plans).  A real cluster app doesn't
-      // self-evict like this (one app = few plans), so a large cache is
-      // the faithful steady-state measurement, not a cheat.  Static conf:
-      // must be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      // keep ANN probe-key IN filters pushdown-eligible (see DevSession)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    DevSession.quietHints()
+    val spark = DevSession.local()
     // Warm the session (scheduler, codegen, shuffle machinery) so init cost
     // isn't attributed to whichever query happens to run first.
     try {

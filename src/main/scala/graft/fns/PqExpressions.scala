@@ -256,7 +256,7 @@ object PqExpressions {
 
   /** Registered per (config, codebook tag): the codebook array is captured
     * in the registry closure, so two corpora trained in one session (the
-    * judged sf corpus and a stress corpus, say) never serve each other's
+    * judged sf corpus and a synthetic test corpus, say) never serve each other's
     * centroids. */
   def pqEncode(spark: SparkSession, qv: Column, cents: Array[Double], tag: String,
       m: Int, k: Int, dsub: Int): Column = {

@@ -56,8 +56,9 @@ object Graphs {
     *    HINT first, then shuffle-hash hint, and only falls back to
     *    size-based broadcast when nothing is hinted), so no
     *    BroadcastExchange appears anywhere in the loop at any size
-    *    estimate — asserted by GraphsSpec and exercised at 100M+ edges by
-    *    graft.GraphStress.
+    *    estimate — asserted by GraphsSpec; BASELINE.md ("Broadcast-free
+    *    iterative graph path") records the 100M+ edge runs of the former
+    *    GraphStress driver (see git history).
     *
     * Both paths run identical integer arithmetic and return identical
     * ranks (GraphsSpec proves equality on the judged graph).
@@ -154,8 +155,9 @@ object Graphs {
     *    shuffles on (a, c) into a SHUFFLE_HASH join against the edge set —
     *    still linear in wedges, one partition-local probe per wedge, and
     *    no BroadcastExchange at any size estimate (the hint outranks
-    *    size-based broadcast selection).  Asserted by GraphsSpec and
-    *    exercised at 100M+ edges by graft.GraphStress.
+    *    size-based broadcast selection).  Asserted by GraphsSpec;
+    *    BASELINE.md records the 100M+ edge runs of the former
+    *    GraphStress driver (see git history).
     *
     * `e` must be materialized (checkpointed) by the caller — it is scanned
     * by both wedge sides, the closer, and the size probe.  The probe is a

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   * 10⁶ keys, fpp ≈ 1.4%).  Small filters inline in the record; large
   * ones become `_bloom.bin` sidecars inside the dir with only a marker
   * in the log, so commit records stay O(dirs) at any filter size and a
-  * probe's driver I/O is bounded by dirs × filter bytes (BloomStress
-  * measures the law).  The filter build is one aggregation over the NEW
+  * probe's driver I/O is bounded by dirs × filter bytes (BASELINE.md,
+  * "Round-15: bloom dir-index", measured by the former BloomStress
+  * driver; see git history).  The filter build is one aggregation over the NEW
   * dir only (distinct bit positions, ≤ `bits` longs to the driver),
   * carried verbatim by every later commit exactly like zone-map stats.
   * CoW updates, MERGEs (including the MOR upsert dir), compaction and

@@ -48,9 +48,10 @@ object Tables {
 
   /** events with `ts_us` = epoch micros (BIGINT, exact) — mirrors DuckDB
     * `epoch_us(ts)`, which interprets a naive timestamp as UTC.  Every
-    * session here pins `spark.sql.session.timeZone=UTC` (Verify, Bench,
-    * DevSession, ProfileMain all set it), so the NTZ→LTZ cast below is a
-    * bit-identity on the underlying micros. */
+    * session here pins `spark.sql.session.timeZone=UTC` (DevSession.local,
+    * which Verify and Bench use, and the test and benchmark sessions all
+    * set it), so the NTZ→LTZ cast below is a bit-identity on the
+    * underlying micros. */
   def eventsUs(s: SparkSession, d: String): DataFrame = {
     val df = events(s, d)
     df.withColumn("ts_us", tsUsColFor(df))

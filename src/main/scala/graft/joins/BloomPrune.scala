@@ -75,8 +75,8 @@ object BloomPrune {
   def bloomPrunedSemiJoin(
       large: DataFrame, small: DataFrame,
       largeKey: String, smallKey: String,
-      expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    val bloom = small.stat.bloomFilter(smallKey, expectedItems, fpp)
+      expectedItems: Long): DataFrame = {
+    val bloom = small.stat.bloomFilter(smallKey, expectedItems, 0.01)
     val pruned = large.filter(mightContain(bloom, col(largeKey)))
     pruned.join(small.select(col(smallKey)), col(largeKey) === col(smallKey), "left_semi")
   }

@@ -75,13 +75,14 @@ object AnnAuto {
   }
 
   /** Compute [[AnnStats]] with one count and one deterministic hash-ordered
-    * sample of ≤ `sampleSize` vectors (O(S²·d) driver arithmetic ≈ 17 M
+    * sample of ≤ S = 512 vectors (O(S²·d) driver arithmetic ≈ 17 M
     * multiply-adds at S=512, d=64 — negligible against any corpus this
-    * chooser exists for).  `lazySample` skips the sample (clusteredness
-    * NaN) when the caller already knows the work is sub-crossover — the
-    * judged small-SF query pays only the count. */
-  def annStats(base: DataFrame, nQueries: Long = 10L, sampleSize: Int = 512,
-      withClusteredness: Boolean = true): AnnStats = {
+    * chooser exists for).  `withClusteredness = false` skips the sample
+    * (clusteredness NaN) when the caller already knows the work is
+    * sub-crossover — the judged small-SF query pays only the count. */
+  def annStats(base: DataFrame, withClusteredness: Boolean = true): AnnStats = {
+    val nQueries = 10L // the family's query convention: vec_id < 10
+    val sampleSize = 512
     val n = base.count()
     val rows =
       if (n == 0) Array.empty[org.apache.spark.sql.Row]
@@ -126,28 +127,30 @@ object AnnAuto {
     * provenance of each constant.
     *
     * `walkBar` is the graph route's crossover: the beam walk's measured
-    * per-batch cost (BASELINE.md round-11 GraphAnnStress table: steady
-    * search 4.6–6.0 s FLAT from 20 k to 100 k vectors — hops·beam·degree
+    * per-batch cost (BASELINE.md "Round-11: graph ANN" table, measured by
+    * the former GraphAnnStress driver, see git history: steady search
+    * 4.6–6.0 s FLAT from 20 k to 100 k vectors — hops·beam·degree
     * lookups, corpus-size independent once the graph artifact exists)
     * expressed in the same multiply-add currency as `flopsBar` via the
     * a ≈ 5×10⁻⁹ s/madd constant: ≈ 5.7 s / a ≈ 1.1×10⁹.  On a CLUSTERED
     * corpus above the brute bar, once the IVF probe's scan work
     * Q·N·d·(nprobe/k) exceeds the walk's fixed cost, the bounded-candidate
     * beam walk is the measured-cheaper shape at family-gate recall
-    * (GraphAnnStress rounds=6/beam=24 row: recall 0.800 at 100 k — level
-    * with the IVF property gate) — at Q=10, d=64 the crossover sits at
-    * N ≈ 1.4×10⁷ vectors.  The ISOTROPIC branch keeps sign-LSH — now a
-    * MEASURED exclusion, not an absence of data (GraphAnnStress isotropic
-    * rows, 2026-08-15): at the family-gate walk (rounds=6/beam=24) recall
-    * is 0.420 at 20 k and collapses to 0.100 at 100 k, and a ~2× heavier
-    * walk (rounds=8/beam=48/hops=7) only reaches 0.280 — NN-descent's
-    * neighbors-of-neighbors refinement has no gradient to climb when
-    * true neighbors sit at the isotropic concentration cosine, and the
-    * failure grows with n, the opposite of a curve the chooser could buy
-    * with rounds.  Sign-LSH measures 0.980 on the same geometry
-    * (LshStress).  The memory axis still preempts everything —
-    * the beam walk re-ranks on raw vectors, so a corpus over the byte
-    * budget belongs to the PQ family regardless of walk economics. */
+    * (rounds=6/beam=24 row: recall 0.800 at 100 k — level with the IVF
+    * property gate) — at Q=10, d=64 the crossover sits at N ≈ 1.4×10⁷
+    * vectors.  The ISOTROPIC branch keeps sign-LSH — now a MEASURED
+    * exclusion, not an absence of data (BASELINE.md "Round-14: isotropic
+    * graph-ANN recall", 2026-08-15): at the family-gate walk
+    * (rounds=6/beam=24) recall is 0.420 at 20 k and collapses to 0.100
+    * at 100 k, and a ~2× heavier walk (rounds=8/beam=48/hops=7) only
+    * reaches 0.280 — NN-descent's neighbors-of-neighbors refinement has
+    * no gradient to climb when true neighbors sit at the isotropic
+    * concentration cosine, and the failure grows with n, the opposite of
+    * a curve the chooser could buy with rounds.  Sign-LSH measures 0.980
+    * on the same geometry (BASELINE.md round-10 LSH table).  The memory
+    * axis still preempts everything — the beam walk re-ranks on raw
+    * vectors, so a corpus over the byte budget belongs to the PQ family
+    * regardless of walk economics. */
   def annStrategy(st: AnnStats,
       flopsBar: Double = 7e9,
       scanBytesBudget: Double = Double.MaxValue,
@@ -168,46 +171,41 @@ object AnnAuto {
       base: DataFrame,
       flopsBar: Double = 7e9,
       scanBytesBudget: Double = Double.MaxValue,
-      sampleSize: Int = 512,
-      pqTopR: Int = 64,
-      walkBar: Double = 1.1e9,
-      graphRounds: Int = 6,
-      graphBeam: Int = 24): DataFrame = {
-    val cheap = annStats(base, withClusteredness = false, sampleSize = sampleSize)
+      walkBar: Double = 1.1e9): DataFrame = {
+    val cheap = annStats(base, withClusteredness = false)
     val needGeometry =
       cheap.flops > flopsBar || cheap.rawScanBytes > scanBytesBudget
-    val st = if (needGeometry) annStats(base, sampleSize = sampleSize) else cheap
+    val st = if (needGeometry) annStats(base) else cheap
     val route = annStrategy(st, flopsBar, scanBytesBudget, walkBar)
-    // pqTopR is the PQ family's measured escape knob (BASELINE.md
-    // noise-floor law: on a worst-case corpus recall@5 ≈ topR/occupancy
-    // until topR reaches the cell population, where the exact re-rank
-    // recovers recall 1.0 at cost still below brute) — a deployment sizes
-    // it to its recall target; the default matches the judged queries.
+    // topR = 64 matches the judged PQ queries.  It is the PQ family's
+    // measured escape knob (BASELINE.md noise-floor law: on a worst-case
+    // corpus recall@5 ≈ topR/occupancy until topR reaches the cell
+    // population, where the exact re-rank recovers recall 1.0 at cost
+    // still below brute).
     val out = route match {
       case "brute" => Similarity.bruteTopkOn(spark, base)
       case "ivf" => Similarity.ivfTopkOn(spark, tag, base, nprobe = 2)
       case "lsh" => Similarity.lshTopkOn(spark, tag, base, nprobe = 8, tables = 16)
-      case "pq" => Similarity.pqTopkOn(spark, tag, base, topR = pqTopR)
-      case "ivfpq" => Similarity.ivfPqTopkOn(spark, tag, base, nprobe = 2, topR = pqTopR)
+      case "pq" => Similarity.pqTopkOn(spark, tag, base, topR = 64)
+      case "ivfpq" => Similarity.ivfPqTopkOn(spark, tag, base, nprobe = 2, topR = 64)
       case "graph" =>
-        // Seed-block bits sized for ~100-row expected occupancy —
-        // GraphAnnStress's sizing convention (occupancy ≈ n / 2^bits; its
-        // measured rows use bits=10 at 100 k; recall is insensitive to
-        // one bit either way: 0.640 at bits=11 vs 0.620 at bits=10,
-        // rounds=4), capped so 4 tables of `bits` sign dims fit the
-        // CORPUS dimensionality (st.dim / tables, not a hardcoded 64 —
+        // Seed-block bits sized for ~100-row expected occupancy — the
+        // sizing convention of BASELINE.md's graph ANN rows (occupancy ≈
+        // n / 2^bits; those rows use bits=10 at 100 k; recall is
+        // insensitive to one bit either way: 0.640 at bits=11 vs 0.620 at
+        // bits=10, rounds=4), capped so 4 tables of `bits` sign dims fit
+        // the CORPUS dimensionality (st.dim / tables, not a hardcoded 64 —
         // blockedOfQv's element_at past the vector end yields null →
-        // constant sign bits → collapsed block selectivity).  Defaults
-        // rounds=6 / beam=24 are the measured family-gate row (recall
-        // 0.800 at 100 k, re-measured 2026-08-15); the graph artifact is
-        // staged per tag like every other index this chooser dispatches
-        // to.
+        // constant sign bits → collapsed block selectivity).  rounds=6 /
+        // beam=24 are the measured family-gate row (recall 0.800 at
+        // 100 k, re-measured 2026-08-15); the graph artifact is staged per
+        // tag like every other index this chooser dispatches to.
         val bits = math.min(math.min(14, math.max(1, st.dim / 4)), math.max(4,
           math.ceil(math.log(math.max(2L, st.nCorpus) / 100.0) / math.log(2.0)).toInt))
         val blocked = GraphAnn.blockedOfQv(base, bits, tables = 4)
         val adj = GraphAnn.knnGraphOn(spark, s"auto|$tag|$bits", base, blocked,
-          rounds = graphRounds)
-        GraphAnn.searchGraphOn(spark, base, adj, beam = graphBeam)
+          rounds = 6)
+        GraphAnn.searchGraphOn(spark, base, adj, beam = 24)
     }
     out.withColumn("route", lit(route))
   }

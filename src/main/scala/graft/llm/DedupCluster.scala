@@ -130,7 +130,9 @@ object DedupCluster {
     // a Union whose children share the checkpointed frame's lineage trips
     // Spark's UnionBase.rewriteConstraints on the self-joined aggregate
     // below (key-not-found on a stale exprId once DeduplicateRelations
-    // rewrites one side) — found by CCStress at the 100 M-edge shape.
+    // rewrites one side) — found at the 100 M-edge shape by the former
+    // CCStress driver (BASELINE.md, "Connected components at cluster
+    // shape").
     // explode keeps the round a single linear projection, no Union node.
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(explode(array(

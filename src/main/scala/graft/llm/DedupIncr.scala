@@ -236,9 +236,10 @@ object DedupIncr {
     * postings.  Boilerplate already dropped from the old index stays
     * dropped (its df only grew), and a near-cap shingle pushed over the
     * cap by the batch is dropped now — identical to a from-scratch rebuild
-    * whenever no shingle's pre-cap df straddles the boundary, which
-    * IncrStress asserts exactly at the bench scale (signature-equality of
-    * the day-3 artifact vs a full rebuild). */
+    * whenever no shingle's pre-cap df straddles the boundary, which the
+    * former IncrStress driver asserted exactly at the bench scale
+    * (signature-equality of the day-3 artifact vs a full rebuild;
+    * BASELINE.md, "Incremental-dedup index COMPACTION"). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, newTag: String,
       oldIndex: DataFrame, batchPostings: DataFrame): DataFrame =
     graft.io.Staged(spark, newTag) {

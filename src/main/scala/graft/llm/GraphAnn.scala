@@ -30,8 +30,9 @@ import org.apache.spark.sql.types.DoubleType
   * Approximate by construction (recall < 1 is possible) ⇒ no SQL oracle,
   * per the same carve-out as IVF/LSH/PQ; GraphAnnSpec pins recall against
   * the exact brute top-k, degree bounds, determinism, and that NN-descent
-  * rounds only improve the graph.  GraphAnnStress measures the build and
-  * the sublinear search at deployment scale (BASELINE.md row).
+  * rounds only improve the graph.  BASELINE.md ("Round-11: graph ANN")
+  * records the build and the sublinear search at deployment scale,
+  * measured by the former GraphAnnStress driver (see git history).
   *
   * 100 TB posture: the adjacency is a staged artifact (built once,
   * republished like the IVF/PQ indexes); build rounds are bounded-degree
@@ -151,12 +152,11 @@ object GraphAnn {
     * expansion from fixed entry points; returns top-k of all visited.
     * The family's query convention (vec_id < 10). */
   private[graft] def searchGraphOn(spark: SparkSession, base: DataFrame,
-      adj: DataFrame, k: Int = 5, entryK: Int = EntryK, beam: Int = Beam,
-      hops: Int = Hops): DataFrame =
+      adj: DataFrame, beam: Int = Beam): DataFrame =
     searchOn(spark, base,
       base.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("qv").as("qa"), col("nrm").as("na")),
-      adj, k, entryK, beam, hops)
+      adj, beam = beam)
 
   /** Beam search for an ARBITRARY query frame (qid, qa, na) — also the
     * append path's neighbor finder (each new node queries the frozen
@@ -167,15 +167,14 @@ object GraphAnn {
     * adjacency is a dead beam slot (nothing to expand) that quietly
     * weakens the searched neighbor set. */
   private[graft] def searchOn(spark: SparkSession, base: DataFrame,
-      queries: DataFrame, adj: DataFrame, k: Int = 5, entryK: Int = EntryK,
-      beam: Int = Beam, hops: Int = Hops,
+      queries: DataFrame, adj: DataFrame, k: Int = 5, beam: Int = Beam,
       entryPool: Option[DataFrame] = None): DataFrame = {
     // hash-spread entry points (not the lowest ids — those can all fall
     // in one cluster and strand the walk)
     val entryBase = entryPool
       .map(p => base.join(p.select("vec_id").distinct(), "vec_id"))
       .getOrElse(base)
-    val entries = entryBase.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(entryK)
+    val entries = entryBase.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(EntryK)
       .select(col("vec_id").as("node"))
     def score(cand: DataFrame): DataFrame = {
       val b = base.select(col("vec_id").as("node2"), col("qv").as("qb"),
@@ -196,7 +195,7 @@ object GraphAnn {
     var expanded = visited.select(col("qid"), col("node")).limit(0)
       .localCheckpoint(true)
     val wBeam = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("node"))
-    for (_ <- 1 to hops) {
+    for (_ <- 1 to Hops) {
       // best-first with an EXPANDED set (the HNSW ef-search discipline):
       // each hop expands the best `beam` visited-but-unexpanded nodes.
       // Without the expanded tracking, already-expanded nodes permanently
@@ -300,9 +299,10 @@ object GraphAnn {
     }
 
   /** Blocking off the QUANTIZED vectors for corpora with no raw-float
-    * embedding column (stress generators); `bits` is the occupancy knob —
-    * size it to log₂(n / target-block-occupancy) so seed candidate volume
-    * stays n·occupancy, not n²/2^bits with runaway blocks. */
+    * embedding column (the ANN chooser's graph route); `bits` is the
+    * occupancy knob — size it to log₂(n / target-block-occupancy) so seed
+    * candidate volume stays n·occupancy, not n²/2^bits with runaway
+    * blocks. */
   private[graft] def blockedOfQv(df: DataFrame, bits: Int, tables: Int): DataFrame =
     (0 until tables).map { t =>
       val blkT = (0 until bits)

@@ -253,8 +253,9 @@ object QualityModel {
     * Spark and DuckDB agree bit-for-bit by construction.  The U fold and
     * the final division run in DECIMAL(38,0) (DuckDB: the native HUGEINT
     * of sum(BIGINT)) because 10⁶·U₂ overflows a long once the corpus
-    * passes ~10⁹ pair-weight — caught by `graft.AucStress` at 10⁸ rows,
-    * where ANSI mode fails loudly instead of wrapping. */
+    * passes ~10⁹ pair-weight — caught at 10⁸ rows by the former AucStress
+    * driver (BASELINE.md, "the AUC scale law"; see git history), where
+    * ANSI mode fails loudly instead of wrapping. */
   val qualityAuc: GraftQuery = GraftQuery("q_llm_quality_auc",
     s"""WITH ${oracleScoredCtes},
        |g AS MATERIALIZED (SELECT s, CAST(sum(y) AS BIGINT) AS np,

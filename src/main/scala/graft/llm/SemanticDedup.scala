@@ -84,7 +84,7 @@ object SemanticDedup {
 
   /** The kept/dropped decision per row under the leader-by-id rule over
     * an assigned base (vec_id, cell, qv, nrm). */
-  private[graft] def pruneWithinCells(assigned: DataFrame, tau: Double = Tau): DataFrame = {
+  private[graft] def pruneWithinCells(assigned: DataFrame): DataFrame = {
     val spark = assigned.sparkSession
     val a = assigned.select(col("cell"), col("vec_id").as("ia"),
       col("qv").as("qa"), col("nrm").as("na"))
@@ -94,21 +94,19 @@ object SemanticDedup {
       (sqrt(col("na")) * sqrt(col("nb")))
     val dropped = a.join(b, col("cell") === col("cell_b") && col("ia") < col("ib"))
       .withColumn("sim", sim)
-      .filter(col("sim") >= tau)
+      .filter(col("sim") >= Tau)
       .select(col("ib").as("dup_id")).distinct()
     assigned.select(col("vec_id"), col("cell"))
       .join(dropped, col("vec_id") === col("dup_id"), "left")
       .select(col("vec_id"), col("cell"), col("dup_id").isNull.as("kept"))
   }
 
-  /** Trained coarse cells at a caller-chosen cell count — SemDeDup's
-    * scale knob: K grows with the corpus so occupancy N/K (and with it the
-    * within-cell O(occupancy²) prune) stays bounded; the trainer cost is
-    * bounded by the k-means sample cap regardless of N. */
+  /** Trained coarse cells (K of them): the trainer cost is bounded by the
+    * k-means sample cap regardless of N. */
   private[graft] def trainedCellsK(spark: org.apache.spark.sql.SparkSession,
-      tag: String, base: DataFrame, k: Int): DataFrame =
-    graft.io.Staged(spark, s"semCells|$tag|$k") {
-      val cent = Similarity.kmeans(Similarity.trainSample(base), k, iters = 1)._2
+      tag: String, base: DataFrame): DataFrame =
+    graft.io.Staged(spark, s"semCells|$tag|$K") {
+      val cent = Similarity.kmeans(Similarity.trainSample(base), K, iters = 1)._2
       Similarity.assignCells(base, cent).select("vec_id", "cell")
     }
 
@@ -121,9 +119,10 @@ object SemanticDedup {
     * group first (n·c·d), then argmaxes only that group's fine centroids
     * (n·(K/c)·d average) — total n·(c + K/c)·d, a √K-factor saving.  The
     * approximation (a row whose true best fine centroid lives outside
-    * its coarse group mis-assigns) is MEASURED by SemDedupStress:
-    * recall impact at 1 M×1000 cells is within noise of flat.  Both
-    * levels are broadcast joins; the corpus stays map-only. */
+    * its coarse group mis-assigns) was MEASURED by the former
+    * SemDedupStress driver (BASELINE.md, "Two-level assignment
+    * crossover"): recall impact at 1 M×1000 cells is within noise of
+    * flat.  Both levels are broadcast joins; the corpus stays map-only. */
   private[graft] def trainedCellsHierK(spark: org.apache.spark.sql.SparkSession,
       tag: String, base: DataFrame, k: Int, coarse: Int = 0): DataFrame =
     graft.io.Staged(spark, s"semCellsHier|$tag|$k|$coarse") {
@@ -195,16 +194,17 @@ object SemanticDedup {
   /** Deployment variant: same prune rule over the TRAINED coarse
     * quantizer's cells (sample-capped k-means) instead of fixed seeds —
     * no SQL oracle (the trainer is not SQL-expressible); spec'd for
-    * consistency against the judged rule, scale-measured by
-    * [[graft.SemDedupStress]]. */
+    * consistency against the judged rule; BASELINE.md ("Semantic
+    * (cluster-then-prune) dedup at scale") records its scale
+    * measurements, made by the former SemDedupStress driver (see git
+    * history). */
   private[graft] def semanticDedupTrained(spark: org.apache.spark.sql.SparkSession,
-      tag: String, base: DataFrame, tau: Double = Tau, k: Int = K,
-      hier: Boolean = false): DataFrame = {
+      tag: String, base: DataFrame, hier: Boolean = false): DataFrame = {
     val cells =
-      if (hier) trainedCellsHierK(spark, tag, base, k)
-      else trainedCellsK(spark, tag, base, k)
+      if (hier) trainedCellsHierK(spark, tag, base, K)
+      else trainedCellsK(spark, tag, base)
     pruneWithinCells(base.join(cells, "vec_id")
-      .select(col("vec_id"), col("cell"), col("qv"), col("nrm")), tau)
+      .select(col("vec_id"), col("cell"), col("qv"), col("nrm")))
   }
 
   val dedupSemantic: GraftQuery = GraftQuery("q_llm_dedup_semantic",

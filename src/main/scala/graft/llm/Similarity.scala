@@ -165,18 +165,10 @@ object Similarity {
     * oracle — the scalatest suite checks recall against the brute-force
     * baseline. */
   val annIvf: GraftQuery = GraftQuery.noOracle("q_llm_ann_ivf") {
-    (spark, sfDir) => ivfTopk(spark, sfDir, nprobe = 2)
+    (spark, sfDir) => ivfTopkOn(spark, sfDir, quantized(spark, sfDir), nprobe = 2)
   }
 
-  /** IVF top-5 with a tunable probe width (q_llm_ann_ivf uses nprobe=2;
-    * RecallSweep records the recall/cost curve across nprobe). */
-  private[graft] def ivfTopk(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nprobe: Int): DataFrame =
-    ivfTopkOn(spark, sfDir, quantized(spark, sfDir), nprobe)
-
-  /** The staged IVF coarse-quantizer assignment (vec_id -> cell) — exposed
-    * so stress drivers can time the trainer separately from the
-    * probe/re-rank cost a steady-state query pays. */
+  /** The staged IVF coarse-quantizer assignment (vec_id -> cell). */
   private[graft] def ivfCellsOn(spark: org.apache.spark.sql.SparkSession, tag: String,
       base: DataFrame): DataFrame =
     graft.io.Staged(spark, s"ivfCells|$tag") {
@@ -189,10 +181,6 @@ object Similarity {
       assignCells(base, cent).select("vec_id", "cell")
     }
 
-  /** The full IVF pipeline over an arbitrary quantized base (vec_id, qv,
-    * nrm) — `tag` keys the staged trainer artifacts (the judged query
-    * passes sfDir, preserving its staging tags).  IvfStress drives this
-    * with synthetic million-vector clustered corpora. */
   /** The staged INVERTED FILE: the corpus vectors joined to their cell
     * assignment and PUBLISHED CLUSTERED BY cell (range partitioning +
     * within-partition sort) — the literal IVF layout.  In staging-dir
@@ -200,7 +188,7 @@ object Similarity {
     * scan itself to the probed cells via file/row-group stats: the
     * steady-state query reads ≈ nprobe/k of the corpus instead of all of
     * it.  Built once per corpus; every query batch reuses it. */
-  private[graft] def ivfIndexedOn(spark: org.apache.spark.sql.SparkSession, tag: String,
+  private def ivfIndexedOn(spark: org.apache.spark.sql.SparkSession, tag: String,
       base: DataFrame): DataFrame = {
     val cells = ivfCellsOn(spark, tag, base)
     graft.io.Staged(spark, s"ivfIndexed|$tag") {
@@ -215,12 +203,17 @@ object Similarity {
     * centroids: they are centroidsOf(the final assignment), which is
     * exactly the staged cell column.  Shared by the plain IVF query and
     * the IVF-PQ composition. */
-  private[graft] def ivfCentroidsOn(spark: org.apache.spark.sql.SparkSession, tag: String,
+  private def ivfCentroidsOn(spark: org.apache.spark.sql.SparkSession, tag: String,
       base: DataFrame): DataFrame =
     graft.io.Staged(spark, s"ivfCent|$tag") {
       centroidsOf(ivfIndexedOn(spark, tag, base).select(col("cell"), col("qv")))
     }
 
+  /** The full IVF pipeline over an arbitrary quantized base (vec_id, qv,
+    * nrm) — `tag` keys the staged trainer artifacts (the judged query
+    * passes sfDir, preserving its staging tags).  `prune = false` skips
+    * the pushed probed-cell filter (the equality spec checks both
+    * paths). */
   private[graft] def ivfTopkOn(spark: org.apache.spark.sql.SparkSession, tag: String,
       base: DataFrame, nprobe: Int, prune: Boolean = true): DataFrame = {
     // The IVF index is a per-corpus artifact, not a per-query one: train
@@ -287,40 +280,31 @@ object Similarity {
     * recall is property-tested (>= 0.8 gate; BASELINE.md records the
     * measured sweep). */
   val annLsh: GraftQuery = GraftQuery.noOracle("q_llm_ann_lsh") {
-    (spark, sfDir) => lshTopk(spark, sfDir, nprobe = 8)
+    (spark, sfDir) => lshTopkOn(spark, sfDir, quantized(spark, sfDir), nprobe = 8,
+      tables = LshTables)
   }
 
   private val LshPlanes = 8
   private val LshTables = 16
   private val EmbedDim = 64
 
-  /** LSH top-5 with a tunable per-table probe budget (q_llm_ann_lsh probes
-    * the best 8 of 256 buckets in each of the 16 tables; RecallSweep
-    * records the recall/cost curve across budgets).  Probe generation
-    * enumerates all 2^planes flip masks per (query, table) and keeps the
-    * `nprobe` cheapest — a 256-row map-side expansion ranked by an integer
-    * cost with deterministic tie-break, before anything touches the
-    * corpus. */
-  /** The deduped (qid, vec_id) candidate set the re-rank will fetch — the
-    * index's true scan cost, reported by RecallSweep as a corpus fraction. */
-  private[graft] def lshCandidates(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nprobe: Int, tables: Int = LshTables): DataFrame =
-    lshPartsOn(spark, sfDir, quantized(spark, sfDir), nprobe, tables, prune = true)
-
-  /** Candidate set over an arbitrary base — LshStress's scan-cost probe.
-    * `prune = false` bypasses the pushed probe-key filter (the stress
-    * drivers and the equality spec measure/check both paths). */
+  /** The deduped (qid, vec_id) candidate set the re-rank will fetch over
+    * an arbitrary base — the index's true scan cost.  `prune = false`
+    * bypasses the pushed probe-key filter (the equality spec checks both
+    * paths). */
   private[graft] def lshCandidatesOn(spark: org.apache.spark.sql.SparkSession, tag: String,
       base: DataFrame, nprobe: Int, tables: Int, prune: Boolean = true): DataFrame =
     lshPartsOn(spark, tag, base, nprobe, tables, prune)
 
-  private[graft] def lshTopk(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nprobe: Int, tables: Int = LshTables): DataFrame =
-    lshTopkOn(spark, sfDir, quantized(spark, sfDir), nprobe, tables)
-
-  /** The full LSH pipeline over an arbitrary quantized base (vec_id, qv,
-    * nrm) — `tag` keys the staged postings index.  LshStress drives this
-    * with synthetic million-vector corpora. */
+  /** The full LSH top-5 pipeline over an arbitrary quantized base (vec_id,
+    * qv, nrm) — `tag` keys the staged postings index.  q_llm_ann_lsh
+    * probes the best 8 of 256 buckets in each of the 16 tables
+    * (BASELINE.md records the recall/cost curve across budgets, measured
+    * by the former RecallSweep driver; see git history).  Probe generation
+    * enumerates all 2^planes flip masks per (query, table) and keeps the
+    * `nprobe` cheapest — a 256-row map-side expansion ranked by an integer
+    * cost with deterministic tie-break, before anything touches the
+    * corpus. */
   private[graft] def lshTopkOn(spark: org.apache.spark.sql.SparkSession, tag: String,
       base: DataFrame, nprobe: Int, tables: Int, prune: Boolean = true): DataFrame = {
     val cand = lshPartsOn(spark, tag, base, nprobe, tables, prune)
@@ -360,9 +344,7 @@ object Similarity {
 
   /** The staged postings index: (vec_id, tb) for every table, where
     * `tb = t·2^planes + bucket` — a single long key per posting, no
-    * embeddings inside.  Exposed so stress drivers can time the index
-    * build separately from the probe/re-rank cost a steady-state query
-    * actually pays.  One codegen'd kernel call per vector computes all
+    * embeddings inside.  One codegen'd kernel call per vector computes all
     * table buckets; posexplode of its result IS the postings table.
     *
     * PUBLISHED SORTED BY tb (range partitioning + within-partition sort),
@@ -496,37 +478,35 @@ object Similarity {
     * m·k·dsub = 1024 rows — the codebook lives on the driver (8 KiB), like
     * ExactQuantiles' boundary rows, and empty cells keep their previous
     * centroid.  At 100 TB the trainer runs on a hash-sample of the corpus;
-    * encode stays a single map pass over everything.
-    *
-    * The flat-PQ entry points below take (m, k) with the judged 8×16
-    * defaults so PqStress can sweep the CODE-BITS knob (m=8 × k=256 ⇒
-    * 64-bit codes, still one long) without touching the judged plan. */
-  private def pqTrain(base: DataFrame, tag: String, iters: Int,
-      m: Int = PqM, k: Int = PqK): Array[Double] = {
+    * encode stays a single map pass over everything.  (BASELINE.md,
+    * "Product quantization", records the k=16 vs k=256 code-bits sweep,
+    * measured by the former PqStress driver; see git history.) */
+  private def pqTrain(base: DataFrame, tag: String, iters: Int): Array[Double] = {
     val spark = base.sparkSession
-    val dsub = EmbedDim / m
-    val bits = Integer.numberOfTrailingZeros(k)
-    val init = base.orderBy("vec_id").limit(k).select("qv").collect()
-    require(init.length == k, s"PQ needs >= $k vectors, got ${init.length}")
-    val cents = new Array[Double](m * k * dsub)
-    for (j <- 0 until k; sub <- 0 until m; i <- 0 until dsub)
-      cents((sub * k + j) * dsub + i) = init(j).getSeq[Long](0)(sub * dsub + i).toDouble
+    val bits = Integer.numberOfTrailingZeros(PqK)
+    val init = base.orderBy("vec_id").limit(PqK).select("qv").collect()
+    require(init.length == PqK, s"PQ needs >= $PqK vectors, got ${init.length}")
+    val cents = new Array[Double](PqM * PqK * PqSub)
+    for (j <- 0 until PqK; sub <- 0 until PqM; i <- 0 until PqSub)
+      cents((sub * PqK + j) * PqSub + i) =
+        init(j).getSeq[Long](0)(sub * PqSub + i).toDouble
     for (it <- 0 until iters) {
       // snapshot: the registered kernel closes over the array, and plans
       // evaluate lazily — never hand it the mutable working copy
       val snap = cents.clone()
       val cw = graft.fns.PqExpressions.pqEncode(spark, col("qv"), snap,
-        s"$tag|it$it", m, k, dsub)
+        s"$tag|it$it", PqM, PqK, PqSub)
       val means = base.select(col("qv"), cw.as("cw"))
-        .select(col("cw"), posexplode(transform(sequence(lit(0), lit(m - 1)),
-          sub => slice(col("qv"), sub * dsub + 1, lit(dsub)))).as(Seq("m", "sv")))
-        .withColumn("code", expr(s"shiftrightunsigned(cw, m * $bits) & ${k - 1}"))
+        .select(col("cw"), posexplode(transform(sequence(lit(0), lit(PqM - 1)),
+          sub => slice(col("qv"), sub * PqSub + 1, lit(PqSub)))).as(Seq("m", "sv")))
+        .withColumn("code", expr(s"shiftrightunsigned(cw, m * $bits) & ${PqK - 1}"))
         .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("i", "v")))
         .groupBy("m", "code", "i")
         .agg((sum(col("v")) / count(lit(1))).as("c"))
         .collect()
       means.foreach { r =>
-        cents((r.getInt(0) * k + r.getLong(1).toInt) * dsub + r.getInt(2)) = r.getDouble(3)
+        cents((r.getInt(0) * PqK + r.getLong(1).toInt) * PqSub + r.getInt(2)) =
+          r.getDouble(3)
       }
     }
     cents
@@ -536,24 +516,22 @@ object Similarity {
     * durable in staging-dir mode; consumers collect its m·k rows back to a
     * flattened driver array for the codegen kernels. */
   private[graft] def pqCodebookOn(spark: org.apache.spark.sql.SparkSession, tag: String,
-      base: DataFrame, m: Int = PqM, k: Int = PqK): DataFrame =
-    graft.io.Staged(spark, s"pqCodebook$m/$k|$tag") {
-      val dsub = EmbedDim / m
-      val cents = pqTrain(trainSample(base), tag, iters = 2, m, k)
+      base: DataFrame): DataFrame =
+    graft.io.Staged(spark, s"pqCodebook$PqM/$PqK|$tag") {
+      val cents = pqTrain(trainSample(base), tag, iters = 2)
       import spark.implicits._
-      (for (sub <- 0 until m; j <- 0 until k) yield
-        (sub, j, (0 until dsub).map(i => cents((sub * k + j) * dsub + i))))
+      (for (sub <- 0 until PqM; j <- 0 until PqK) yield
+        (sub, j, (0 until PqSub).map(i => cents((sub * PqK + j) * PqSub + i))))
         .toDF("m", "code", "cv")
     }
 
-  private def pqCodebookArr(cb: DataFrame, m: Int = PqM, k: Int = PqK): Array[Double] = {
-    val dsub = EmbedDim / m
-    val cents = new Array[Double](m * k * dsub)
+  private def pqCodebookArr(cb: DataFrame): Array[Double] = {
+    val cents = new Array[Double](PqM * PqK * PqSub)
     cb.collect().foreach { r =>
-      val off = (r.getInt(0) * k + r.getInt(1)) * dsub
+      val off = (r.getInt(0) * PqK + r.getInt(1)) * PqSub
       val cv = r.getSeq[Double](2)
       var i = 0
-      while (i < dsub) { cents(off + i) = cv(i); i += 1 }
+      while (i < PqSub) { cents(off + i) = cv(i); i += 1 }
     }
     cents
   }
@@ -562,17 +540,15 @@ object Similarity {
     * word + reconstruction norm (selected from the centroid-norm LUT by
     * the same ADC kernel).  No shuffle, no explode. */
   private def pqEncodeDf(spark: org.apache.spark.sql.SparkSession, vecs: DataFrame,
-      cents: Array[Double], kernelTag: String,
-      m: Int = PqM, k: Int = PqK): DataFrame = {
-    val dsub = EmbedDim / m
-    val normLut = Array.tabulate(m * k) { mj =>
-      (0 until dsub).map(i => cents(mj * dsub + i) * cents(mj * dsub + i)).sum
+      cents: Array[Double], kernelTag: String): DataFrame = {
+    val normLut = Array.tabulate(PqM * PqK) { mj =>
+      (0 until PqSub).map(i => cents(mj * PqSub + i) * cents(mj * PqSub + i)).sum
     }
     vecs.select(col("vec_id"),
         graft.fns.PqExpressions.pqEncode(spark, col("qv"), cents, kernelTag,
-          m, k, dsub).as("cw"))
+          PqM, PqK, PqSub).as("cw"))
       .withColumn("anrm2", graft.fns.PqExpressions.pqScore(spark, col("cw"),
-        typedLit(normLut.toSeq), m, k))
+        typedLit(normLut.toSeq), PqM, PqK))
   }
 
   /** The staged packed-code artifact (vec_id, cw, anrm2): ONE long of code
@@ -580,10 +556,10 @@ object Similarity {
     * that lets the ANN candidate pass scan a 100 TB corpus's codes without
     * touching its vectors. */
   private[graft] def pqCodesOn(spark: org.apache.spark.sql.SparkSession, tag: String,
-      base: DataFrame, m: Int = PqM, k: Int = PqK): DataFrame = {
-    val cents = pqCodebookArr(pqCodebookOn(spark, tag, base, m, k), m, k)
-    graft.io.Staged(spark, s"pqCodes$m/$k|$tag") {
-      pqEncodeDf(spark, base, cents, tag, m, k)
+      base: DataFrame): DataFrame = {
+    val cents = pqCodebookArr(pqCodebookOn(spark, tag, base))
+    graft.io.Staged(spark, s"pqCodes$PqM/$PqK|$tag") {
+      pqEncodeDf(spark, base, cents, tag)
     }
   }
 
@@ -617,19 +593,21 @@ object Similarity {
     * the best `topR` per query via the exchange-light TopKPerGroup exec,
     * then exact-re-rank only those candidates' true vectors to top-5.
     * Approximate by construction => no SQL oracle; recall is gated in the
-    * suite and measured at the million-vector scale by PqStress. */
+    * suite; BASELINE.md ("Product quantization") records the
+    * million-vector measurements of the former PqStress driver (see git
+    * history). */
   private[graft] def pqTopkOn(spark: org.apache.spark.sql.SparkSession, tag: String,
-      base: DataFrame, topR: Int, m: Int = PqM, k: Int = PqK): DataFrame = {
-    val codes = pqCodesOn(spark, tag, base, m, k)
-    val cents = pqCodebookArr(pqCodebookOn(spark, tag, base, m, k), m, k)
+      base: DataFrame, topR: Int): DataFrame = {
+    val codes = pqCodesOn(spark, tag, base)
+    val cents = pqCodebookArr(pqCodebookOn(spark, tag, base))
     val luts = base.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"),
         graft.fns.PqExpressions.pqLuts(spark, col("qv"), cents, tag,
-          m, k, EmbedDim / m).as("lut"))
+          PqM, PqK, PqSub).as("lut"))
     val scored = codes.crossJoin(broadcast(luts))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("ascore", graft.fns.PqExpressions.pqScore(spark, col("cw"), col("lut"),
-        m, k) / sqrt(greatest(col("anrm2"), lit(1e-12))))
+        PqM, PqK) / sqrt(greatest(col("anrm2"), lit(1e-12))))
     val cand = graft.plans.TopKPerGroup(scored.select("qid", "vec_id", "ascore"),
       Seq("qid"), Seq(("ascore", false), ("vec_id", true)), topR)
       .select("qid", "vec_id")
@@ -661,7 +639,7 @@ object Similarity {
     * collapses every tight cluster to ONE code word and mass-ties the
     * ADC scores (measured: recall 0.56 isotropic → 0.000 clustered at
     * 1 M×64; the residual encoding below restores the clustered case). */
-  private[graft] def ivfPqResidualsOn(spark: org.apache.spark.sql.SparkSession, tag: String,
+  private def ivfPqResidualsOn(spark: org.apache.spark.sql.SparkSession, tag: String,
       base: DataFrame): DataFrame = {
     val cells = ivfCellsOn(spark, tag, base)
     val cent = ivfCentroidsOn(spark, tag, base)

@@ -4,22 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-/** The synthetic vector corpora every ANN stress/bench tool shares — ONE
-  * definition, because BASELINE.md compares recall/cost across tools and
-  * that comparison is only apples-to-apples while the generators stay
-  * bit-identical (they had drifted into four copies before this was
-  * extracted).
+/** The synthetic vector corpora of the ANN specs — one definition, because
+  * BASELINE.md compares recall/cost across the ANN paths on these shapes,
+  * and that comparison is only apples-to-apples while the generators stay
+  * bit-identical.
   *
   *  - [[clustered]]: nClusters planted centroids with xxhash-derived
   *    components in ±1e6; vector = centroid(vec_id % nClusters) +
   *    per-component noise in ±1e5 — tight, separable, deterministic (the
-  *    IvfStress shape; also PQ's measured worst case, where the true
-  *    top-5 within a cluster is decided by noise under the quantization
-  *    step).
-  *  - [[isotropic]]: every component hash-uniform in ±1e6 (the LshStress
-  *    shape; neighbors concentrate near cosine √(2·ln n / d)).  `seed`
-  *    varies the instance: 0 = the historical LshStress/PqStress corpus,
-  *    a nonzero seed = an independent draw (AnnAutoStress uses 13).
+  *    IVF shape; also PQ's measured worst case, where the true top-5
+  *    within a cluster is decided by noise under the quantization step).
+  *  - [[isotropic]]: every component hash-uniform in ±1e6 (the LSH shape;
+  *    neighbors concentrate near cosine √(2·ln n / d)).  `seed` varies the
+  *    instance: 0 = the corpus of BASELINE.md's LSH and PQ rows, a nonzero
+  *    seed = an independent draw (the ANN chooser rows use 13).
   *
   * Rows: (vec_id, qv: Array[Long], nrm: Double) — the quantized-base
   * schema every Similarity/GraphAnn entry point takes.

@@ -1,4 +1,4 @@
-package graft
+package graft.io
 
 import org.apache.spark.sql.SparkSession
 
@@ -20,7 +20,7 @@ object CommitRacer {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    (1 to n).foreach(_ => graft.io.Versioned.restore(spark, root, 1))
+    (1 to n).foreach(_ => Versioned.restore(spark, root, 1))
     spark.stop()
     println("RACER_DONE")
   }

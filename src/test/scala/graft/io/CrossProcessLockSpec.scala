@@ -27,11 +27,13 @@ class CrossProcessLockSpec extends AnyFunSuite {
     .flatMap(m => Seq(s"--add-opens=$m=ALL-UNNAMED"))
 
   private def spawnRacer(root: String, n: Int, log: java.io.File): Process = {
-    val classes = classOf[Versioned.CommitRejected] // any class in this build
-      .getProtectionDomain.getCodeSource.getLocation.getPath
+    def dirOf(c: Class[_]) = c.getProtectionDomain.getCodeSource.getLocation.getPath
+    // the engine's classes plus the test classes, where CommitRacer lives
+    val classes = Seq(classOf[Versioned.CommitRejected], classOf[CrossProcessLockSpec])
+      .map(dirOf).distinct.mkString(":")
     val cmd = (Seq("java", "-Xmx2g") ++ opens ++ Seq(
       "-cp", s"/opt/spark/jars/*:$classes",
-      "graft.CommitRacer", root, n.toString)).toArray
+      "graft.io.CommitRacer", root, n.toString)).toArray
     new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
       .redirectOutput(log)

@@ -309,9 +309,9 @@ class NonEquiJoinsSpec extends AnyFunSuite {
 
   test("chooser routes a hot-cell-over-budget (zipfian) input to quantile bucketing") {
     // u^8 zipfian: the hottest of 32 uniform cells carries most of the
-    // mass (measured 65-84% in SkewStress).  With the cell-row budget
-    // below hotFrac*n — the executor-memory margin at 100 TB — planned
-    // balance is mandatory.
+    // mass (measured 65-84%, BASELINE.md "Skew bucketing head-to-head").
+    // With the cell-row budget below hotFrac*n — the executor-memory
+    // margin at 100 TB — planned balance is mandatory.
     val r = new scala.util.Random(7)
     val z = (1 to 2000).map(i => (i.toLong, math.pow(r.nextDouble(), 8) * 1000))
       .toDF("idz", "vz")

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Gates for the ANN strategy chooser (q_llm_ann_auto): every routing
   * branch of the pure law, the clusteredness statistic against planted
-  * clustered/isotropic extremes (the IvfStress/LshStress generator
-  * shapes), judged-SF routing to the exact brute path, and forced-route
+  * clustered/isotropic extremes (the [[graft.StressCorpora]] shapes),
+  * judged-SF routing to the exact brute path, and forced-route
   * dispatch recall on the shapes each index is built for. */
 class AnnAutoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -30,7 +30,7 @@ class AnnAutoSpec extends AnyFunSuite {
     assert(annStrategy(st(100000000L, 0.30)) == "lsh")
     // past the walk bar the clustered branch hands over to the beam walk
     // (corpus-size-independent candidates); isotropic keeps lsh at EVERY
-    // n — a measured exclusion (GraphAnnStress isotropic rows: recall
+    // n — a measured exclusion (BASELINE.md round-14 isotropic rows: recall
     // 0.42@20k → 0.10@100k at the family-gate walk, 0.28 with a 2×
     // heavier walk, vs sign-LSH's 0.98 on the same geometry)
     assert(annStrategy(st(15000000L, 0.95)) == "graph")
@@ -104,7 +104,8 @@ class AnnAutoSpec extends AnyFunSuite {
     assert(autoPq.select("route").distinct().as[String].collect().toSeq == Seq("ivfpq"))
     // spec-scale recall floors are smoke checks (8-byte codes on a 4k
     // synthetic corpus quantize coarsely); the deployment-scale recall
-    // rows per route live in BASELINE.md via graft.AnnAutoStress at 1M
+    // rows per route live in BASELINE.md ("ANN chooser routes at
+    // deployment scale", 1M vectors, former AnnAutoStress driver)
     val rIvfPq = (bruteCl & topSet(autoPq)).size.toDouble / bruteCl.size
     assert(rIvfPq >= 0.4, s"ivfpq-routed recall $rIvfPq")
     // ...and flat PQ on the isotropic corpus

@@ -2,8 +2,6 @@ package graft.llm
 
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ANN probe-scan pruning (round 11): both index artifacts are published
@@ -19,23 +17,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *     carries the probe-key `In`), i.e. the pruning is stats-eligible,
   *     not a post-scan residual.
   *
-  * LshStress / IvfStress measure the wall-clock payoff at 1 M / 4 M
-  * vectors; BASELINE.md records the numbers.
+  * BASELINE.md records the wall-clock payoff at 1 M / 4 M vectors,
+  * measured by the former LshStress / IvfStress drivers (see git
+  * history).
   */
 class AnnPruneSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private val dim = 64
-
-  /** Deterministic xxhash corpus, the LshStress formula at test scale. */
-  private def syntheticBase(s: org.apache.spark.sql.SparkSession, n: Long): DataFrame = {
-    val comp = transform(sequence(lit(0), lit(dim - 1)),
-      i => pmod(xxhash64(col("vec_id") * dim + i), lit(2000001L)) - 1000000L)
-    s.range(n).select(col("id").as("vec_id"), comp.as("qv"))
-      .withColumn("nrm",
-        graft.fns.VecExpressions.vecDot(s, col("qv"), col("qv")).cast(DoubleType))
-      .localCheckpoint()
-  }
+  /** Deterministic xxhash corpus, the isotropic [[graft.StressCorpora]]
+    * shape at test scale. */
+  private def syntheticBase(s: org.apache.spark.sql.SparkSession, n: Long): DataFrame =
+    graft.StressCorpora.isotropic(s, n).localCheckpoint()
 
   private def withStaging[A](f: org.apache.spark.sql.SparkSession => A): A = {
     // sibling session: isolates the staging-dir conf from every other suite
