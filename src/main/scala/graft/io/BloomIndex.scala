@@ -103,12 +103,12 @@ object BloomIndex {
     // closure — it re-runs against the resolved head on every retry, so
     // a racing first declaration cannot slip a second, different one in
     try Versioned.publish(spark, root, head => {
-      Versioned.bloomColOf(spark, root, head).foreach { case (c0, m0) =>
+      head.bloomCol.foreach { case (c0, m0) =>
         require(c0 == bloomCol && m0 == bits,
           s"$root already keeps a bloom index on ($c0, $m0 bits); " +
             s"re-declaring ($bloomCol, $bits) would corrupt pruning")
       }
-      (if (head == 0) Seq.empty else Versioned.manifest(spark, root, head)) :+ rel
+      head.dirs :+ rel
     },
       precomputedRows = Map(rel -> n),
       blooms = Some((bloomCol, bits, Map(rel -> entry))), op = "append")
@@ -136,17 +136,17 @@ object BloomIndex {
       values: Seq[String]): DataFrame =
     readPointCanonical(spark, root, v, values)
 
-  /** The dirs of version `v` whose bloom filter claims at least one of
+  /** The dirs of record `r` whose bloom filter claims at least one of
     * `values` (canonical string form), plus the filter-less dirs
     * (conservatively kept) — the dir-pruning core of [[readPoint]],
     * shared with the registered batch source's pushed-equality path
     * ([[GraftTable.pruneDirs]]).  Probe hashing runs through the SAME
     * Spark expressions as the build — one 1-row local job — so driver
     * and executor hashing can never drift. */
-  private[io] def pruneDirsPoint(spark: SparkSession, root: String, v: Int,
+  private[io] def pruneDirsPoint(spark: SparkSession, root: String, r: Record,
       values: Seq[String]): Seq[String] = {
     require(values.nonEmpty, "empty probe set")
-    val (c, bits) = Versioned.bloomColOf(spark, root, v).getOrElse(
+    val (c, bits) = r.bloomCol.getOrElse(
       throw new IllegalArgumentException(s"$root has no bloom index"))
     require(!c.startsWith("_tok("),
       s"$root keeps a TOKEN index ($c); probe it with TextIndex.readToken")
@@ -154,23 +154,20 @@ object BloomIndex {
     val probes: Array[Array[Int]] = values.toDF("v")
       .select(positions(col("v"), bits).as("ps")).collect()
       .map(_.getSeq[Long](0).map(_.toInt).toArray)
-    val blooms = Versioned.dirBlooms(spark, root, v)
     def hits(d: String, entry: String): Boolean = {
       val bytes = loadBitset(spark, root, d, entry)
       probes.exists(_.forall(p => (bytes(p >> 3) & (1 << (p & 7))) != 0))
     }
-    Versioned.manifest(spark, root, v).filter(d => blooms.get(d).forall(hits(d, _)))
+    r.dirs.filter(d => r.bloom.get(d).forall(hits(d, _)))
   }
 
   private def readPointCanonical(spark: SparkSession, root: String, v: Int,
       values: Seq[String]): DataFrame = {
-    val keep = pruneDirsPoint(spark, root, v, values)
-    val c = Versioned.bloomColOf(spark, root, v).get._1
-    val base =
-      if (keep.isEmpty) Versioned.readAt(spark, root, v).limit(0)
-      else Versioned.readDirs(spark, root, v, keep)
+    val r = Versioned.record(spark, root, v)
+    val keep = pruneDirsPoint(spark, root, r, values)
     // filter on the SAME canonical string form the hashes use
-    base.filter(col(c).cast("string").isin(values: _*))
+    Versioned.readPruned(spark, root, r, keep)
+      .filter(col(r.bloomCol.get._1).cast("string").isin(values: _*))
   }
 
   /** Judged query: bloom-pruned point lookup on an UNCLUSTERED key.

@@ -153,8 +153,8 @@ object Branches {
         val here: Set[String] =
           if (head == 0) Set.empty
           else (Versioned.lowestVersion(spark, b, head) to head).flatMap { v =>
-            Versioned.manifest(spark, b, v) ++
-              Versioned.dvOf(spark, b, v).values.flatten
+            val r = Versioned.record(spark, b, v)
+            r.dirs ++ r.dv.values.flatten
           }.toSet
         here ++ walk(b)
       }.toSet
@@ -188,8 +188,10 @@ object Branches {
     val fl = forkLocalV(spark, root, name)
     val bh = Versioned.currentVersion(spark, b)
     require(bh >= fl, s"branch '$name' of $root has no committed version")
-    val bDirs = Versioned.manifest(spark, b, bh)
-    val forkDirs = Versioned.manifest(spark, b, fl).toSet
+    val bRec = Versioned.record(spark, b, bh)
+    val forkRec = Versioned.record(spark, b, fl)
+    val bDirs = bRec.dirs
+    val forkDirs = forkRec.dirs.toSet
 
     // a branch dir is parent-inherited iff its manifest entry is an
     // absolute path into the parent's data/ (how cloneAt records them)
@@ -205,17 +207,15 @@ object Branches {
         s"branch '$name' carries parent-absolute dirs beyond its fork snapshot " +
           "(an interrupted rebase); run Branches.rebase to heal, then merge")
 
-    val bDv = Versioned.dvOf(spark, b, bh)
-    val bDvRows = Versioned.dvRowsOf(spark, b, bh)
-    val forkDv = Versioned.dvOf(spark, b, fl)
+    val bDv = bRec.dv
+    val forkEvents = forkRec.alters.map(e => (e._1, e._2))
     // alters compare by EVENT KEYS (did the branch add its own schema
-    // events?), not by full fragments: a rebase legitimately extends
+    // events?), not by full dir lists: a rebase legitimately extends
     // post-fork events' dir sets with the branch's own dirs
     val appendOnly =
       forkDirs.subsetOf(bDirs.toSet) &&
-        forkDirs.forall(d => bDv.get(d) == forkDv.get(d)) &&
-        Versioned.altersOf(spark, b, bh).map(e => (e._1, e._2)) ==
-          Versioned.altersOf(spark, b, fl).map(e => (e._1, e._2))
+        forkDirs.forall(d => bDv.get(d) == forkRec.dv.get(d)) &&
+        bRec.alters.map(e => (e._1, e._2)) == forkEvents
 
     // deletion-vector sidecars address rows by ABSOLUTE file path, so
     // they cannot ride the rename: each branch-local sidecar is REWRITTEN
@@ -257,43 +257,27 @@ object Branches {
       try {
       if (appendOnly) {
         moveAll()
-        val bStats = Versioned.dirStats(spark, b, bh)
+        val bStats = bRec.stats.filter { case (d, _) => newDirs.contains(d) }
+        val bRows = bRec.rows.getOrElse(Map.empty[String, Long])
           .filter { case (d, _) => newDirs.contains(d) }
-        val bRows = Versioned.dirRows(spark, b, bh)
-          .filter { case (d, _) => newDirs.contains(d) }
-        val bSc = Versioned.statsColOf(spark, b, bh)
-        val bBloom = Versioned.bloomColOf(spark, b, bh)
-        val forkEvents = Versioned.altersOf(spark, b, fl).map(e => (e._1, e._2))
         val dvAdd: Map[String, (Seq[String], Long)] =
           carryDv.map { case (d, sides) =>
-            d -> (sides.map(rs), bDvRows.getOrElse(d, 0L)) }
+            d -> (sides.map(rs), bRec.dvRows.getOrElse(d, 0L)) }
         Versioned.publishRecord(spark, rootN, head => {
-          val dirs = (if (head == 0) Seq.empty
-                      else Versioned.manifest(spark, rootN, head)) ++ newDirs
+          val mh = Versioned.record(spark, rootN, head)
+          val pre = if (mh.statsCol.isDefined && mh.statsCol == bRec.statsCol) bStats
+            else Map.empty[String, (Long, Long)]
+          val blooms = mh.bloomCol match {
+            case Some((c, m)) if bRec.bloomCol.contains((c, m)) =>
+              Some((c, m, bRec.bloom.filter { case (d, _) => newDirs.contains(d) }))
+            case _ => None
+          }
           // adopted dirs predate every parent alter made SINCE the fork:
           // they join those events' dir sets (events are append-only, so
           // the fork's events are a prefix of the parent's)
-          val mainEvents = Versioned.altersOf(spark, rootN, head)
-          if (forkEvents.nonEmpty &&
-              mainEvents.take(forkEvents.size).map(e => (e._1, e._2)) != forkEvents)
-            throw new MergeConflict(
-              s"parent $rootN rewrote schema history since the fork of '$name'")
-          val altersArg =
-            if (mainEvents.isEmpty) None
-            else Some(mainEvents.zipWithIndex.map { case ((c, t, ds), i) =>
-              val all = if (i < forkEvents.size) ds else ds ++ newDirs
-              s""""$c|$t":"${all.toSeq.sorted.mkString(",")}""""
-            }.mkString(","))
-          val sc = Versioned.statsColOf(spark, rootN, head)
-          val pre = if (sc.isDefined && sc == bSc) bStats else Map.empty[String, (Long, Long)]
-          val blooms = Versioned.bloomColOf(spark, rootN, head) match {
-            case Some((c, m)) if bBloom.contains((c, m)) =>
-              Some((c, m, Versioned.dirBlooms(spark, b, bh)
-                .filter { case (d, _) => newDirs.contains(d) }))
-            case _ => None
-          }
-          (dirs, Versioned.extraFields(spark, rootN, head, dirs, None, "",
-            pre, altersArg, bRows, blooms, dvAdd))
+          Versioned.extraFields(spark, rootN, mh, mh.dirs ++ newDirs, None,
+            pre, Some(adoptedAlters(rootN, name, mh.alters, forkEvents, newDirs)),
+            bRows, blooms, dvAdd)
         }).get
       } else {
         // snapshot merge: the branch head replaces the parent wholesale,
@@ -302,14 +286,11 @@ object Branches {
           throw new MergeConflict(
             s"branch '$name' rewrote history and parent $rootN advanced past fork v$forkV")
         moveAll()
-        val dirs = bDirs.map(r)
-        // ONE serializer with every replay path (restore, clone): stats,
+        // ONE replay with every snapshot path (restore, clone): stats,
         // rows, sums, blooms, alters, checks, dv all carry remapped
-        val carried = Versioned.carryFieldsOf(spark, b, bh, bDirs, r, rs)
-        val ts = math.max(System.currentTimeMillis(),
-          Versioned.tsOf(spark, rootN, forkV))
-        Versioned.publishRecord(spark, rootN,
-          _ => (dirs, s""","ts":$ts$carried"""),
+        val carried = bRec.replayed(r, rs).copy(ts = math.max(
+          System.currentTimeMillis(), Versioned.tsOf(spark, rootN, forkV)))
+        Versioned.publishRecord(spark, rootN, _ => carried,
           abortIf = head => head != forkV) match {
           case Some(v) => v
           case None =>
@@ -332,6 +313,19 @@ object Branches {
     else throw new IllegalStateException(
       s"branch '$name' advanced during its merge; merged through v$bh, branch left in place (now broken) for manual salvage")
     merged
+  }
+
+  /** The parent's schema events `mainEvents` with the `adopted` branch
+    * dirs joined to every event made since the fork (they predate those
+    * events); the fork's events must still be a prefix of the parent's. */
+  private def adoptedAlters(rootN: String, name: String,
+      mainEvents: Seq[Record.Alter], forkEvents: Seq[(String, String)],
+      adopted: Seq[String]): Seq[Record.Alter] = {
+    if (mainEvents.take(forkEvents.size).map(e => (e._1, e._2)) != forkEvents)
+      throw new MergeConflict(
+        s"parent $rootN rewrote schema history since the fork of '$name'")
+    mainEvents.zipWithIndex.map { case ((c, t, ds), i) =>
+      (c, t, (if (i < forkEvents.size) ds else ds ++ adopted).distinct.sorted) }
   }
 
   /** REBASE branch `name` onto the parent's CURRENT head — the way out
@@ -396,7 +390,7 @@ object Branches {
         // loudly instead: the operator folds the stray commit back
         // (re-commit it on a fresh branch) or deletes it deliberately.
         ((p + 1) to bh0).foreach { v =>
-          if (!Versioned.recordTextOf(spark, b, v).contains(""""rebaseSnap":true"""))
+          if (!Versioned.record(spark, b, v).rebaseSnap)
             throw new IllegalStateException(
               s"branch '$name' carries a non-rebase commit (v$v) made while a " +
                 s"rebase intent was live; healing would drop it — salvage v$v " +
@@ -406,33 +400,33 @@ object Branches {
       case None => bh0
     }
     if (head == forkV && preHeadOpt.isEmpty) return bh0 // already on main's head
-    val forkDirs = Versioned.manifest(spark, b, fl)
+    val forkRec = Versioned.record(spark, b, fl)
+    val bRec = Versioned.record(spark, b, bh)
+    val forkDirs = forkRec.dirs
     val forkSet = forkDirs.toSet
-    val bDirs = Versioned.manifest(spark, b, bh)
+    val bDirs = bRec.dirs
     if (!forkSet.subsetOf(bDirs.toSet))
       throw new MergeConflict(
         s"branch '$name' rewrote fork history; rebase replays appends and MOR deletes only")
-    val forkKeys = Versioned.altersOf(spark, b, fl).map(e => (e._1, e._2))
-    if (Versioned.altersOf(spark, b, bh).map(e => (e._1, e._2)) != forkKeys)
+    val forkKeys = forkRec.alters.map(e => (e._1, e._2))
+    if (bRec.alters.map(e => (e._1, e._2)) != forkKeys)
       throw new MergeConflict(
         s"branch '$name' added schema events of its own; rebase cannot replay alters")
     val added = bDirs.filterNot(forkSet)
     require(added.forall(d => !d.startsWith("/") && !d.contains(":/")),
       s"branch '$name' carries foreign absolute dirs; rebase cannot adopt them")
 
-    val bDv = Versioned.dvOf(spark, b, bh)
-    val bDvRows = Versioned.dvRowsOf(spark, b, bh)
-    val forkDv = Versioned.dvOf(spark, b, fl)
-    val forkDvRows = Versioned.dvRowsOf(spark, b, fl)
-    val mDirs = Versioned.manifest(spark, rootN, head)
+    val bDv = bRec.dv
+    val bDvRows = bRec.dvRows
+    val mRec = Versioned.record(spark, rootN, head)
+    val mDirs = mRec.dirs
     val mSet = mDirs.toSet
-    val mDv = Versioned.dvOf(spark, rootN, head)
     val dvAtFork = Versioned.dvOf(spark, rootN, forkV)
     def relOf(d: String) = d.stripPrefix(s"$rootN/")
     // the branch's vector SUFFIX per inherited dir (vectors accumulate
     // append-only until a rewrite, which the subset check excluded)
     val deltas: Map[String, (Seq[String], Long)] = forkDirs.flatMap { d =>
-      val pre = forkDv.getOrElse(d, Seq.empty)
+      val pre = forkRec.dv.getOrElse(d, Seq.empty)
       val post = bDv.getOrElse(d, Seq.empty)
       if (post.size <= pre.size) None
       else {
@@ -440,11 +434,11 @@ object Branches {
         if (!mSet.contains(relD))
           throw new MergeConflict(s"main rewrote $relD since the fork and branch " +
             s"'$name' deleted from it; positional vectors cannot replay")
-        if (mDv.get(relD) != dvAtFork.get(relD))
+        if (mRec.dv.get(relD) != dvAtFork.get(relD))
           throw new MergeConflict(s"main changed deletion vectors on $relD since " +
             s"the fork; branch '$name' deltas would double-count")
         Some(d -> (post.drop(pre.size),
-          bDvRows.getOrElse(d, 0L) - forkDvRows.getOrElse(d, 0L)))
+          bDvRows.getOrElse(d, 0L) - forkRec.dvRows.getOrElse(d, 0L)))
       }
     }.toMap
 
@@ -470,14 +464,14 @@ object Branches {
     // the intent MUST stay on failure: the snapshot record is already on
     // the branch log, and only the heal path knows to supersede it.
     val abs: String => String = d => Versioned.dataPath(rootN, d)
-    val carried = Versioned.carryFieldsOf(spark, rootN, head, mDirs, abs, abs)
-    val ts = math.max(System.currentTimeMillis(), Versioned.tsOf(spark, b, bh0))
+    val snap = mRec.replayed(abs, abs).copy(ts = math.max(
+      System.currentTimeMillis(), Versioned.tsOf(spark, b, bh0)), rebaseSnap = true)
     val vf =
       try Versioned.publishRecord(spark, b,
         h => {
           if (h != bh0) throw new MergeConflict(
             s"branch '$name' advanced during its rebase")
-          (mDirs.map(abs), s""","ts":$ts$carried,"rebaseSnap":true""")
+          snap
         }).get
       catch { case e: Throwable =>
         try writePointer(spark, b, prevPointer)
@@ -491,25 +485,14 @@ object Branches {
         // publish 2: snapshot + the branch's replayed delta.  Added dirs
         // carry their recorded stats/rows/blooms; they also join main's
         // post-fork schema events' dir sets (they predate those events).
-        val bStats = Versioned.dirStats(spark, b, bh)
+        val bStats = bRec.stats.filter { case (d, _) => added.contains(d) }
+        val bRows = bRec.rows.getOrElse(Map.empty[String, Long])
           .filter { case (d, _) => added.contains(d) }
-        val bRows = Versioned.dirRows(spark, b, bh)
-          .filter { case (d, _) => added.contains(d) }
-        val mainEvents = Versioned.altersOf(spark, b, vf)
-        if (forkKeys.nonEmpty &&
-            mainEvents.take(forkKeys.size).map(e => (e._1, e._2)) != forkKeys)
-          throw new MergeConflict(
-            s"parent $rootN rewrote schema history since the fork of '$name'")
-        val altersArg =
-          if (mainEvents.isEmpty) None
-          else Some(mainEvents.zipWithIndex.map { case ((c, t, ds), i) =>
-            val all = if (i < forkKeys.size) ds else ds ++ added
-            s""""$c|$t":"${all.toSeq.sorted.mkString(",")}""""
-          }.mkString(","))
-        val bloomArg = Versioned.bloomColOf(spark, b, vf) match {
-          case Some((c, m)) if Versioned.bloomColOf(spark, b, bh).contains((c, m)) =>
-            val e = Versioned.dirBlooms(spark, b, bh)
-              .filter { case (d, _) => added.contains(d) }
+        // vf's record IS the snapshot just published
+        val alters = adoptedAlters(rootN, name, snap.alters, forkKeys, added)
+        val bloomArg = snap.bloomCol match {
+          case Some((c, m)) if bRec.bloomCol.contains((c, m)) =>
+            val e = bRec.bloom.filter { case (d, _) => added.contains(d) }
             if (e.isEmpty) None else Some((c, m, e))
           case _ => None
         }
@@ -526,13 +509,13 @@ object Branches {
             // nothing.  Only a mid-rebase REWRITE of snapshot dirs
             // (which would orphan the delta's DV targets) still
             // conflicts — the intent stays and the heal path surfaces it.
-            val baseDirs = Versioned.manifest(spark, b, h)
-            if (!snapAbs.forall(baseDirs.contains)) throw new MergeConflict(
+            val base = Versioned.record(spark, b, h)
+            if (!snapAbs.forall(base.dirs.contains)) throw new MergeConflict(
               s"branch '$name' rewrote the rebase snapshot mid-rebase; " +
                 "positional deltas cannot replay")
-            val dirs = baseDirs ++ added.filterNot(baseDirs.toSet)
-            (dirs, Versioned.extraFields(spark, b, h, dirs, None,
-              ""","rebaseSnap":true""", bStats, altersArg, bRows, bloomArg, dvAdd))
+            Versioned.extraFields(spark, b, base,
+              base.dirs ++ added.filterNot(base.dirs.toSet), None,
+              bStats, Some(alters), bRows, bloomArg, dvAdd).copy(rebaseSnap = true)
           }).get
       }
     // final pointer LAST: clearing the rebasing intent is the rebase's

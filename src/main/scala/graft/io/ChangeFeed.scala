@@ -274,14 +274,12 @@ object ChangeFeed {
     * silent row loss.) */
   private[io] def versionChunks(spark: SparkSession, root: String,
       va: Int, vb: Int, maxRows: Long): Seq[Seq[(String, String)]] = {
-    val da = Versioned.manifest(spark, root, va)
-    val db = Versioned.manifest(spark, root, vb)
-    val dvA = Versioned.dvOf(spark, root, va)
-    val dvB = Versioned.dvOf(spark, root, vb)
+    val (ra, rb) = (Versioned.record(spark, root, va), Versioned.record(spark, root, vb))
+    val (da, db) = (ra.dirs, rb.dirs)
     val shared = da.toSet.intersect(db.toSet)
-    val cancel = shared.filter(d => dvA.get(d) == dvB.get(d))
-    val rowsA = Versioned.dirRows(spark, root, va)
-    val rowsB = Versioned.dirRows(spark, root, vb)
+    val cancel = shared.filter(d => ra.dv.get(d) == rb.dv.get(d))
+    val rowsA = ra.rows.getOrElse(Map.empty[String, Long])
+    val rowsB = rb.rows.getOrElse(Map.empty[String, Long])
     val kindRank = Map("removed" -> 0, "changed" -> 1, "added" -> 2)
     val items: Seq[(String, String, Long)] =
       (da.filterNot(d => shared(d)).map(d =>

@@ -123,30 +123,28 @@ object GraftTable {
     * a satisfying row. */
   def pruneDirs(spark: SparkSession, root: String, v: Int,
       filters: Seq[Filter]): Seq[String] = {
-    val dirs = Versioned.manifest(spark, root, v)
+    val r = Versioned.record(spark, root, v)
+    val dirs = r.dirs
     if (filters.isEmpty) return dirs
-    val declared = Versioned.statsColsOf(spark, root, v)
-    val legacy = Versioned.statsColOf(spark, root, v)
-      .filter(c => Versioned.Z2.findFirstIn(c).isEmpty)
+    val declared = r.statsCols
+    val legacy = r.statsCol.filter(c => Versioned.Z2.findFirstIn(c).isEmpty)
     val bounds = boundsOf(filters).filter { case (c, _) =>
       declared.contains(c) || legacy.contains(c) }
     val zoneKeep =
       if (bounds.isEmpty) dirs
       else {
-        val m = Versioned.dirMstats(spark, root, v)
-        val st = Versioned.dirStats(spark, root, v)
         dirs.filter { d =>
           bounds.forall { case (c, (lo, hi)) =>
-            val e = if (declared.contains(c)) m.get((c, d)) else st.get(d)
+            val e = if (declared.contains(c)) r.mstats.get((c, d)) else r.stats.get(d)
             e.forall { case (a, b) => b >= lo && a <= hi }
           }
         }
       }
-    Versioned.bloomColOf(spark, root, v)
+    r.bloomCol
       .filter(bc => !bc._1.startsWith("_tok("))
       .flatMap(bc => pointsOf(filters, bc._1)) match {
         case Some(vals) =>
-          val bk = BloomIndex.pruneDirsPoint(spark, root, v, vals).toSet
+          val bk = BloomIndex.pruneDirsPoint(spark, root, r, vals).toSet
           zoneKeep.filter(bk)
         case None => zoneKeep
       }
@@ -231,9 +229,9 @@ private[io] class GraftTableRelation(override val sqlContext: SQLContext,
   }
 
   override def sizeInBytes: Long = {
-    val dirs = Versioned.manifest(spark, root, v)
-    val bytes = Versioned.dirBytes(spark, root, v)
-    if (dirs.nonEmpty && dirs.forall(bytes.contains)) dirs.map(bytes).sum
+    val r = Versioned.record(spark, root, v)
+    val bytes = r.bytes.getOrElse(Map.empty[String, Long])
+    if (r.dirs.nonEmpty && r.dirs.forall(bytes.contains)) r.dirs.map(bytes).sum
     else super.sizeInBytes
   }
 

@@ -64,12 +64,12 @@ object TextIndex {
     // BloomIndex.commitAppendBloom): a racing first declaration cannot
     // slip a different one in
     try Versioned.publish(spark, root, head => {
-      Versioned.bloomColOf(spark, root, head).foreach { case (c0, m0) =>
+      head.bloomCol.foreach { case (c0, m0) =>
         require(c0 == decl && m0 == bits,
           s"$root already keeps a bloom index on ($c0, $m0 bits); " +
             s"re-declaring ($decl, $bits) would corrupt pruning")
       }
-      (if (head == 0) Seq.empty else Versioned.manifest(spark, root, head)) :+ rel
+      head.dirs :+ rel
     },
       precomputedRows = Map(rel -> n),
       blooms = Some((decl, bits, Map(rel -> entry))), op = "append")
@@ -80,14 +80,16 @@ object TextIndex {
     }
   }
 
-  /** The dirs of version `v` whose token filter claims ALL of `terms`
-    * (`requireAll`), or ANY of them (the union probe) — absent entries
-    * conservatively kept either way — plus the indexed text column. */
-  private[io] def prunedDirs(spark: SparkSession, root: String, v: Int,
-      terms: Seq[String], requireAll: Boolean = true): (Seq[String], String) = {
+  /** The rows of the dirs of version `v` whose token filter claims ALL
+    * of `terms` (`requireAll`), or ANY of them (the union probe) —
+    * absent entries conservatively kept either way — plus the indexed
+    * text column. */
+  private def prunedRead(spark: SparkSession, root: String, v: Int,
+      terms: Seq[String], requireAll: Boolean = true): (DataFrame, String) = {
     require(terms.nonEmpty, "empty probe set")
     terms.foreach(requireTerm)
-    val (decl, bits) = Versioned.bloomColOf(spark, root, v).getOrElse(
+    val r = Versioned.record(spark, root, v)
+    val (decl, bits) = r.bloomCol.getOrElse(
       throw new IllegalArgumentException(s"$root has no token index"))
     val textCol = decl match {
       case Decl(c) => c
@@ -99,22 +101,18 @@ object TextIndex {
     val probes: Array[Array[Int]] = terms.toDF("t")
       .select(BloomIndex.positions(col("t"), bits).as("ps")).collect()
       .map(_.getSeq[Long](0).map(_.toInt).toArray)
-    val blooms = Versioned.dirBlooms(spark, root, v)
     def hits(d: String, entry: String): Boolean = {
       val bytes = BloomIndex.loadBitset(spark, root, d, entry)
       def one(ps: Array[Int]) = ps.forall(p => (bytes(p >> 3) & (1 << (p & 7))) != 0)
       if (requireAll) probes.forall(one) else probes.exists(one)
     }
-    (Versioned.manifest(spark, root, v)
-      .filter(d => blooms.get(d).forall(hits(d, _))), textCol)
+    (Versioned.readPruned(spark, root, r, r.dirs.filter(d => r.bloom.get(d).forall(hits(d, _)))),
+      textCol)
   }
 
   private def readPruned(spark: SparkSession, root: String, v: Int,
       terms: Seq[String], exact: String => Column): DataFrame = {
-    val (keep, textCol) = prunedDirs(spark, root, v, terms)
-    val base =
-      if (keep.isEmpty) Versioned.readAt(spark, root, v).limit(0)
-      else Versioned.readDirs(spark, root, v, keep)
+    val (base, textCol) = prunedRead(spark, root, v, terms)
     base.filter(exact(textCol))
   }
 
@@ -136,10 +134,7 @@ object TextIndex {
     * sets (a dir is skipped only when its filter rules out EVERY term). */
   def readTokensAny(spark: SparkSession, root: String, v: Int,
       terms: Seq[String]): DataFrame = {
-    val (keep, textCol) = prunedDirs(spark, root, v, terms, requireAll = false)
-    val base =
-      if (keep.isEmpty) Versioned.readAt(spark, root, v).limit(0)
-      else Versioned.readDirs(spark, root, v, keep)
+    val (base, textCol) = prunedRead(spark, root, v, terms, requireAll = false)
     base.filter(terms.map(t => lower(col(textCol)).rlike(wordRe(t))).reduce(_ || _))
   }
 
@@ -172,10 +167,7 @@ object TextIndex {
     val nToks = Versioned.sumAt(spark, root, v).getOrElse(
       Versioned.readAt(spark, root, v)
         .agg(sum(col(sumCol).cast("long"))).head().getLong(0)).toDouble
-    val (keep, textCol) = prunedDirs(spark, root, v, terms, requireAll = false)
-    val base =
-      if (keep.isEmpty) Versioned.readAt(spark, root, v).limit(0)
-      else Versioned.readDirs(spark, root, v, keep)
+    val (base, textCol) = prunedRead(spark, root, v, terms, requireAll = false)
     val toks = base.select(col(idCol).as("doc_id"),
       explode(graft.llm.TextOps.toks(col(textCol))).as("w"))
     graft.llm.Relevance.bm25TokensGlobal(toks, nDocs, nToks, terms)
@@ -303,9 +295,8 @@ object TextIndex {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()
     val v = Versioned.currentVersion(spark, table)
-    val dirs = Versioned.manifest(spark, table, v)
-    val entries = Versioned.dirBlooms(spark, table, v)
-    require(dirs.forall(entries.contains),
+    val r = Versioned.record(spark, table, v)
+    require(r.dirs.forall(r.bloom.contains),
       "every streamed dir must carry its token filter — no pruning decay")
     readToken(spark, table, v, "dup")
       .select(col("doc_id"), col("lang"), col("n_chars"))

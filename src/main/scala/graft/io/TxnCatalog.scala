@@ -105,7 +105,7 @@ object TxnCatalog {
     val v = Versioned.publishRecord(spark, catN,
       head => {
         require(head == 0, s"catalog $cat already exists")
-        (Seq.empty, s""","ts":${System.currentTimeMillis()}${pinsJson(pins)}""")
+        Record(1, Seq.empty, System.currentTimeMillis(), pins = pins)
       },
       abortIf = head => head >= 1)
       .getOrElse(Versioned.currentVersion(spark, catN))
@@ -119,9 +119,6 @@ object TxnCatalog {
       s"catalog $cat create raced a different table map; inspect $tf before retrying")
     v
   }
-
-  private def pinsJson(pins: Map[String, Int]): String =
-    s""","pins":{${pins.toSeq.sortBy(_._1).map { case (n, v) => s""""$n":$v""" }.mkString(",")}}"""
 
   /** The catalog's table name → root mapping. */
   def tablesOf(spark: SparkSession, cat: String): Map[String, String] = {
@@ -138,11 +135,10 @@ object TxnCatalog {
   def pinsAt(spark: SparkSession, cat: String, v: Int = -1): Map[String, Int] = {
     val catN = norm(cat)
     val at = if (v >= 1) v else Versioned.currentVersion(spark, catN)
-    val txt = Versioned.recordTextOf(spark, catN, at)
-    """"pins":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toInt).toMap
-    }.getOrElse(throw new IllegalStateException(s"catalog record $at at $cat has no pins"))
+    val pins = Versioned.record(spark, catN, at).pins
+    if (pins.isEmpty)
+      throw new IllegalStateException(s"catalog record $at at $cat has no pins")
+    pins
   }
 
   /** Consistent read of member `name`: time travel at the pinned
@@ -269,7 +265,7 @@ object TxnCatalog {
           throw new TxnConflict(
             s"another transaction already pinned '$n' at ${prev(n)} >= $v")
       }
-      (Seq.empty, s""","ts":${System.currentTimeMillis()}${pinsJson(prev ++ fresh)}""")
+      Record(head + 1, Seq.empty, System.currentTimeMillis(), pins = prev ++ fresh)
     }).get
   }
 

@@ -161,8 +161,7 @@ object VectorIndex {
       .select(col("vec_id"), col("cell"))
     val rows = batch.join(assigned, "vec_id") // payload columns ride along
     val (rels, rowsMap) = writeAssigned(spark, root, rows, centDf)
-    Versioned.publish(spark, root, h =>
-      (if (h == 0) Seq.empty else Versioned.manifest(spark, root, h)) ++ rels,
+    Versioned.publish(spark, root, _.dirs ++ rels,
       precomputedRows = rowsMap, op = "append")
   }
 
@@ -196,7 +195,8 @@ object VectorIndex {
   def optimizeCells(spark: SparkSession, root: String): Option[Int] = {
     val head0 = Versioned.currentVersion(spark, root)
     require(head0 >= 1, s"no committed version at $root")
-    val dirs0 = Versioned.manifest(spark, root, head0)
+    val h0 = Versioned.record(spark, root, head0)
+    val dirs0 = h0.dirs
     val metas = dirs0.map(d => d -> metaOf(spark, root, d))
     val withMeta = metas.collect { case (d, Some(m)) => (d, m) }
     val orphans = metas.collect { case (d, None) => d }
@@ -235,18 +235,13 @@ object VectorIndex {
         }.reduce(_.unionByName(_))
     val (rels, rowsMap) = writeAssigned(spark, root, rows, centDf)
     val foldSet = fold.toSet
-    val dv0 = Versioned.dvOf(spark, root, head0)
     val v = Versioned.publishRecord(spark, root,
       head => {
-        val dirs = Versioned.manifest(spark, root, head).filterNot(foldSet) ++ rels
-        (dirs, Versioned.extraFields(spark, root, head, dirs, None, "",
-          precomputedRows = rowsMap))
+        val ht = Versioned.record(spark, root, head)
+        Versioned.extraFields(spark, root, ht, ht.dirs.filterNot(foldSet) ++ rels, None,
+          precomputedRows = rowsMap)
       },
-      abortIf = head => head != head0 && {
-        val m = Versioned.manifest(spark, root, head).toSet
-        val dvH = Versioned.dvOf(spark, root, head)
-        !foldSet.subsetOf(m) || fold.exists(d => dvH.get(d) != dv0.get(d))
-      })
+      abortIf = head => Versioned.rewriteConflicts(spark, root, head, h0, fold))
     if (v.isEmpty && rels.nonEmpty) { // aborted: reclaim the staged fold
       val p = new org.apache.hadoop.fs.Path(
         Versioned.dataPath(root, rels.head.split("/").take(2).mkString("/")))

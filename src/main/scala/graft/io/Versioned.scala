@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Versioned tables — the lakehouse commit-log primitive a training-data
   * pipeline needs for reproducibility: "train run X read corpus version
@@ -18,8 +19,11 @@ import org.apache.spark.sql.functions._
   * "dirs":["data/<uuid>", ...], "ts":<epochMs>}` plus, when the table
   * declares a zone-map column, per-dir `"stats"` [min,max] entries
   * ([[readRange]] prunes on them before any file listing), and the
-  * `"batchId"` fence for streaming ingest.  Data dirs are write-once and
-  * never mutated or deleted by commits, so
+  * `"batchId"` fence for streaming ingest.  [[Record]] is the one
+  * definition of the format: writers build a `Record`, readers decode
+  * each version's file once ([[record]]); its on-disk shape is the one
+  * the log has always had, so every existing log reads unchanged.
+  * Data dirs are write-once and never mutated or deleted by commits, so
   *
   *  - **time travel** is just reading an old manifest's dir list;
   *  - **append is O(new data)**: [[commitAppend]] writes ONLY the new
@@ -106,7 +110,7 @@ object Versioned {
         ld.toUri, spark.sparkContext.hadoopConfiguration)
       fc.rename(tmp, headHintPath(ld),
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch { case _: Throwable => () } // a hint, never a publish failure
+    } catch { case NonFatal(_) => () } // a hint, never a publish failure
 
   private def readHeadHint(f: org.apache.hadoop.fs.FileSystem,
       ld: org.apache.hadoop.fs.Path): Int =
@@ -119,7 +123,7 @@ object Versioned {
           finally in.close()
         txt.trim.toInt
       }
-    } catch { case _: Throwable => -1 } // unreadable hint = no hint
+    } catch { case NonFatal(_) => -1 } // unreadable hint = no hint
 
   /** Highest committed version, 0 if the table has none.  Resolves via
     * the `_head` hint (O(1 + lag) probes) when one is present and its
@@ -197,70 +201,40 @@ object Versioned {
     file.contains(s"${dataPath(root, d).stripSuffix("/")}/") ||
       (!d.startsWith("/") && file.contains(s"/$d/"))
 
-  /** Raw record text of version `v` — for sibling loggers (the txn
-    * catalog) that ride this log format with their own fields. */
-  private[io] def recordTextOf(spark: SparkSession, root: String, v: Int): String =
-    recordText(spark, root, v)
-
-  private def recordText(spark: SparkSession, root: String, v: Int): String = {
-    val p = new org.apache.hadoop.fs.Path(logDir(root), f"v$v%05d.json")
-    val in = fs(spark, p).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  /** Dir list of a committed version (paths relative to the root).
-    * Version 0 is the canonical empty table (no dirs), so diffing from
-    * birth — `diff(root, 0, v)` — needs no special case. */
-  /** The record text of version `v`, None for the canonical empty v0.
-    * Every field reader parses from this ONE string — callers that need
-    * several fields of the same version (the commit path reads ~12)
-    * fetch the text once and use the `parse*` cores, paying one
-    * metadata GET instead of one per field (the difference between 1
-    * and 12 object-store round trips per commit at 100 TB). */
-  private def recOpt(spark: SparkSession, root: String, v: Int): Option[String] =
-    if (v == 0) None else Some(recordText(spark, root, v))
-
-  private def parseManifest(txt: String): Seq[String] =
-    """"dirs":\s*\[([^\]]*)\]""".r.findFirstMatchIn(txt) match {
-      case Some(m) =>
-        m.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-      case None => throw new IllegalStateException("malformed commit record")
+  /** Version `v`'s commit record, read and decoded ONCE: a caller that
+    * needs several fields of one version reads its record once and uses
+    * the fields — one metadata GET per version, not one per field (the
+    * commit path needs ~12).  Version 0 is the canonical empty table (no
+    * dirs), so diffing from birth — `diff(root, 0, v)` — needs no
+    * special case. */
+  private[io] def record(spark: SparkSession, root: String, v: Int): Record =
+    if (v == 0) Record.empty
+    else {
+      val p = new org.apache.hadoop.fs.Path(logDir(root), f"v$v%05d.json")
+      val in = fs(spark, p).open(p)
+      Record.decode(
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close())
     }
 
-  private[graft] def manifest(spark: SparkSession, root: String, v: Int): Seq[String] =
-    recOpt(spark, root, v).map(parseManifest).getOrElse(Seq.empty)
+  // One-field views of a version's record, for callers that need one.
 
-  private def parseTs(txt: String): Long =
-    """"ts":\s*(\d+)""".r.findFirstMatchIn(txt)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException("record has no ts"))
+  /** Dir list of a committed version (paths relative to the root). */
+  private[graft] def manifest(spark: SparkSession, root: String, v: Int): Seq[String] =
+    record(spark, root, v).dirs
 
   /** Commit-time wall clock of a version (epoch ms, monotone along the
     * log: a commit stamps max(now, parent's ts)). */
   private[graft] def tsOf(spark: SparkSession, root: String, v: Int): Long =
-    parseTs(recordText(spark, root, v))
+    record(spark, root, v).ts
 
-  /** Schema-evolution entries at version `v`: (column, SQL type, the
-    * data dirs that PREDATE the column and must be null-filled on read).
-    * Encoded in the record as `"alters":{"col|type":"dir1,dir2",...}`
-    * and copied verbatim by every later commit; entries referencing
-    * dirs no longer in a manifest are inert (reads intersect with the
-    * manifest), so compaction naturally retires them. */
-  private[graft] def altersOf(spark: SparkSession, root: String, v: Int): Seq[(String, String, Set[String])] =
-    recOpt(spark, root, v).toSeq.flatMap(parseAlters)
-
-  private def parseAlters(txt: String): Seq[(String, String, Set[String])] =
-    parseAltersFrag(txt).toSeq.flatMap { frag =>
-      """"([^"|]+)\|([^"]+)":"([^"]*)"""".r.findAllMatchIn(frag).map(m =>
-        (m.group(1), m.group(2), m.group(3).split(",").filter(_.nonEmpty).toSet))
-    }
-
-  private def parseAltersFrag(txt: String): Option[String] =
-    """"alters":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  private[io] def altersFragOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseAltersFrag)
+  /** Schema-evolution events at version `v`, in commit order: (column,
+    * SQL type / `#drop` / `#rename`, the data dirs that PREDATE the event
+    * — null-filled, projected out or renamed on read).  Copied verbatim
+    * by every later commit; entries referencing dirs no longer in a
+    * manifest are inert (reads intersect with the manifest), so
+    * compaction naturally retires them. */
+  private[io] def altersOf(spark: SparkSession, root: String, v: Int): Seq[Record.Alter] =
+    record(spark, root, v).alters
 
   /** Rename events recorded at version `v` as `(old, new)` pairs, in
     * commit order (chains `a>b` then `b>c` compose by folding) — how a
@@ -271,145 +245,67 @@ object Versioned {
     altersOf(spark, root, v).collect { case (n, "#rename", _) =>
       val i = n.indexOf('>'); (n.substring(0, i), n.substring(i + 1)) }
 
-  private def parseStatsCol(txt: String): Option[String] =
-    """"statsCol":\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-
   /** The table's designated zone-map column, if any version declared one. */
   private[graft] def statsColOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseStatsCol)
-
-  private def parseDirStats(txt: String): Map[String, (Long, Long)] =
-    """"stats":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> (x.group(2).toLong, x.group(3).toLong)).toMap
-    }.getOrElse(Map.empty)
+    record(spark, root, v).statsCol
 
   /** Per-dir [min,max] zone map of the stats column at version `v`. */
   private[graft] def dirStats(spark: SparkSession, root: String, v: Int): Map[String, (Long, Long)] =
-    recOpt(spark, root, v).map(parseDirStats).getOrElse(Map.empty)
-
-  private def parseStatsCols(txt: String): Seq[String] =
-    """"statsCols":\s*"([^"]*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1).split(",").filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
+    record(spark, root, v).stats
 
   /** The table's declared MULTI-COLUMN zone-map columns at version `v`
     * (see [[commitDeclareStatsCols]]) — independent of (and composable
     * with) the single clustered [[statsColOf]] column. */
   private[graft] def statsColsOf(spark: SparkSession, root: String, v: Int): Seq[String] =
-    recOpt(spark, root, v).map(parseStatsCols).getOrElse(Seq.empty)
-
-  private def parseMstats(txt: String): Map[(String, String), (Long, Long)] =
-    """"mstats":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"|]+)\|([^"]+)":\[(-?\d+),(-?\d+)\]""".r.findAllMatchIn(m.group(1))
-        .map(x => (x.group(1), x.group(2)) -> (x.group(3).toLong, x.group(4).toLong))
-        .toMap
-    }.getOrElse(Map.empty)
+    record(spark, root, v).statsCols
 
   /** Per-(column, dir) [min,max] entries of the multi-column zone map at
     * version `v` (a (col, dir) pair with no entry is conservatively
     * read by [[readRangeAll]]). */
   private[graft] def dirMstats(spark: SparkSession, root: String,
       v: Int): Map[(String, String), (Long, Long)] =
-    recOpt(spark, root, v).map(parseMstats).getOrElse(Map.empty)
-
-  private def parseBloomCol(txt: String): Option[(String, Int)] =
-    """"bloomCol":\s*"([^"]+)","bloomBits":\s*(\d+)""".r
-      .findFirstMatchIn(txt).map(m => (m.group(1), m.group(2).toInt))
+    record(spark, root, v).mstats
 
   /** The table's bloom-index column and filter size in bits, if any
     * version declared one (see [[BloomIndex]]). */
   private[graft] def bloomColOf(spark: SparkSession, root: String, v: Int): Option[(String, Int)] =
-    recOpt(spark, root, v).flatMap(parseBloomCol)
-
-  private def parseDirBlooms(txt: String): Map[String, String] =
-    """"bloom":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":"([^"]*)"""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2)).toMap
-    }.getOrElse(Map.empty)
+    record(spark, root, v).bloomCol
 
   /** Per-dir base64 bloom bitsets at version `v` (a dir with no entry is
     * conservatively read by [[BloomIndex.readPoint]]). */
   private[graft] def dirBlooms(spark: SparkSession, root: String, v: Int): Map[String, String] =
-    recOpt(spark, root, v).map(parseDirBlooms).getOrElse(Map.empty)
-
-  private def parseDirRows(txt: String): Map[String, Long] =
-    """"rows":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  private def parseDirBytes(txt: String): Map[String, Long] =
-    """"bytes":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  /** Per-dir on-disk bytes at version `v` (absent for dirs committed
-    * before this field existed — sizing callers then decline). */
-  private[graft] def dirBytes(spark: SparkSession, root: String, v: Int): Map[String, Long] =
-    recOpt(spark, root, v).map(parseDirBytes).getOrElse(Map.empty)
+    record(spark, root, v).bloom
 
   /** Per-dir row counts at version `v` (absent for dirs committed before
     * this field existed — callers fall back to scanning those). */
   private[graft] def dirRows(spark: SparkSession, root: String, v: Int): Map[String, Long] =
-    recOpt(spark, root, v).map(parseDirRows).getOrElse(Map.empty)
+    record(spark, root, v).rows.getOrElse(Map.empty)
 
   /** Merge-on-read DELETION VECTORS at version `v`: per data dir, the
     * delete-sidecar dirs whose (file, row position) pairs are
-    * anti-joined out on every read of that dir — encoded as
-    * `"dv":{"dir":"side1,side2",...}`.  Entries are scoped to the dir
-    * they delete from, so any commit that REPLACES or folds a dir
-    * (CoW update, MERGE, compaction, OPTIMIZE) retires its vectors for
-    * free: the rewrite reads DV-applied content and the new dir starts
-    * clean.  See [[commitDeleteMOR]]. */
+    * anti-joined out on every read of that dir.  Entries are scoped to
+    * the dir they delete from, so any commit that REPLACES or folds a
+    * dir (CoW update, MERGE, compaction, OPTIMIZE) retires its vectors
+    * for free: the rewrite reads DV-applied content and the new dir
+    * starts clean.  See [[commitDeleteMOR]]. */
   private[graft] def dvOf(spark: SparkSession, root: String, v: Int): Map[String, Seq[String]] =
-    recOpt(spark, root, v).map(parseDv).getOrElse(Map.empty)
-
-  private def parseDv(txt: String): Map[String, Seq[String]] =
-    """"dv":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":"([^"]*)"""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).split(",").filter(_.nonEmpty).toSeq).toMap
-    }.getOrElse(Map.empty)
-
-  private def parseDvRows(txt: String): Map[String, Long] =
-    """"dvRows":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
+    record(spark, root, v).dv
 
   /** Per data dir, how many rows its deletion vectors remove — so
     * [[countAt]]/[[history]] stay metadata-only under MOR deletes. */
   private[graft] def dvRowsOf(spark: SparkSession, root: String, v: Int): Map[String, Long] =
-    recOpt(spark, root, v).map(parseDvRows).getOrElse(Map.empty)
-
-  private def parseSumCol(txt: String): Option[String] =
-    """"sumCol":\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
+    record(spark, root, v).dvRows
 
   /** The table's declared metadata-SUM column, if any version declared
     * one (see [[commitDeclareSum]]). */
   private[graft] def sumColOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseSumCol)
-
-  private def parseDirSums(txt: String): Map[String, Long] =
-    """"sums":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(-?\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  /** Per-dir exact long sums of the declared sum column at version `v`
-    * (a dir with no entry voids the metadata answer — see [[sumAt]]). */
-  private[graft] def dirSums(spark: SparkSession, root: String, v: Int): Map[String, Long] =
-    recOpt(spark, root, v).map(parseDirSums).getOrElse(Map.empty)
-
-  private def parseSumVoid(txt: String): Set[String] =
-    """"sumsVoid":\s*"([^"]*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1).split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+    record(spark, root, v).sumCol
 
   /** Dirs marked UNSUMMABLE (all-null column, failed cast, pre-alter
     * generation): recorded so later commits never re-scan them — the
     * void marker is metadata like the sums themselves. */
   private[graft] def sumVoidOf(spark: SparkSession, root: String, v: Int): Set[String] =
-    recOpt(spark, root, v).map(parseSumVoid).getOrElse(Set.empty)
+    record(spark, root, v).sumsVoid
 
   /** `SELECT count(*)` at version `v` from manifest METADATA — zero data
     * or footer I/O for dirs whose commit recorded a row count (every
@@ -421,11 +317,10 @@ object Versioned {
     * metadata side (each dir's dvRows entry was measured against its
     * LIVE rows at delete time, so the arithmetic is exact). */
   def countAt(spark: SparkSession, root: String, v: Int): Long = {
-    val known = dirRows(spark, root, v)
-    val dirs = manifest(spark, root, v)
-    val (have, missing) = dirs.partition(known.contains)
-    val deleted = dvRowsOf(spark, root, v)
-    have.map(known).sum - dirs.flatMap(deleted.get).sum +
+    val r = record(spark, root, v)
+    val known = r.rows.getOrElse(Map.empty[String, Long])
+    val (have, missing) = r.dirs.partition(known.contains)
+    have.map(known).sum - r.dirs.flatMap(r.dvRows.get).sum +
       (if (missing.isEmpty) 0L
        else readParquetDirs(spark, missing.map(dataPath(root, _))).count())
   }
@@ -437,33 +332,33 @@ object Versioned {
     * users).  All-null dirs carry no entry, matching SQL min/max
     * null-ignoring semantics conservatively. */
   def statsRangeAt(spark: SparkSession, root: String, v: Int): Option[(Long, Long)] = {
-    val sc = statsColOf(spark, root, v)
+    val r = record(spark, root, v)
+    val sc = r.statsCol
     if (sc.isEmpty || Z2.findFirstIn(sc.get).nonEmpty) return None
     // deletion vectors make per-dir [min,max] a conservative ENVELOPE
     // (sound for pruning, wrong as an exact answer: the extremum row may
     // be deleted) — fall back to the scan while any vector is live
-    if (dvOf(spark, root, v).nonEmpty) return None
-    val st = dirStats(spark, root, v)
-    val dirs = manifest(spark, root, v)
+    if (r.dv.nonEmpty) return None
+    val st = r.stats
+    val dirs = r.dirs
     // an alters generation mentioning the column voids the exact answer:
     // pre-generation dirs may physically carry values that are not the
     // column's logical content (drop-then-re-add), so a recorded extremum
     // could be stale even though range PRUNING on it stays row-safe
-    if (alterMentions(spark, root, v, sc.get, dirs)) return None
+    if (alterMentions(r, sc.get)) return None
     if (dirs.isEmpty || !dirs.forall(st.contains)) None
     else Some((dirs.map(st(_)._1).min, dirs.map(st(_)._2).max))
   }
 
-  /** Does any schema-evolution generation at `v` mention `colName` over
-    * a dir still in the manifest?  If so the column's physical bytes in
+  /** Does any schema-evolution generation of `r` mention `colName` over
+    * a dir still in its manifest?  If so the column's physical bytes in
     * those dirs are not its logical values, and every exact metadata
     * aggregate on the column must decline. */
-  private def alterMentions(spark: SparkSession, root: String, v: Int,
-      colName: String, dirs: Seq[String]): Boolean = {
-    val ds = dirs.toSet
+  private def alterMentions(r: Record, colName: String): Boolean = {
+    val ds = r.dirs.toSet
     // rename generations don't count: their carried entries are valid
     // verbatim (same bytes, new name) — see the extraFields taint rule
-    altersOf(spark, root, v).exists { case (evCol, ty, touched) =>
+    r.alters.exists { case (evCol, ty, touched) =>
       ty != "#rename" && evCol == colName && touched.exists(ds) }
   }
 
@@ -477,14 +372,15 @@ object Versioned {
     * every declared column. */
   def statsRangeOn(spark: SparkSession, root: String, v: Int,
       colName: String): Option[(Long, Long)] = {
-    if (!statsColsOf(spark, root, v).contains(colName)) return None
-    if (dvOf(spark, root, v).nonEmpty) return None
-    val m = dirMstats(spark, root, v)
-    val dirs = manifest(spark, root, v)
+    val r = record(spark, root, v)
+    if (!r.statsCols.contains(colName)) return None
+    if (r.dv.nonEmpty) return None
+    val m = r.mstats
+    val dirs = r.dirs
     // see statsRangeAt: alters generations void the exact answer (the
     // commit path also refuses to measure such dirs, so this guard is
     // belt-and-braces for records written before that discipline)
-    if (alterMentions(spark, root, v, colName, dirs)) return None
+    if (alterMentions(r, colName)) return None
     if (dirs.isEmpty || !dirs.forall(d => m.contains((colName, d)))) None
     else Some((dirs.map(d => m((colName, d))._1).min,
       dirs.map(d => m((colName, d))._2).max))
@@ -549,10 +445,6 @@ object Versioned {
     }.toMap
   }
 
-  /** The record fields beyond `dirs`: the monotone commit timestamp plus
-    * — when this table keeps a zone map — the stats column and per-dir
-    * [min,max] entries (parent entries reused verbatim for carried dirs,
-    * computed only for new ones). */
   /** Schema of one IMMUTABLE data dir, cached for the JVM's lifetime.
     * Data dirs are write-once by the layout contract (never mutated;
     * vacuum deletes whole dirs, after which nothing reads them), so a
@@ -739,23 +631,25 @@ object Versioned {
       sums.toMap ++ obsSums))
   }
 
-  private[io] def extraFields(spark: SparkSession, root: String, head: Int,
-      dirs: Seq[String], statsCol: Option[String], more: String = "",
+  /** The record a commit publishes over `dirs`, given its parent record
+    * `ht` (the head it lands on): the monotone commit timestamp, and
+    * every carried field — zone maps, row counts, bytes, sums, blooms,
+    * alters, checks, policy, deletion vectors — with parent entries
+    * reused verbatim for carried dirs and only new dirs measured.  The
+    * arguments override or extend what the parent carries. */
+  private[io] def extraFields(spark: SparkSession, root: String, ht: Record,
+      dirs: Seq[String], statsCol: Option[String],
       precomputed: Map[String, (Long, Long)] = Map.empty,
-      alters: Option[String] = None,
+      alters: Option[Seq[Record.Alter]] = None,
       precomputedRows: Map[String, Long] = Map.empty,
       blooms: Option[(String, Int, Map[String, String])] = None,
       dvAdd: Map[String, (Seq[String], Long)] = Map.empty,
       sumCol: Option[String] = None,
-      checksArg: Option[String] = None,
+      checksArg: Option[Seq[(String, String)]] = None,
       statsColsArg: Option[Seq[String]] = None,
       suppressSum: Boolean = false,
       opArg: String = "",
-      policyArg: Option[String] = None): String = {
-    // ONE metadata read of the head record serves every carried field
-    // below (12 reads collapsed to 1 — on an object store that is the
-    // difference between 1 and 12 GETs per commit)
-    val ht = recOpt(spark, root, head)
+      policyArg: Option[MaintenancePolicy] = None): Record = {
     // dirs whose PHYSICAL parquet bytes for a column are not its LOGICAL
     // values: any dir listed in an alters generation mentioning the
     // column (add → null-filled on read; drop-then-re-add → the pre-drop
@@ -768,10 +662,8 @@ object Versioned {
     // bytes ARE the new name's logical values (mapped forward on read),
     // and the rename commit carries the old entries verbatim — only
     // add (null-fill) and drop (dead bytes) generations lie
-    val altNullFrag = alters.orElse(ht.flatMap(parseAltersFrag))
-    val altNull: Map[String, Set[String]] = altNullFrag
-      .map(f => parseAlters(s"""{"alters":{$f}}"""))
-      .getOrElse(Seq.empty)
+    val altersR = alters.getOrElse(ht.alters)
+    val altNull: Map[String, Set[String]] = altersR
       .flatMap { case (evCol, ty, ds) =>
         if (ty == "#rename") Seq.empty else Seq(evCol -> ds) }
       .groupBy(_._1).map { case (c, es) => c -> es.flatMap(_._2).toSet }
@@ -779,10 +671,9 @@ object Versioned {
       val phys = c match { case Z2(x, y, _) => Seq(x, y); case _ => Seq(c) }
       phys.exists(pc => altNull.getOrElse(pc, Set.empty).contains(d))
     }
-    val parentSc = ht.flatMap(parseStatsCol)
+    val parentSc = ht.statsCol
     val sc = statsCol.orElse(parentSc)
-    val ts = math.max(System.currentTimeMillis(),
-      ht.map(parseTs).getOrElse(0L))
+    val ts = math.max(System.currentTimeMillis(), ht.ts)
     // ---- need-lists for every measured field, computed up front so ONE
     // fused job (measureNewDirs) serves them all; each field keeps its
     // legacy per-field job as the fallback when file→dir attribution
@@ -794,48 +685,42 @@ object Versioned {
       // dirs by the wrong values — silently losing rows); instead each
       // carried dir is re-measured or, lacking the new column, left
       // entry-less and read conservatively
-      if (parentSc.forall(_ == c)) ht.map(parseDirStats).getOrElse(Map.empty)
-      else Map.empty[String, (Long, Long)]
+      if (parentSc.forall(_ == c)) ht.stats else Map.empty[String, (Long, Long)]
     }.getOrElse(Map.empty)
     val scNeed: Seq[String] = sc.toSeq.flatMap { c =>
       dirs.filter(d => !logicallyNull(c, d) && !scParent.contains(d) &&
         !precomputed.contains(d))
     }
-    val mcols = statsColsArg.getOrElse(ht.map(parseStatsCols).getOrElse(Seq.empty))
-    val parentM = ht.map(parseMstats).getOrElse(Map.empty[(String, String), (Long, Long)])
+    val mcols = statsColsArg.getOrElse(ht.statsCols)
+    val parentM = ht.mstats
     val mcolNeed: Map[String, Seq[String]] = mcols.map(c =>
       c -> dirs.filterNot(d => parentM.contains((c, d)) || logicallyNull(c, d)))
       .filter(_._2.nonEmpty).toMap
-    val parentRows = ht.map(parseDirRows).getOrElse(Map.empty[String, Long])
+    val parentRows = ht.rows.getOrElse(Map.empty[String, Long])
     val missing = dirs.filterNot(d =>
       parentRows.contains(d) || precomputedRows.contains(d))
-    val sumColR = if (suppressSum) None else sumCol.orElse(ht.flatMap(parseSumCol))
-    val parentSums = ht.map(parseDirSums).getOrElse(Map.empty[String, Long])
-    val parentVoid = ht.map(parseSumVoid).getOrElse(Set.empty[String])
+    val sumColR = if (suppressSum) None else sumCol.orElse(ht.sumCol)
     val missingSum: Seq[String] = sumColR.toSeq.flatMap(mc =>
       dirs.filterNot(d =>
-        parentSums.contains(d) || parentVoid(d) || logicallyNull(mc, d)))
+        ht.sums.contains(d) || ht.sumsVoid(d) || logicallyNull(mc, d)))
     // the fused pass: per-column need lists merged (the clustered
     // statsCol may also be a declared statsCols member)
     val statNeed: Map[String, Seq[String]] =
       (sc.toSeq.map(c => c -> scNeed) ++ mcolNeed.toSeq)
         .groupBy(_._1).map { case (c, es) => c -> es.flatMap(_._2).distinct }
     val fused = measureNewDirs(spark, root, missing, statNeed, sumColR, missingSum)
-    val statsJson = sc.map { c =>
+    val stats: Map[String, (Long, Long)] = sc.map { c =>
       val freshSc: String => Option[(Long, Long)] = fused match {
         case Some(m) => d => m.stats.get((c, d))
         case None    => d => statsFor(spark, root, d, c)
       }
-      val entries = dirs.flatMap { d =>
+      dirs.flatMap { d =>
         // an alter-mentioned dir's physical bytes are not its logical
         // values: no entry (conservative read), never a stale measure
         if (logicallyNull(c, d)) None
-        else scParent.get(d).orElse(precomputed.get(d))
-          .orElse(freshSc(d))
-          .map { case (lo, hi) => s""""$d":[$lo,$hi]""" }
-      }
-      s""","statsCol":"$c","stats":{${entries.mkString(",")}}"""
-    }.getOrElse("")
+        else scParent.get(d).orElse(precomputed.get(d)).orElse(freshSc(d)).map(d -> _)
+      }.toMap
+    }.getOrElse(Map.empty)
     // MULTI-COLUMN zone map: entries are keyed (column, dir), so a
     // re-declaration that adds a column reuses the carried columns'
     // entries verbatim and measures only the new column; a dropped
@@ -844,7 +729,7 @@ object Versioned {
     // never a job per dir — which is what keeps the map live across
     // EVERY rewrite path (CoW, MERGE, compaction, OPTIMIZE) for free:
     // they all publish through here.
-    val mstatsJson = if (mcols.isEmpty) "" else {
+    val mstats: Map[(String, String), (Long, Long)] = if (mcols.isEmpty) Map.empty else {
       val fresh: Map[(String, String), (Long, Long)] = fused match {
         case Some(m) => mcolNeed.keys.flatMap(c =>
           mcolNeed(c).flatMap(d => m.stats.get((c, d)).map((c, d) -> _))).toMap
@@ -852,12 +737,11 @@ object Versioned {
           mstatsForCol(spark, root, mcolNeed(c), c)
             .map { case (d, e) => (c, d) -> e }).toMap
       }
-      val entries = for {
+      (for {
         c <- mcols; d <- dirs
         if !logicallyNull(c, d) // drop-then-re-add: stale physical bytes
         e <- parentM.get((c, d)).orElse(fresh.get((c, d)))
-      } yield s""""$c|$d":[${e._1},${e._2}]"""
-      s""","statsCols":"${mcols.mkString(",")}","mstats":{${entries.mkString(",")}}"""
+      } yield (c, d) -> e).toMap
     }
     // per-dir row counts: parent entries carried verbatim, only new or
     // rewritten dirs counted — ALL missing dirs in the fused job (per-
@@ -880,109 +764,77 @@ object Versioned {
             d -> perFile.filter(fc => fileInDir(root, fc._1, d)).map(_._2).sum).toMap
         }
     }
-    val rowEntries = dirs.map { d =>
-      val n = parentRows.get(d).orElse(precomputedRows.get(d))
-        .getOrElse(counted.getOrElse(d, 0L)) // no files = an empty dir
-      s""""$d":$n"""
-    }
-    val rowsJson = s""","rows":{${rowEntries.mkString(",")}}"""
+    val rows = dirs.map(d => d -> parentRows.get(d).orElse(precomputedRows.get(d))
+      .getOrElse(counted.getOrElse(d, 0L))).toMap // no files = an empty dir
     // per-dir on-disk BYTES: parent entries carried verbatim, new dirs
     // measured with one driver-side content summary each (no Spark job)
     // — the accurate size feed for readAt's broadcast sizing, where a
     // schema-width guess would under-estimate wide text rows into a
     // forced-broadcast OOM
-    val parentBytes = ht.map(parseDirBytes).getOrElse(Map.empty[String, Long])
-    val byteEntries = dirs.map { d =>
-      val n = parentBytes.get(d).getOrElse(
-        try fs(spark, new org.apache.hadoop.fs.Path(dataPath(root, d)))
-          .getContentSummary(new org.apache.hadoop.fs.Path(dataPath(root, d))).getLength
-        catch { case _: java.io.FileNotFoundException => 0L })
-      s""""$d":$n"""
-    }
-    val bytesJson = s""","bytes":{${byteEntries.mkString(",")}}"""
+    val parentBytes = ht.bytes.getOrElse(Map.empty[String, Long])
+    val bytes = dirs.map { d =>
+      d -> parentBytes.getOrElse(d, {
+        val p = new org.apache.hadoop.fs.Path(dataPath(root, d))
+        try fs(spark, p).getContentSummary(p).getLength
+        catch { case _: java.io.FileNotFoundException => 0L }
+      })
+    }.toMap
     // metadata sums: parent entries carried verbatim for carried dirs;
     // new or rewritten dirs measured in the fused job.  A dir is
     // entry-less when the column is absent (pre-alter generation), any
     // non-null value fails the long cast, or every row is null — sumAt
-    // then falls back to the scan, never answers wrong.
-    val sumJson = sumColR.map { mc =>
+    // then falls back to the scan, never answers wrong.  A dir that
+    // measured unsummable is marked VOID so no later commit ever
+    // re-scans it (the probe is a data read, not a footer read).
+    val (sums, sumsVoid) = sumColR.map { mc =>
       val fresh: Map[String, Long] = fused match {
         case Some(m) => missingSum.flatMap(d => m.sums.get(d).map(d -> _)).toMap
         case None =>
           if (missingSum.isEmpty) Map.empty[String, Long]
           else sumsFor(spark, root, missingSum, mc)
       }
-      val entries = dirs.flatMap(d =>
+      (dirs.flatMap(d =>
         if (logicallyNull(mc, d)) None // stale physical bytes: no entry
-        else parentSums.get(d).orElse(fresh.get(d)).map(n => s""""$d":$n"""))
-      // a dir that measured unsummable is marked VOID so no later commit
-      // ever re-scans it (the probe is a data read, not a footer read)
-      val void = dirs.filter(d =>
-        parentVoid(d) || (missingSum.contains(d) && !fresh.contains(d)))
-      val voidJson =
-        if (void.isEmpty) "" else s""","sumsVoid":"${void.sorted.mkString(",")}""""
-      s""","sumCol":"$mc","sums":{${entries.mkString(",")}}$voidJson"""
-    }.getOrElse("")
+        else ht.sums.get(d).orElse(fresh.get(d)).map(d -> _)).toMap,
+        dirs.filter(d => ht.sumsVoid(d) ||
+          (missingSum.contains(d) && !fresh.contains(d))).toSet)
+    }.getOrElse((Map.empty[String, Long], Set.empty[String]))
     // bloom index: parent entries carried for carried dirs; new dirs get
     // entries from the bloom-aware ingest paths AND from every rewrite/
     // fold/clustered path (bloomsForStaged / bloomForDir), so the index
     // survives CoW/MERGE/OPTIMIZE churn; only plain appends leave their
     // dirs entry-less (absent = read conservatively, so they compose —
     // they just don't prune)
-    val parentBloomDecl = ht.flatMap(parseBloomCol)
-    val bloomJson = blooms.orElse(
-        parentBloomDecl.map { case (c, m) => (c, m, Map.empty[String, String]) })
-      .map { case (c, m, fresh) =>
-        // parent entries are only reusable under the SAME (column, bits)
-        // declaration — a mismatched carry would probe old bitsets with
-        // the wrong hashes (false pruning = lost rows), the exact trap
-        // the stats path already guards
-        val parent =
-          if (parentBloomDecl.forall(_ == ((c, m)))) ht.map(parseDirBlooms).getOrElse(Map.empty)
-          else Map.empty[String, String]
-        val entries = dirs.flatMap(d =>
-          parent.get(d).orElse(fresh.get(d)).map(b => s""""$d":"$b""""))
-        s""","bloomCol":"$c","bloomBits":$m,"bloom":{${entries.mkString(",")}}"""
-      }.getOrElse("")
-    // schema-evolution entries ride along verbatim on every commit
-    val altersJson = alters.orElse(ht.flatMap(parseAltersFrag))
-      .map(a => s""","alters":{$a}""").getOrElse("")
-    // the persisted ingest contract rides along the same way
-    val checksJson = checksArg.orElse(ht.flatMap(parseChecksFrag))
-      .map(c => s""","checks":{$c}""").getOrElse("")
-    // the declared maintenance policy rides along the same way — every
-    // commit carries it, so a parameterless maintain() always sees it
-    val policyJson = policyArg.orElse(ht.flatMap(parsePolicyFrag))
-      .map(p => s""","policy":{$p}""").getOrElse("")
+    val bloomDecl = blooms.map(b => (b._1, b._2)).orElse(ht.bloomCol)
+    val bloom: Map[String, String] = bloomDecl.map { decl =>
+      // parent entries are only reusable under the SAME (column, bits)
+      // declaration — a mismatched carry would probe old bitsets with
+      // the wrong hashes (false pruning = lost rows), the exact trap
+      // the stats path already guards
+      val parent = if (ht.bloomCol.forall(_ == decl)) ht.bloom else Map.empty[String, String]
+      blooms.map(_._3).getOrElse(Map.empty) ++ parent
+    }.getOrElse(Map.empty)
     // deletion vectors: parent entries carried for carried dirs (a
     // replaced/folded dir's entries drop WITH the dir — the rewrite read
     // DV-applied content, so its vectors are retired, not lost), plus the
     // new sidecars a commitDeleteMOR contributes via dvAdd
-    val parentDv = ht.map(parseDv).getOrElse(Map.empty[String, Seq[String]])
-    val parentDvRows = ht.map(parseDvRows).getOrElse(Map.empty[String, Long])
-    val dvEntries = dirs.flatMap { d =>
-      val sides = parentDv.getOrElse(d, Seq.empty) ++
-        dvAdd.get(d).map(_._1).getOrElse(Seq.empty)
-      if (sides.isEmpty) None
-      else Some((d, sides,
-        parentDvRows.getOrElse(d, 0L) + dvAdd.get(d).map(_._2).getOrElse(0L)))
-    }
-    val dvJson =
-      if (dvEntries.isEmpty) ""
-      else {
-        val e = dvEntries.map { case (d, s, _) => s""""$d":"${s.mkString(",")}"""" }
-        val n = dvEntries.map { case (d, _, k) => s""""$d":$k""" }
-        s""","dv":{${e.mkString(",")}},"dvRows":{${n.mkString(",")}}"""
-      }
-    // the OPERATION label (DESCRIBE HISTORY parity): stamped per commit,
+    val dvDirs = dirs.filter(d => ht.dv.contains(d) || dvAdd.contains(d))
+    // the OPERATION label (DESCRIBE HISTORY parity) is stamped per commit,
     // deliberately NOT carried from the parent — each record names what
-    // produced IT; replay records (restore/clone) stamp their own
-    val opJson = if (opArg.isEmpty) "" else s""","op":"$opArg""""
-    s""","ts":$ts$opJson$statsJson$mstatsJson$rowsJson$bytesJson$sumJson$bloomJson$altersJson$checksJson$policyJson$dvJson$more"""
+    // produced IT; replay records (restore/clone) stamp their own.
+    // Alters, checks and the maintenance policy ride along verbatim, so
+    // a parameterless maintain() always sees the declared policy.
+    Record(ht.version + 1, dirs, ts, op = Some(opArg).filter(_.nonEmpty),
+      statsCol = sc, stats = stats, statsCols = mcols, mstats = mstats,
+      rows = Some(rows), bytes = Some(bytes),
+      sumCol = sumColR, sums = sums, sumsVoid = sumsVoid,
+      bloomCol = bloomDecl, bloom = bloom, alters = altersR,
+      checks = checksArg.getOrElse(ht.checks), policy = policyArg.orElse(ht.policy),
+      dv = dvDirs.map(d => d -> (ht.dv.getOrElse(d, Seq.empty) ++
+        dvAdd.get(d).map(_._1).getOrElse(Seq.empty))).toMap,
+      dvRows = dvDirs.map(d => d -> (ht.dvRows.getOrElse(d, 0L) +
+        dvAdd.get(d).map(_._2).getOrElse(0L))).toMap)
   }
-
-  private def parseOp(txt: String): Option[String] =
-    """"op":\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
 
   /** A table's declared maintenance knobs ([[commitDeclarePolicy]]) —
     * what a parameterless [[maintain]] resolves before falling back to
@@ -990,22 +842,10 @@ object Versioned {
   final case class MaintenancePolicy(smallRows: Long, targetRows: Long,
       buckets: Int, maxCover: Int, maxDvFraction: Double)
 
-  private def parsePolicyFrag(txt: String): Option[String] =
-    """"policy":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-
   /** The declared maintenance policy at version `v`, if any. */
   private[graft] def policyOf(spark: SparkSession, root: String,
       v: Int): Option[MaintenancePolicy] =
-    recOpt(spark, root, v).flatMap(parsePolicyFrag).map { f =>
-      def num(k: String): Option[String] =
-        (s""""$k":\\s*(-?[0-9.]+)""").r.findFirstMatchIn(f).map(_.group(1))
-      MaintenancePolicy(
-        num("smallRows").map(_.toLong).getOrElse(0L),
-        num("targetRows").map(_.toLong).getOrElse(0L),
-        num("buckets").map(_.toInt).getOrElse(16),
-        num("maxCover").map(_.toInt).getOrElse(2),
-        num("maxDvFraction").map(_.toDouble).getOrElse(0.3))
-    }
+    record(spark, root, v).policy
 
   /** Declare the table's MAINTENANCE POLICY: the [[maintain]] knobs
     * (`smallRows`/`targetRows` small-dir folding, `buckets`/`maxCover`
@@ -1032,33 +872,17 @@ object Versioned {
         s"bad policy: buckets=$buckets maxCover=$maxCover")
       require(maxDvFraction >= 0.0 && maxDvFraction <= 1.0,
         s"bad policy: maxDvFraction=$maxDvFraction")
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        policyArg = Some(
-          s""""smallRows":$smallRows,"targetRows":$targetRows,""" +
-            s""""buckets":$buckets,"maxCover":$maxCover,""" +
-            s""""maxDvFraction":$maxDvFraction"""),
-        opArg = "declare"))
+      val ht = record(spark, root, head)
+      extraFields(spark, root, ht, ht.dirs, None,
+        policyArg = Some(MaintenancePolicy(smallRows, targetRows, buckets,
+          maxCover, maxDvFraction)),
+        opArg = "declare")
     }).get
-
-  /** The commit's operation label at version `v` (absent for records
-    * written before labels existed, and for paths that stamp none). */
-  private[graft] def opOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseOp)
-
-  private def parseChecksFrag(txt: String): Option[String] =
-    """"checks":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  private def checksFragOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseChecksFrag)
 
   /** The persisted CHECK constraints at version `v`: (name, SQL boolean
     * expression), in declaration order. */
   private[graft] def checksOf(spark: SparkSession, root: String, v: Int): Seq[(String, String)] =
-    checksFragOf(spark, root, v).toSeq.flatMap { frag =>
-      """"([^"]+)":"([^"]*)"""".r.findAllMatchIn(frag)
-        .map(m => (m.group(1), m.group(2))).toSeq
-    }
+    record(spark, root, v).checks
 
   /** Exact long sums of `colName` per dir, all missing dirs in ONE
     * narrow-column job (per-file partials grouped driver-side, the row
@@ -1100,17 +924,16 @@ object Versioned {
     * zero data I/O.  Declare on exact long measures (counts, scaled
     * integers); the entries sum with plain long arithmetic. */
   def commitDeclareSum(spark: SparkSession, root: String, colName: String): Int = {
-    require(!colName.contains("\"") && !colName.contains("\\"),
-      s"unsupported characters in column name $colName")
+    requireColName(colName)
     publishRecord(spark, root, head => {
       require(head > 0, s"no committed version at $root")
-      sumColOf(spark, root, head).foreach(c0 =>
+      val ht = record(spark, root, head)
+      ht.sumCol.foreach(c0 =>
         require(c0 == colName,
           s"$root already keeps metadata sums on $c0; " +
             s"re-declaring $colName would corrupt carried entries"))
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        sumCol = Some(colName), opArg = "declare"))
+      extraFields(spark, root, ht, ht.dirs, None,
+        sumCol = Some(colName), opArg = "declare")
     }).get
   }
 
@@ -1136,19 +959,16 @@ object Versioned {
       cols: Seq[String]): Int = {
     require(cols.nonEmpty, "declare at least one zone-map column")
     require(cols.distinct == cols, s"duplicate zone-map columns in $cols")
-    cols.foreach(c => require(
-      !c.contains("\"") && !c.contains("\\") && !c.contains("|") && !c.contains(","),
-      s"unsupported characters in column name $c"))
     cols.foreach(c => require(Z2.findFirstIn(c).isEmpty,
       s"Morton pseudo-columns belong to the clustered map (statsCol), not statsCols"))
+    cols.foreach(requireColName)
     publishRecord(spark, root, head => {
       require(head > 0, s"no committed version at $root")
-      val prior = statsColsOf(spark, root, head)
-      require(prior.forall(cols.contains),
-        s"$root already keeps zone maps on $prior; re-declaring may only extend the set")
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        statsColsArg = Some(cols), opArg = "declare"))
+      val ht = record(spark, root, head)
+      require(ht.statsCols.forall(cols.contains),
+        s"$root already keeps zone maps on ${ht.statsCols}; re-declaring may only extend the set")
+      extraFields(spark, root, ht, ht.dirs, None,
+        statsColsArg = Some(cols), opArg = "declare")
     }).get
   }
 
@@ -1160,13 +980,12 @@ object Versioned {
   def commitRetireSum(spark: SparkSession, root: String): Int =
     publishRecord(spark, root, head => {
       require(head > 0, s"no committed version at $root")
-      require(sumColOf(spark, root, head).isDefined,
-        s"$root declares no metadata-sum column")
-      val dirs = manifest(spark, root, head)
+      val ht = record(spark, root, head)
+      require(ht.sumCol.isDefined, s"$root declares no metadata-sum column")
       // suppressing the parent sum-column carry IS the retirement; every
       // other field is reconstructed as usual
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        suppressSum = true, opArg = "retire"))
+      extraFields(spark, root, ht, ht.dirs, None,
+        suppressSum = true, opArg = "retire")
     }).get
 
   /** Retire columns from the multi-column zone map: re-declare to a
@@ -1181,12 +1000,11 @@ object Versioned {
     require(cols.distinct == cols, s"duplicate zone-map columns in $cols")
     publishRecord(spark, root, head => {
       require(head > 0, s"no committed version at $root")
-      val prior = statsColsOf(spark, root, head)
-      require(cols.forall(prior.contains) && cols != prior,
-        s"retire must name a strict subset of the declared set $prior")
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        statsColsArg = Some(cols), opArg = "retire"))
+      val ht = record(spark, root, head)
+      require(cols.forall(ht.statsCols.contains) && cols != ht.statsCols,
+        s"retire must name a strict subset of the declared set ${ht.statsCols}")
+      extraFields(spark, root, ht, ht.dirs, None,
+        statsColsArg = Some(cols), opArg = "retire")
     }).get
   }
 
@@ -1204,20 +1022,16 @@ object Versioned {
   def readRangeAll(spark: SparkSession, root: String, v: Int,
       preds: Seq[(String, Long, Long)]): DataFrame = {
     require(preds.nonEmpty, "readRangeAll needs at least one predicate")
-    val declared = statsColsOf(spark, root, v)
-    val legacy = statsColOf(spark, root, v).filter(c => Z2.findFirstIn(c).isEmpty)
+    val r = record(spark, root, v)
+    val legacy = r.statsCol.filter(c => Z2.findFirstIn(c).isEmpty)
     preds.foreach { case (c, _, _) =>
-      require(declared.contains(c) || legacy.contains(c),
+      require(r.statsCols.contains(c) || legacy.contains(c),
         s"$root declares no zone map on $c; commitDeclareStatsCols first") }
-    val m = dirMstats(spark, root, v)
-    val st = dirStats(spark, root, v)
-    val keep = manifest(spark, root, v).filter(d => preds.forall { case (c, lo, hi) =>
-      val e = if (declared.contains(c)) m.get((c, d)) else st.get(d)
+    val keep = r.dirs.filter(d => preds.forall { case (c, lo, hi) =>
+      val e = if (r.statsCols.contains(c)) r.mstats.get((c, d)) else r.stats.get(d)
       e.forall { case (a, b) => b >= lo && a <= hi }
     })
-    val base =
-      if (keep.isEmpty) readAt(spark, root, v).limit(0)
-      else readDirs(spark, root, v, keep)
+    val base = readPruned(spark, root, r, keep)
     // same ANSI-safe cast the map was measured with (see readRange)
     preds.foldLeft(base) { case (df, (c, lo, hi)) =>
       df.filter(tryLong(c).between(lo, hi))
@@ -1236,17 +1050,14 @@ object Versioned {
     * contributes nothing), or deletion vectors are live (the deleted
     * rows' contribution is unknown until the next fold). */
   def sumAt(spark: SparkSession, root: String, v: Int): Option[Long] = {
-    if (sumColOf(spark, root, v).isEmpty) return None
-    if (dvOf(spark, root, v).nonEmpty) return None
-    val sums = dirSums(spark, root, v)
-    val rows = dirRows(spark, root, v)
-    val dirs = manifest(spark, root, v)
+    val r = record(spark, root, v)
+    if (r.sumCol.isEmpty || r.dv.nonEmpty) return None
     // alters generations void the exact answer (see statsRangeAt)
-    if (alterMentions(spark, root, v, sumColOf(spark, root, v).get, dirs))
-      return None
-    if (dirs.nonEmpty &&
-        dirs.forall(d => sums.contains(d) || rows.get(d).contains(0L)))
-      Some(dirs.flatMap(sums.get).sum)
+    if (alterMentions(r, r.sumCol.get)) return None
+    val rows = r.rows.getOrElse(Map.empty[String, Long])
+    if (r.dirs.nonEmpty &&
+        r.dirs.forall(d => r.sums.contains(d) || rows.get(d).contains(0L)))
+      Some(r.dirs.flatMap(r.sums.get).sum)
     else None
   }
 
@@ -1278,11 +1089,9 @@ object Versioned {
   private[graft] def writeDataDir(spark: SparkSession, root: String, df: DataFrame,
       extraStatsCols: Seq[String] = Seq.empty): String = {
     val rel = s"data/${java.util.UUID.randomUUID()}"
-    val head = currentVersion(spark, root)
-    val ht = recOpt(spark, root, head)
-    val declStats = (ht.flatMap(parseStatsCol).toSeq ++
-      ht.map(parseStatsCols).getOrElse(Seq.empty) ++ extraStatsCols).distinct
-    val declSum = ht.flatMap(parseSumCol).toSeq.distinct
+    val ht = record(spark, root, currentVersion(spark, root))
+    val declStats = (ht.statsCol.toSeq ++ ht.statsCols ++ extraStatsCols).distinct
+    val declSum = ht.sumCol.toSeq
     val cols = df.columns.toSet
     def present(c: String): Boolean = c match {
       case Z2(x, y, _) => cols.contains(x) && cols.contains(y)
@@ -1325,11 +1134,6 @@ object Versioned {
     rel
   }
 
-  /** Publish the next version after the (re-resolved) head.  Retries
-    * against the moving head until the rename lands (bounded); `recOf`
-    * yields the dir list plus extra record fields for a given head;
-    * `abortIf` lets a caller bail out when a racing commit made this one
-    * redundant (the batchId fence) — None is returned ONLY on abort. */
   /** Per-root publish locks: on the LOCAL filesystem Hadoop's
     * no-overwrite rename is an exists-check followed by a POSIX rename
     * (which silently overwrites), so two publishers racing the same
@@ -1416,8 +1220,14 @@ object Versioned {
         s"unknown $CommitAdapterConf '$other' (rename | create-exclusive)")
     }
 
+  /** Publish the next version after the (re-resolved) head.  Retries
+    * against the moving head until the rename lands (bounded); `recOf`
+    * yields the record to publish on a given head (its `version` is set
+    * here); `abortIf` lets a caller bail out when a racing commit made
+    * this one redundant (the batchId fence) — None is returned ONLY on
+    * abort. */
   private[io] def publishRecord(spark: SparkSession, root: String,
-      recOf: Int => (Seq[String], String),
+      recOf: Int => Record,
       abortIf: Int => Boolean = _ => false): Option[Int] = {
     val ld = logDir(root)
     val f = logFs(spark, ld) // raw: records carry no .crc sidecar (see logFs)
@@ -1434,8 +1244,7 @@ object Versioned {
       val head = currentVersion(spark, root)
       if (abortIf(head)) return None
       val v = head + 1
-      val (dirs, extra) = recOf(head)
-      val rec = s"""{"version":$v,"dirs":[${dirs.map(d => s""""$d"""").mkString(",")}]$extra}"""
+      val rec = recOf(head).copy(version = v).encode
       val dst = new org.apache.hadoop.fs.Path(ld, f"v$v%05d.json")
       if (landRecord(f, fc, ld, dst, rec, adapter)) {
         writeHeadHint(spark, ld, v) // O(1) head resolution for readers
@@ -1448,17 +1257,31 @@ object Versioned {
     }
   }
 
-  private[graft] def publish(spark: SparkSession, root: String,
-      dirsOf: Int => Seq[String], statsCol: Option[String] = None,
+  /** [[publishRecord]] of the standard commit record: `dirsOf` maps the
+    * parent record to the new manifest, [[extraFields]] fills the rest. */
+  private[io] def publish(spark: SparkSession, root: String,
+      dirsOf: Record => Seq[String], statsCol: Option[String] = None,
       precomputed: Map[String, (Long, Long)] = Map.empty,
       precomputedRows: Map[String, Long] = Map.empty,
       blooms: Option[(String, Int, Map[String, String])] = None,
       op: String = "commit"): Int =
     publishRecord(spark, root, head => {
-      val dirs = dirsOf(head)
-      (dirs, extraFields(spark, root, head, dirs, statsCol, "", precomputed,
-        None, precomputedRows, blooms, opArg = op))
+      val ht = record(spark, root, head)
+      extraFields(spark, root, ht, dirsOf(ht), statsCol, precomputed,
+        None, precomputedRows, blooms, opArg = op)
     }).get
+
+  /** The conflict test of every dir-rewriting publish: has a commit since
+    * `h0` (the head the rewrite read) replaced one of `dirs`, or changed
+    * its deletion vectors?  Either invalidates the rewrite — publishing it
+    * would resurrect the replaced or freshly deleted rows. */
+  private[io] def rewriteConflicts(spark: SparkSession, root: String, head: Int,
+      h0: Record, dirs: Iterable[String]): Boolean =
+    head != h0.version && {
+      val h = record(spark, root, head)
+      val m = h.dirs.toSet
+      dirs.exists(d => !m.contains(d) || h.dv.get(d) != h0.dv.get(d))
+    }
 
   /** Full-snapshot commit (also the compaction path): the new version's
     * manifest references exactly one fresh data dir.  `statsCol`
@@ -1477,9 +1300,7 @@ object Versioned {
   def commitAppend(spark: SparkSession, root: String, df: DataFrame,
       statsCol: Option[String] = None): Int = {
     val rel = writeDataDir(spark, root, df, statsCol.toSeq)
-    publish(spark, root, head =>
-      (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel,
-      statsCol, op = "append")
+    publish(spark, root, _.dirs :+ rel, statsCol, op = "append")
   }
 
   /** A [[commitAppendChecked]] audit failure: nothing was published, the
@@ -1517,8 +1338,7 @@ object Versioned {
       fs(spark, p).delete(p, true)
       throw new CommitRejected(bad)
     }
-    publish(spark, root, head =>
-      (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel,
+    publish(spark, root, _.dirs :+ rel,
       precomputedRows = Map(rel -> counts.getLong(0)), op = "append")
   }
 
@@ -1529,25 +1349,18 @@ object Versioned {
     * rules (the declarative shape: the table owner sets the contract
     * once, every producer inherits it).  Declarations ACCUMULATE; names
     * must be fresh.  Expressions are SQL boolean predicates over the
-    * row (no quotes/braces/backslashes — they live inside the JSON
-    * record). */
+    * row. */
   def commitDeclareChecks(spark: SparkSession, root: String,
       checks: Seq[(String, String)]): Int = {
     require(checks.nonEmpty, "no checks to declare")
-    checks.foreach { case (n, e) =>
-      require(n.nonEmpty && !s"$n$e".exists(c => c == '"' || c == '{' || c == '}' || c == '\\'),
-        s"check '$n' carries characters the record cannot hold")
-    }
+    require(checks.forall(_._1.nonEmpty), "check names must be non-empty")
     publishRecord(spark, root, head => {
       require(head > 0, s"no committed version at $root")
-      val existing = checksOf(spark, root, head)
-      val clash = checks.map(_._1).toSet intersect existing.map(_._1).toSet
+      val ht = record(spark, root, head)
+      val clash = checks.map(_._1).toSet intersect ht.checks.map(_._1).toSet
       require(clash.isEmpty, s"checks already declared: ${clash.mkString(", ")}")
-      val frag = (existing ++ checks)
-        .map { case (n, e) => s""""$n":"$e"""" }.mkString(",")
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        checksArg = Some(frag), opArg = "declare"))
+      extraFields(spark, root, ht, ht.dirs, None,
+        checksArg = Some(ht.checks ++ checks), opArg = "declare")
     }).get
   }
 
@@ -1592,8 +1405,9 @@ object Versioned {
     while (attempt < 5) {
       attempt += 1
       val head0 = currentVersion(spark, root)
+      val h0 = record(spark, root, head0)
       // persisted contract rides along (audited on the staged bytes)
-      val declared = checksOf(spark, root, head0)
+      val declared = h0.checks
       if (declared.nonEmpty) {
         val cs = declared.map { case (nm, e) => nm -> expr(e) }
         val counts = staged.agg(count(lit(1)),
@@ -1614,11 +1428,11 @@ object Versioned {
         val bounds = staged.agg(min(tryLong(key)), max(tryLong(key)),
           count(when(tryLong(key).isNull && col(key).isNotNull, 1))).head()
         val existing =
-          if (statsColOf(spark, root, head0).contains(key) &&
+          if (h0.statsCol.contains(key) &&
               !bounds.isNullAt(0) && !bounds.isNullAt(1) &&
               bounds.getLong(2) == 0L)
             readRange(spark, root, head0, bounds.getLong(0), bounds.getLong(1))
-          else if (statsColsOf(spark, root, head0).contains(key) &&
+          else if (h0.statsCols.contains(key) &&
               !bounds.isNullAt(0) && !bounds.isNullAt(1) &&
               bounds.getLong(2) == 0L)
             readRangeOn(spark, root, head0, key, bounds.getLong(0), bounds.getLong(1))
@@ -1629,9 +1443,9 @@ object Versioned {
       }
       val v = publishRecord(spark, root,
         head => {
-          val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel
-          (dirs, extraFields(spark, root, head, dirs, None, "",
-            precomputedRows = Map(rel -> n), opArg = "append"))
+          val ht = record(spark, root, head)
+          extraFields(spark, root, ht, ht.dirs :+ rel, None,
+            precomputedRows = Map(rel -> n), opArg = "append")
         },
         abortIf = head => head != head0) // new head: re-probe its keys
       v match {
@@ -1664,13 +1478,13 @@ object Versioned {
       attempt += 1
       val head0 = currentVersion(spark, root)
       require(head0 > 0, s"no committed version at $root")
-      val dirs0 = manifest(spark, root, head0)
+      val h0 = record(spark, root, head0)
+      val dirs0 = h0.dirs
       // file identity comes from the _metadata projection, not
       // input_file_name(): under live deletion vectors the read is a
       // JOINED plan, where input_file_name() is undefined (it could name
       // the sidecar, or nothing — silently touching zero dirs)
-      val touchedFiles = readDirsDv(spark, root, head0, dirs0,
-          keepPos = true, dvV = head0)
+      val touchedFiles = readDirsDv(spark, root, h0, dirs0, keepPos = true, h0)
         .filter(pred).select(col("_dvf").as("f"))
         .distinct().collect().map(_.getString(0))
       val touched = dirs0.filter(d => touchedFiles.exists(fileInDir(root, _, d))).toSet
@@ -1681,8 +1495,8 @@ object Versioned {
       // a clustered layout keeps its per-dir [min,max] tightness and the
       // commit costs 2 jobs, not 2 per touched dir.  A dir whose rows all
       // vanish writes no partition and drops from the manifest.
-      val rewritten = rewriteDirs(spark, root, head0,
-        dirs0.filter(touched).map(d => transform(readDirs(spark, root, head0, Seq(d)))))
+      val rewritten = rewriteDirs(spark, root, h0, dirs0.filter(touched).map(d =>
+        transform(readDirsDv(spark, root, h0, Seq(d), keepPos = false, h0))))
       // CONFLICT DETECTION (snapshot isolation): concurrent appends and
       // CoW commits on OTHER dirs compose (their dirs carry through the
       // re-resolved head), but a concurrent commit that replaced or
@@ -1694,19 +1508,13 @@ object Versioned {
       // old vectors, dropping the dir and its entries) would resurrect
       // the freshly-deleted rows.  Abort on either, reclaim the staged
       // rewrite, and RETRY the whole update against the new head.
-      val dv0 = dvOf(spark, root, head0)
       val v = publishRecord(spark, root,
         head => {
-          val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-            .filterNot(touched) ++ rewritten._1
-          (dirs, extraFields(spark, root, head, dirs, None, "",
-            rewritten._2, None, rewritten._3, rewritten._4, opArg = "update"))
+          val ht = record(spark, root, head)
+          extraFields(spark, root, ht, ht.dirs.filterNot(touched) ++ rewritten._1,
+            None, rewritten._2, None, rewritten._3, rewritten._4, opArg = "update")
         },
-        abortIf = head => head != head0 && {
-          val m = manifest(spark, root, head).toSet
-          val dvH = dvOf(spark, root, head)
-          touched.exists(d => !m.contains(d) || dvH.get(d) != dv0.get(d))
-        })
+        abortIf = head => rewriteConflicts(spark, root, head, h0, touched))
       v match {
         case Some(ver) => return ver
         case None => reclaimStaged(spark, root, rewritten._1)
@@ -1757,9 +1565,10 @@ object Versioned {
       attempt += 1
       val head0 = currentVersion(spark, root)
       require(head0 > 0, s"no committed version at $root")
-      val dirs0 = manifest(spark, root, head0)
+      val h0 = record(spark, root, head0)
+      val dirs0 = h0.dirs
       val rel = s"data/${java.util.UUID.randomUUID()}"
-      readDirsDv(spark, root, head0, dirs0, keepPos = true, dvV = head0)
+      readDirsDv(spark, root, h0, dirs0, keepPos = true, h0)
         .filter(pred).select(col("_dvf"), col("_dvp"))
         .write.mode("errorifexists").parquet(s"$root/$rel")
       cacheDirSchema(dataPath(root, rel),
@@ -1776,23 +1585,17 @@ object Versioned {
         dirs0.find(fileInDir(root, f, _)).getOrElse(throw new IllegalStateException(
           s"matched file $f attributes to no manifest dir of $root"))
       }.map { case (d, fc) => d -> fc.map(_._2).sum }
-      val touched = perDir.keySet
-      val dv0 = dvOf(spark, root, head0)
       val v = publishRecord(spark, root,
         head => {
-          val dirs = manifest(spark, root, head)
-          (dirs, extraFields(spark, root, head, dirs, None, "",
-            dvAdd = perDir.map { case (d, n) => d -> (Seq(rel), n) }, opArg = "delete"))
+          val ht = record(spark, root, head)
+          extraFields(spark, root, ht, ht.dirs, None,
+            dvAdd = perDir.map { case (d, n) => d -> (Seq(rel), n) }, opArg = "delete")
         },
         // our positions are only valid against head0's copy AND head0's
         // vector state of each touched dir: a concurrent rewrite orphans
         // them (silent resurrect), a concurrent MOR delete could list
         // the same position twice (dvRows double-count) — retry on both
-        abortIf = head => head != head0 && {
-          val m = manifest(spark, root, head).toSet
-          val dvH = dvOf(spark, root, head)
-          touched.exists(d => !m.contains(d) || dvH.get(d) != dv0.get(d))
-        })
+        abortIf = head => rewriteConflicts(spark, root, head, h0, perDir.keySet))
       v match {
         case Some(ver) => return ver
         case None => reclaimStaged(spark, root, Seq(rel))
@@ -1828,12 +1631,11 @@ object Versioned {
             org.apache.spark.sql.types.IntegerType)))
       .parquet(s"$root/$base")
 
-  private def bloomsForStaged(spark: SparkSession, root: String, head0: Int,
+  private def bloomsForStaged(spark: SparkSession, root: String, h0: Record,
       base: String, part: String, rels: Seq[String],
       leafSchema: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[(String, Int, Map[String, String])] = {
-    val declOpt = if (head0 == 0) None else bloomColOf(spark, root, head0)
-    declOpt.flatMap { case (decl, bits) =>
+    h0.bloomCol.flatMap { case (decl, bits) =>
       val Tok = """_tok\(([^()]+)\)""".r
       val df = leafSchema
         .map(readStagedPartitioned(spark, root, base, part, _))
@@ -1864,10 +1666,9 @@ object Versioned {
 
   /** [[bloomsForStaged]] for ONE plain staged dir (a merge's upsert
     * set): the ingest-side filter build verbatim. */
-  private def bloomForDir(spark: SparkSession, root: String, head0: Int,
+  private def bloomForDir(spark: SparkSession, root: String, h0: Record,
       rel: String): Option[(String, Int, Map[String, String])] = {
-    val declOpt = if (head0 == 0) None else bloomColOf(spark, root, head0)
-    declOpt.flatMap { case (decl, bits) =>
+    h0.bloomCol.flatMap { case (decl, bits) =>
       val Tok = """_tok\(([^()]+)\)""".r
       val df = readParquetDirs(spark, Seq(dataPath(root, rel)))
       val needCol = decl match { case Tok(c) => c; case c => c }
@@ -1899,7 +1700,7 @@ object Versioned {
     * count — and, on a bloom-indexed table, its fresh filter entry
     * ([[bloomsForStaged]]) — in batched jobs.  Returns (dirs, stats,
     * rows, blooms). */
-  private def rewriteDirs(spark: SparkSession, root: String, head0: Int,
+  private def rewriteDirs(spark: SparkSession, root: String, h0: Record,
       frames: Seq[DataFrame])
       : (Seq[String], Map[String, (Long, Long)], Map[String, Long],
          Option[(String, Int, Map[String, String])]) = {
@@ -1919,7 +1720,7 @@ object Versioned {
     rels.foreach(r => cacheDirSchema(dataPath(root, r),
       org.apache.spark.sql.types.StructType(
         frames.head.schema.fields.filterNot(_.name == "_d"))))
-    val scOpt = statsColOf(spark, root, head0)
+    val scOpt = h0.statsCol
     val c = scOpt.map(statsExpr).getOrElse(lit(0L))
     val bad = scOpt.map(sc => statsBad(sc, c)).getOrElse(lit(true))
     val agg = readStagedPartitioned(spark, root, base, "_d", frames.head.schema)
@@ -1932,7 +1733,7 @@ object Versioned {
       else Some(s"$base/_d=${r.get(0)}" -> (r.getLong(1), r.getLong(2)))
     }.toMap
     val rows = agg.map(r => s"$base/_d=${r.get(0)}" -> r.getLong(4)).toMap
-    (rels, stats, rows, bloomsForStaged(spark, root, head0, base, "_d", rels,
+    (rels, stats, rows, bloomsForStaged(spark, root, h0, base, "_d", rels,
       leafSchema = Some(frames.head.schema)))
   }
 
@@ -1983,15 +1784,13 @@ object Versioned {
     * the long cast — a null-casting key is invisible to min/max, its
     * matched dirs would be pruned, and those rows would silently
     * survive the merge as duplicates. */
-  private def keyConfinedDirs(spark: SparkSession, root: String, head0: Int,
+  private def keyConfinedDirs(h0: Record,
       dirs0: Seq[String], keysDf: DataFrame, key: String,
       keysLocal: Option[Array[org.apache.spark.sql.Row]] = None): Seq[String] = {
     val entryOf: String => Option[(Long, Long)] =
-      if (statsColOf(spark, root, head0).contains(key)) {
-        val st = dirStats(spark, root, head0); st.get
-      } else if (statsColsOf(spark, root, head0).contains(key)) {
-        val m = dirMstats(spark, root, head0); d => m.get((key, d))
-      } else return dirs0
+      if (h0.statsCol.contains(key)) h0.stats.get
+      else if (h0.statsCols.contains(key)) d => h0.mstats.get((key, d))
+      else return dirs0
     // the touched-key [min,max]: the agg's semantics are "any key whose
     // try_cast is null (including a null key) voids the confinement".
     // Over a LOCALIZED key set with an INTEGRAL key column the same
@@ -2035,6 +1834,12 @@ object Versioned {
         dirs0.filter(d => entryOf(d).forall { case (a, b) => b >= klo && a <= khi })
     }
   }
+
+  /** Dirs that NULL-FILL one of the merge `keys` (an add event recorded
+    * them): no row there can match, so discovery skips them unscanned. */
+  private def keylessDirs(h0: Record, keys: Seq[String]): Set[String] =
+    h0.alters.filter(a => keys.contains(a._1) && a._2 != "#rename" && a._2 != "#drop")
+      .flatMap(_._3).toSet
 
   /** Rows under which a merge's touched-key set is LOCALIZED: collected
     * to the driver once and re-planned as a broadcast LocalRelation.
@@ -2087,7 +1892,8 @@ object Versioned {
       return None
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    val dirs0 = manifest(spark, root, head0)
+    val h0 = record(spark, root, head0)
+    val dirs0 = h0.dirs
     // LOCALIZE a provably-small key set once (see localizeKeys): every
     // action below then broadcasts it driver-side with no per-action
     // rebuild job; past the cap the distributed plan runs verbatim
@@ -2103,7 +1909,7 @@ object Versioned {
     // CONJUNCTIVELY (a match needs every column equal, so a dir missing
     // any key's touched range cannot hold one)
     val candidates = keys.foldLeft(dirs0)((ds, k) =>
-      keyConfinedDirs(spark, root, head0, ds, keysDfX, k, keysLocal))
+      keyConfinedDirs(h0, ds, keysDfX, k, keysLocal))
     // matched-file discovery runs over the EVOLVED, vector-applied view
     // (readDirsDv with the position columns kept): renamed generations
     // resolve the key under its current name, deleted rows cannot
@@ -2111,13 +1917,10 @@ object Versioned {
     // projection (reliable where input_file_name is not).  Dirs that
     // NULL-FILL the merge key — an add event recorded them — can never
     // match and are skipped without scanning.
-    val keyless = altersOf(spark, root, head0)
-      .filter(a => keys.contains(a._1) && a._2 != "#rename" && a._2 != "#drop")
-      .flatMap(_._3).toSet
-    val scanDirs = candidates.filterNot(keyless)
+    val scanDirs = candidates.filterNot(keylessDirs(h0, keys))
     val touchedFiles =
       if (scanDirs.isEmpty) Array.empty[String]
-      else readDirsDv(spark, root, head0, scanDirs, keepPos = true, dvV = head0)
+      else readDirsDv(spark, root, h0, scanDirs, keepPos = true, h0)
         .select(keys.map(col) :+ col("_dvf").as("f"): _*)
         .join(keysDfX, keys, "left_semi")
         .select("f").distinct()
@@ -2125,33 +1928,28 @@ object Versioned {
     val touched = dirs0.filter(d => touchedFiles.exists(fileInDir(root, _, d))).toSet
     // all matched-key evictions land in ONE partitioned write (see
     // rewriteDirs) — 2 jobs however many dirs the keys touch
-    val rewritten = rewriteDirs(spark, root, head0,
+    val rewritten = rewriteDirs(spark, root, h0,
       dirs0.filter(touched).map(d =>
-        readDirs(spark, root, head0, Seq(d)).join(keysDfX, keys, "left_anti")))
+        readDirsDv(spark, root, h0, Seq(d), keepPos = false, h0)
+          .join(keysDfX, keys, "left_anti")))
     val newDir = writeDataDir(spark, root, upserts)
     // index maintenance: the upsert dir gets its own filter entry, so a
     // merged-in key stays point-probeable without a conservative read
-    val bloomAdd = bloomUnion(rewritten._4, bloomForDir(spark, root, head0, newDir))
-    val more = batchId.map(b => s""","batchId":$b""").getOrElse("")
+    val bloomAdd = bloomUnion(rewritten._4, bloomForDir(spark, root, h0, newDir))
     // abort on (a) a racing replay carrying our batch fence, or (b) a
     // concurrent commit that replaced one of OUR touched dirs — or
     // changed their deletion-vector state (the rewrite would resurrect
     // those deletes) — the commitUpdate conflict discipline: (a) is
     // terminal, (b) retries
-    val dv0 = dvOf(spark, root, head0)
     val v = publishRecord(spark, root, head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-          .filterNot(touched) ++ rewritten._1 :+ newDir
-        (dirs, extraFields(spark, root, head, dirs, None, more,
-          rewritten._2, None, rewritten._3, bloomAdd, opArg = "merge"))
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs.filterNot(touched) ++ rewritten._1 :+ newDir,
+          None, rewritten._2, None, rewritten._3, bloomAdd, opArg = "merge")
+          .copy(batchId = batchId)
       },
       abortIf = head =>
         batchId.exists(b => lastBatchId(spark, root).exists(_ >= b)) ||
-          (head != head0 && {
-            val m = manifest(spark, root, head).toSet
-            val dvH = dvOf(spark, root, head)
-            touched.exists(d => !m.contains(d) || dvH.get(d) != dv0.get(d))
-          }))
+          rewriteConflicts(spark, root, head, h0, touched))
     v match {
       case Some(_) => v
       case None =>
@@ -2266,7 +2064,8 @@ object Versioned {
       return None
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    val dirs0 = manifest(spark, root, head0)
+    val h0 = record(spark, root, head0)
+    val dirs0 = h0.dirs
     // an EXPLICIT key set may exceed the updates' own keys: the extras
     // are true deletes — vectored wherever they live, never re-landed
     // (the applyChanges eviction semantics, merge-on-read form)
@@ -2281,16 +2080,13 @@ object Versioned {
     // discovery discipline verbatim (clustered OR multi-column map),
     // composite keys confining conjunctively
     val candidates = keys.foldLeft(dirs0)((ds, k) =>
-      keyConfinedDirs(spark, root, head0, ds, keysDfX, k, keysLocal))
-    val keyless = altersOf(spark, root, head0)
-      .filter(a => keys.contains(a._1) && a._2 != "#rename" && a._2 != "#drop")
-      .flatMap(_._3).toSet
-    val scanDirs = candidates.filterNot(keyless)
+      keyConfinedDirs(h0, ds, keysDfX, k, keysLocal))
+    val scanDirs = candidates.filterNot(keylessDirs(h0, keys))
     val rel = s"data/${java.util.UUID.randomUUID()}"
     val perDir: Map[String, Long] =
       if (scanDirs.isEmpty) Map.empty
       else {
-        readDirsDv(spark, root, head0, scanDirs, keepPos = true, dvV = head0)
+        readDirsDv(spark, root, h0, scanDirs, keepPos = true, h0)
           .join(keysDfX, keys, "left_semi")
           .select(col("_dvf"), col("_dvp"))
           .write.mode("errorifexists").parquet(s"$root/$rel")
@@ -2312,24 +2108,18 @@ object Versioned {
     if (scanDirs.nonEmpty && perDir.isEmpty) reclaimStaged(spark, root, Seq(rel))
     val newDir = writeDataDir(spark, root, updates)
     // index maintenance: the MOR upsert dir gets its own filter entry
-    val bloomAdd = bloomForDir(spark, root, head0, newDir)
-    val touched = perDir.keySet
-    val dv0 = dvOf(spark, root, head0)
-    val more = batchId.map(b => s""","batchId":$b""").getOrElse("")
+    val bloomAdd = bloomForDir(spark, root, h0, newDir)
     val v = publishRecord(spark, root,
       head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ newDir
-        (dirs, extraFields(spark, root, head, dirs, None, more,
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs :+ newDir, None,
           blooms = bloomAdd,
-          dvAdd = perDir.map { case (d, n) => d -> (Seq(rel), n) }, opArg = "merge"))
+          dvAdd = perDir.map { case (d, n) => d -> (Seq(rel), n) }, opArg = "merge")
+          .copy(batchId = batchId)
       },
       abortIf = head =>
         batchId.exists(b => lastBatchId(spark, root).exists(_ >= b)) ||
-          (head != head0 && {
-            val m = manifest(spark, root, head).toSet
-            val dvH = dvOf(spark, root, head)
-            touched.exists(d => !m.contains(d) || dvH.get(d) != dv0.get(d))
-          }))
+          rewriteConflicts(spark, root, head, h0, perDir.keySet))
     v match {
       case Some(_) => v
       case None =>
@@ -2352,41 +2142,43 @@ object Versioned {
     * records from this version on. */
   def commitAlterAdd(spark: SparkSession, root: String, colName: String,
       sqlType: String): Int = {
-    require(!colName.contains("|") && !colName.contains("\""),
-      s"unsupported characters in column name $colName")
-    require(!sqlType.contains("|") && !sqlType.contains("\"") && !sqlType.startsWith("#"),
-      s"unsupported SQL type $sqlType")
+    requireColName(colName)
+    require(!sqlType.startsWith("#"), s"unsupported SQL type $sqlType")
     publishRecord(spark, root, head => {
       require(head > 0, s"no committed version at $root")
+      val ht = record(spark, root, head)
       // a duplicate add would make readDirs null-fill OVER the real
       // column values of every pre-alter dir — silent data loss.
       // Re-adding a DROPPED name is legal: the per-generation event
       // order (drop, then fresh null-fill) keeps the old values dead.
-      val events = altersOf(spark, root, head).filter(_._1 == colName)
+      val events = ht.alters.filter(_._1 == colName)
       require(events.isEmpty || events.last._2 == "#drop",
         s"column $colName was already altered into $root")
       require(!readAt(spark, root, head).columns.contains(colName),
         s"column $colName already exists in $root's schema")
-      val dirs = manifest(spark, root, head)
-      val entry = s""""$colName|$sqlType":"${dirs.mkString(",")}""""
-      val frag = altersFragOf(spark, root, head).filter(_.nonEmpty)
-        .map(p => s"$p,$entry").getOrElse(entry)
-      (dirs, extraFields(spark, root, head, dirs, None, "", Map.empty, Some(frag), opArg = "alter"))
+      extraFields(spark, root, ht, ht.dirs, None,
+        alters = Some(ht.alters :+ ((colName, sqlType, ht.dirs))), opArg = "alter")
     }).get
   }
 
-  private def alterNameOk(n: String): Boolean =
-    !n.contains("|") && !n.contains("\"") && !n.contains(">") && !n.contains(",") &&
-      !Seq("_dvf", "_dvp", "_d", "_b", "_sc").contains(n)
+  /** The one guard on column names that enter the record's compound
+    * encodings — `"alters"` keys `col|type` and `old>new|#rename`,
+    * `"statsCols"` `a,b`, `"mstats"` keys `col|dir` — so a name may not
+    * hold their delimiters, nor shadow the internal partitioner and
+    * deletion-vector columns.  Any other character is fine: the record
+    * codec escapes every string. */
+  private def requireColName(n: String): Unit =
+    require(n.nonEmpty && !n.exists(c => c == '|' || c == ',' || c == '>') &&
+      !Seq("_dvf", "_dvp", "_d", "_b", "_sc").contains(n),
+      s"unsupported characters in column name '$n'")
 
   /** Does the table's zone-map / bloom metadata reference `colName`?
     * Renaming or dropping such a column would desynchronize the pruning
     * surfaces from the data — callers must retire or migrate those
     * first (a plain 1-D statsCol RENAME is the exception: the rename
     * commit rewrites the field, see [[commitAlterRename]]). */
-  private def indexReferences(spark: SparkSession, root: String, head: Int,
-      colName: String): Boolean = {
-    val z2Ref = statsColOf(spark, root, head).exists {
+  private def indexReferences(ht: Record, colName: String): Boolean = {
+    val z2Ref = ht.statsCol.exists {
       case Z2(x, y, _) => x == colName || y == colName
       case _           => false
     }
@@ -2398,9 +2190,8 @@ object Versioned {
     // The declared metadata-SUM column joins the same discipline: its
     // per-dir entries were measured under this physical name, and a
     // drop-then-re-add would leave sumAt answering from stale bytes.
-    z2Ref || bloomColOf(spark, root, head).exists(_._1 == colName) ||
-      statsColsOf(spark, root, head).contains(colName) ||
-      sumColOf(spark, root, head).contains(colName)
+    z2Ref || ht.bloomCol.exists(_._1 == colName) ||
+      ht.statsCols.contains(colName) || ht.sumCol.contains(colName)
   }
 
   /** Schema evolution: RENAME a column — a pure metadata commit.  Dirs
@@ -2414,30 +2205,26 @@ object Versioned {
     * retire those first. */
   def commitAlterRename(spark: SparkSession, root: String, oldName: String,
       newName: String): Int = {
-    require(alterNameOk(oldName) && alterNameOk(newName),
-      s"unsupported characters in column name $oldName/$newName")
+    requireColName(oldName)
+    requireColName(newName)
     publishRecord(spark, root, head => {
       require(head > 0, s"no committed version at $root")
+      val ht = record(spark, root, head)
       val cols = readAt(spark, root, head).columns
       require(cols.contains(oldName), s"no column $oldName in $root's schema")
       require(!cols.contains(newName), s"column $newName already exists in $root")
-      require(!indexReferences(spark, root, head, oldName),
+      require(!indexReferences(ht, oldName),
         s"$oldName is referenced by $root's zone maps or bloom index; retire it first")
-      val dirs = manifest(spark, root, head)
-      val entry = s""""$oldName>$newName|#rename":"${dirs.mkString(",")}""""
-      val frag = altersFragOf(spark, root, head).filter(_.nonEmpty)
-        .map(p => s"$p,$entry").getOrElse(entry)
       // the 1-D zone map follows the rename in the SAME commit.  The
       // parent's per-dir [min,max] are passed as PRECOMPUTED entries:
       // the extraFields re-declaration guard rightly refuses to carry
       // parent stats across a statsCol name change, but a rename is the
       // one case where the old entries stay valid verbatim — same
       // measurements, new name
-      val statsFollow = statsColOf(spark, root, head)
-        .filter(_ == oldName).map(_ => newName)
-      (dirs, extraFields(spark, root, head, dirs, statsFollow, "",
-        if (statsFollow.isDefined) dirStats(spark, root, head) else Map.empty,
-        Some(frag), opArg = "alter"))
+      val statsFollow = ht.statsCol.filter(_ == oldName).map(_ => newName)
+      extraFields(spark, root, ht, ht.dirs, statsFollow,
+        if (statsFollow.isDefined) ht.stats else Map.empty,
+        Some(ht.alters :+ ((s"$oldName>$newName", "#rename", ht.dirs))), opArg = "alter")
     }).get
   }
 
@@ -2450,19 +2237,16 @@ object Versioned {
     * Dropping the zone-map or bloom column is refused — the pruning
     * surfaces would point at a ghost. */
   def commitAlterDrop(spark: SparkSession, root: String, colName: String): Int = {
-    require(alterNameOk(colName), s"unsupported characters in column name $colName")
+    requireColName(colName)
     publishRecord(spark, root, head => {
       require(head > 0, s"no committed version at $root")
+      val ht = record(spark, root, head)
       require(readAt(spark, root, head).columns.contains(colName),
         s"no column $colName in $root's schema")
-      require(!statsColOf(spark, root, head).contains(colName) &&
-        !indexReferences(spark, root, head, colName),
+      require(!ht.statsCol.contains(colName) && !indexReferences(ht, colName),
         s"$colName is a $root zone-map/bloom column; retire or re-cluster first")
-      val dirs = manifest(spark, root, head)
-      val entry = s""""$colName|#drop":"${dirs.mkString(",")}""""
-      val frag = altersFragOf(spark, root, head).filter(_.nonEmpty)
-        .map(p => s"$p,$entry").getOrElse(entry)
-      (dirs, extraFields(spark, root, head, dirs, None, "", Map.empty, Some(frag), opArg = "alter"))
+      extraFields(spark, root, ht, ht.dirs, None,
+        alters = Some(ht.alters :+ ((colName, "#drop", ht.dirs))), opArg = "alter")
     }).get
   }
 
@@ -2473,19 +2257,22 @@ object Versioned {
     * added column constant-folds the pre-alter generations to an empty
     * relation (the scan is pruned entirely, not read-and-dropped). */
   private[graft] def readDirs(spark: SparkSession, root: String, v: Int,
-      dirs: Seq[String]): DataFrame =
-    readDirsDv(spark, root, v, dirs, keepPos = false, dvV = v)
+      dirs: Seq[String]): DataFrame = {
+    val r = record(spark, root, v)
+    readDirsDv(spark, root, r, dirs, keepPos = false, r)
+  }
 
-  /** [[readDirs]] body with deletion-vector control: `dvV` names the
-    * version whose vectors apply (readers pass `v`; [[diff]] reads each
-    * side's dirs under the NEWER schema but its OWN vectors), and
+  /** [[readDirs]] body with deletion-vector control: the dirs read under
+    * `at`'s schema with `dvAt`'s vectors applied (readers pass the same
+    * record; [[diff]] reads each side's dirs under the NEWER schema but
+    * its OWN vectors), and
     * `keepPos = true` retains the `_dvf`/`_dvp` (file, row position)
     * identity columns — how [[commitDeleteMOR]] addresses the rows it
     * deletes.  With no vectors on the requested dirs this is exactly
     * the plain scan: zero overhead on tables that never MOR-delete. */
-  private def readDirsDv(spark: SparkSession, root: String, v: Int,
-      dirs: Seq[String], keepPos: Boolean, dvV: Int): DataFrame = {
-    val dv = dvOf(spark, root, dvV).filter { case (d, _) => dirs.contains(d) }
+  private def readDirsDv(spark: SparkSession, root: String, at: Record,
+      dirs: Seq[String], keepPos: Boolean, dvAt: Record): DataFrame = {
+    val dv = dvAt.dv.filter { case (d, _) => dirs.contains(d) }
     // generation-grouped scan of a dir subset, optionally carrying the
     // (file, row position) identity columns
     def scanGens(ds: Seq[String], withPos: Boolean): DataFrame = {
@@ -2497,7 +2284,7 @@ object Versioned {
           df.select(col("*"), col("_metadata.file_path").as("_dvf"),
             col("_metadata.row_index").as("_dvp"))
         }
-      val alters = altersOf(spark, root, v)
+      val alters = at.alters.map { case (c, t, ads) => (c, t, ads.toSet) }
       if (alters.isEmpty) proj(readParquetDirs(spark, ds.map(dataPath(root, _))))
       else {
         val groups = ds.groupBy(d => alters.filter(_._3.contains(d)).map(a => (a._1, a._2)))
@@ -2531,7 +2318,7 @@ object Versioned {
       .select(col("_dvf"), col("_dvp"))
     // sidecars are O(deleted rows); broadcast while the metadata says
     // they are small, fall back to a shuffled anti join past that
-    val nDel = dvRowsOf(spark, root, dvV)
+    val nDel = dvAt.dvRows
       .filter { case (d, _) => dirs.contains(d) }.values.sum
     val delB = if (nDel <= 2000000L) broadcast(del) else del
     val vecApplied = scanGens(vecDirs, withPos = true)
@@ -2567,12 +2354,13 @@ object Versioned {
     * should suppress the hint with the session conf
     * `spark.graft.readAtBroadcastHint=false` (default true). */
   def readAt(spark: SparkSession, root: String, v: Int): DataFrame = {
-    // ONE record read serves the manifest AND the sizing fields below
-    val rec = recOpt(spark, root, v).getOrElse(
-      throw new IllegalArgumentException(s"version $v of $root has no record"))
-    val dirs = parseManifest(rec)
+    require(v > 0, s"version $v of $root has no record")
+    // ONE record read serves the manifest, the schema generations, the
+    // vectors AND the sizing fields below
+    val r = record(spark, root, v)
+    val dirs = r.dirs
     require(dirs.nonEmpty, s"version $v of $root has no data")
-    val df = readDirs(spark, root, v, dirs)
+    val df = readDirsDv(spark, root, r, dirs, keepPos = false, r)
     val thresh = try spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       .replace("b", "").replace("B", "") match {
         case s if s.endsWith("k") || s.endsWith("K") => s.dropRight(1).toLong << 10
@@ -2586,8 +2374,8 @@ object Versioned {
     // is an executor OOM AQE cannot demote its way out of
     if (!spark.conf.get("spark.graft.readAtBroadcastHint", "true").toBoolean)
       return df
-    val known = parseDirRows(rec)
-    val bytes = parseDirBytes(rec)
+    val known = r.rows.getOrElse(Map.empty[String, Long])
+    val bytes = r.bytes.getOrElse(Map.empty[String, Long])
     if (!dirs.forall(d => known.contains(d) && bytes.contains(d))) return df
     // LIVE bytes = recorded on-disk bytes scaled by the live-row fraction
     // (deletion vectors kill rows without touching files).  Real file
@@ -2596,7 +2384,7 @@ object Versioned {
     // gigabytes.  Compressed parquet bytes is the same currency
     // Catalyst's own file-size estimate uses for this threshold.
     val total = dirs.map(known).sum
-    val live = total - dirs.flatMap(parseDvRows(rec).get).sum
+    val live = total - dirs.flatMap(r.dvRows.get).sum
     val estBytes =
       if (total <= 0 || live < 0) Long.MaxValue
       else (dirs.map(bytes).sum.toDouble * live / total).toLong
@@ -2612,21 +2400,28 @@ object Versioned {
     * range filter is still applied to the rows read, so the result is
     * correct whatever the zone map prunes. */
   def readRange(spark: SparkSession, root: String, v: Int, lo: Long, hi: Long): DataFrame = {
-    val colName = statsColOf(spark, root, v).getOrElse(
+    val r = record(spark, root, v)
+    val colName = r.statsCol.getOrElse(
       throw new IllegalArgumentException(s"$root has no zone-map column; commit with statsCol"))
     require(Z2.findFirstIn(colName).isEmpty,
       s"$root keeps a 2-D zone map ($colName); use Zonemap2D.readRange2")
-    val st = dirStats(spark, root, v)
-    val keep = manifest(spark, root, v)
-      .filter(d => st.get(d).forall { case (a, b) => b >= lo && a <= hi })
-    val base =
-      if (keep.isEmpty) readAt(spark, root, v).limit(0)
-      else readDirs(spark, root, v, keep)
+    val base = readPruned(spark, root, r,
+      r.dirs.filter(d => r.stats.get(d).forall { case (a, b) => b >= lo && a <= hi }))
     // the row filter goes through the SAME ANSI-safe cast the zone map
     // was measured with: a non-castable value is outside every long
     // range by definition (and a plain cast would ERROR under ANSI the
     // moment an unpruned dir holds one)
     base.filter(tryLong(colName).between(lo, hi))
+  }
+
+  /** The dirs `keep` (a pruned subset of `r`'s manifest) read under `r`'s
+    * schema and vectors; when pruning kept nothing, an empty frame that
+    * still carries the schema. */
+  private[io] def readPruned(spark: SparkSession, root: String, r: Record,
+      keep: Seq[String]): DataFrame = {
+    require(r.dirs.nonEmpty, s"version ${r.version} of $root has no data")
+    if (keep.isEmpty) readDirsDv(spark, root, r, r.dirs, keepPos = false, r).limit(0)
+    else readDirsDv(spark, root, r, keep, keepPos = false, r)
   }
 
   /** Highest version whose commit timestamp is ≤ `ts` (epoch ms) — the
@@ -2657,19 +2452,15 @@ object Versioned {
     import spark.implicits._
     val head = currentVersion(spark, root)
     (lowestVersion(spark, root, head) to head).map { v =>
-      val txt = recordText(spark, root, v)
-      val ts = """"ts":\s*(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      val bid = """"batchId":\s*(-?\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      val dirs = manifest(spark, root, v)
+      val r = record(spark, root, v)
       // metadata row count when every dir carries one (legacy dirs don't);
       // deletion-vector cardinalities subtract, as in countAt
-      val known = dirRows(spark, root, v)
-      val deleted = dvRowsOf(spark, root, v)
+      val known = r.rows.getOrElse(Map.empty[String, Long])
       val nRows =
-        if (dirs.forall(known.contains))
-          Some(dirs.map(known).sum - dirs.flatMap(deleted.get).sum)
+        if (r.dirs.forall(known.contains))
+          Some(r.dirs.map(known).sum - r.dirs.flatMap(r.dvRows.get).sum)
         else None
-      (v, ts, parseOp(txt), dirs.size, nRows, bid)
+      (v, Option(r.ts), r.op, r.dirs.size, nRows, r.batchId)
     }.toDF("version", "ts_ms", "op", "n_dirs", "n_rows", "batch_id")
   }
 
@@ -2685,9 +2476,7 @@ object Versioned {
   def commitAppendClustered(spark: SparkSession, root: String, df: DataFrame,
       statsCol: String, buckets: Int = 16): Int = {
     val (rels, pre, rows, blooms) = writeClustered(spark, root, df, statsCol, buckets)
-    publish(spark, root, head =>
-      (if (head == 0) Seq.empty else manifest(spark, root, head)) ++ rels,
-      Some(statsCol), pre, rows, blooms, op = "append")
+    publish(spark, root, _.dirs ++ rels, Some(statsCol), pre, rows, blooms, op = "append")
   }
 
   /** Clustering-preserving compaction: rewrite the ENTIRE head snapshot
@@ -2700,7 +2489,8 @@ object Versioned {
       buckets: Int = 16): Option[Int] = {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    val dirs0 = manifest(spark, root, head0).toSet
+    val h0 = record(spark, root, head0)
+    val dirs0 = h0.dirs.toSet
     val (rels, pre, rows, blooms) = writeClustered(spark, root,
       readAt(spark, root, head0), statsCol, buckets)
     // concurrent appends carry through; a concurrent CoW commit that
@@ -2709,19 +2499,13 @@ object Versioned {
     // attaching a vector to one (the fold read the OLD vector state and
     // would drop the new entry with the dir) — same discipline as
     // optimize
-    val dvC0 = dvOf(spark, root, head0)
     val v = publishRecord(spark, root,
       head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-          .filterNot(dirs0) ++ rels
-        (dirs, extraFields(spark, root, head, dirs, Some(statsCol), "", pre,
-          None, rows, blooms, opArg = "optimize"))
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs.filterNot(dirs0) ++ rels, Some(statsCol),
+          pre, None, rows, blooms, opArg = "optimize")
       },
-      abortIf = head => head != head0 && {
-        val m = manifest(spark, root, head).toSet
-        val dvH = dvOf(spark, root, head)
-        !dirs0.subsetOf(m) || dirs0.exists(d => dvH.get(d) != dvC0.get(d))
-      })
+      abortIf = head => rewriteConflicts(spark, root, head, h0, dirs0))
     if (v.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(
         dataPath(root, rels.head.split("/").take(2).mkString("/")))
@@ -2759,13 +2543,14 @@ object Versioned {
       buckets: Int = 16, maxCover: Int = 2): Option[Int] = {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
+    val h0 = record(spark, root, head0)
     // the overlap sweep reads the manifest's [min,max] entries, which
     // are only meaningful for the column they were measured under
-    require(statsColOf(spark, root, head0).forall(_ == statsCol),
-      s"$root's zone map is on ${statsColOf(spark, root, head0).get}; " +
+    require(h0.statsCol.forall(_ == statsCol),
+      s"$root's zone map is on ${h0.statsCol.get}; " +
         "re-cluster via compactClustered before optimizing on a different column")
-    val dirs0 = manifest(spark, root, head0)
-    val st = dirStats(spark, root, head0)
+    val dirs0 = h0.dirs
+    val st = h0.stats
     val known = dirs0.flatMap(d => st.get(d).map(d -> _)).sortBy(_._2._1)
     val comps = scala.collection.mutable.ArrayBuffer[Vector[String]]()
     var cur = Vector.empty[String]
@@ -2780,7 +2565,7 @@ object Versioned {
       (if (comps.exists(_.size > maxCover)) statless else Seq.empty)
     if (fold.isEmpty) return None
     val (rels, pre, rows, blooms) = writeClustered(spark, root,
-      readDirs(spark, root, head0, fold), statsCol, buckets)
+      readDirsDv(spark, root, h0, fold, keepPos = false, h0), statsCol, buckets)
     val foldSet = fold.toSet
     // concurrent APPENDS compose (their dirs carry through), but a
     // concurrent CoW commit REPLACING a fold dir must abort this
@@ -2791,19 +2576,13 @@ object Versioned {
     // read the old vector state, so publishing would resurrect the new
     // deletes.  Both checks re-evaluate against the head the rename
     // will land on.
-    val dvO0 = dvOf(spark, root, head0)
     val v = publishRecord(spark, root,
       head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-          .filterNot(foldSet) ++ rels
-        (dirs, extraFields(spark, root, head, dirs, Some(statsCol), "", pre,
-          None, rows, blooms, opArg = "optimize"))
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs.filterNot(foldSet) ++ rels, Some(statsCol),
+          pre, None, rows, blooms, opArg = "optimize")
       },
-      abortIf = head => head != head0 && {
-        val m = manifest(spark, root, head).toSet
-        val dvH = dvOf(spark, root, head)
-        !foldSet.subsetOf(m) || fold.exists(d => dvH.get(d) != dvO0.get(d))
-      })
+      abortIf = head => rewriteConflicts(spark, root, head, h0, fold))
     if (v.isEmpty) { // aborted: reclaim the staged fold
       val p = new org.apache.hadoop.fs.Path(
         dataPath(root, rels.head.split("/").take(2).mkString("/")))
@@ -2831,11 +2610,12 @@ object Versioned {
     require(smallRows <= targetRows, "smallRows must not exceed targetRows")
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    require(statsColOf(spark, root, head0).forall(_ == statsCol),
-      s"$root's zone map is on ${statsColOf(spark, root, head0).get}; " +
+    val h0 = record(spark, root, head0)
+    require(h0.statsCol.forall(_ == statsCol),
+      s"$root's zone map is on ${h0.statsCol.get}; " +
         "re-cluster via compactClustered before optimizing on a different column")
     smallFoldImpl(spark, root, statsCol, smallRows, targetRows,
-      declare = true, head0)
+      declare = true, h0)
   }
 
   /** Small-file defrag for tables with NO clustered 1-D statsCol but a
@@ -2852,19 +2632,19 @@ object Versioned {
     require(smallRows <= targetRows, "smallRows must not exceed targetRows")
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    require(statsColOf(spark, root, head0).isEmpty,
-      s"$root has a clustered statsCol; use optimizeSmall")
-    require(statsColsOf(spark, root, head0).contains(colName),
+    val h0 = record(spark, root, head0)
+    require(h0.statsCol.isEmpty, s"$root has a clustered statsCol; use optimizeSmall")
+    require(h0.statsCols.contains(colName),
       s"$colName is not a declared zone-map member of $root")
     smallFoldImpl(spark, root, colName, smallRows, targetRows,
-      declare = false, head0)
+      declare = false, h0)
   }
 
   private def smallFoldImpl(spark: SparkSession, root: String,
       foldCol: String, smallRows: Long, targetRows: Long,
-      declare: Boolean, head0: Int): Option[Int] = {
-    val dirs0 = manifest(spark, root, head0)
-    val rows = dirRows(spark, root, head0)
+      declare: Boolean, h0: Record): Option[Int] = {
+    val dirs0 = h0.dirs
+    val rows = h0.rows.getOrElse(Map.empty[String, Long])
     val fold = dirs0.filter(d => rows.get(d).forall(_ < smallRows))
     if (fold.size < 2) return None // nothing to defragment
     val sum = fold.flatMap(rows.get).sum
@@ -2874,24 +2654,18 @@ object Versioned {
     // small dirs forever) — the policy only fires when it converges
     if (buckets >= fold.size) return None
     val (rels, pre, nRows, blooms) = writeClustered(spark, root,
-      readDirs(spark, root, head0, fold), foldCol, buckets)
+      readDirsDv(spark, root, h0, fold, keepPos = false, h0), foldCol, buckets)
     val foldSet = fold.toSet
-    val dvS0 = dvOf(spark, root, head0)
     val v = publishRecord(spark, root,
       head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-          .filterNot(foldSet) ++ rels
-        (dirs, extraFields(spark, root, head, dirs,
-          if (declare) Some(foldCol) else None, "", pre,
-          None, nRows, blooms, opArg = "optimize"))
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs.filterNot(foldSet) ++ rels,
+          if (declare) Some(foldCol) else None, pre,
+          None, nRows, blooms, opArg = "optimize")
       },
       // same conflict discipline as optimizeClustered: a concurrent
       // commit replacing a fold dir, or vectoring one, aborts
-      abortIf = head => head != head0 && {
-        val m = manifest(spark, root, head).toSet
-        val dvH = dvOf(spark, root, head)
-        !foldSet.subsetOf(m) || fold.exists(d => dvH.get(d) != dvS0.get(d))
-      })
+      abortIf = head => rewriteConflicts(spark, root, head, h0, fold))
     if (v.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(
         dataPath(root, rels.head.split("/").take(2).mkString("/")))
@@ -2934,29 +2708,30 @@ object Versioned {
       s"maxDvFraction must be in (0,1), got $maxDvFraction")
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    val deleted = dvRowsOf(spark, root, head0)
+    val h0 = record(spark, root, head0)
+    val deleted = h0.dvRows
     if (deleted.isEmpty) return None // healthy: zero I/O
-    val dirs0 = manifest(spark, root, head0)
+    val dirs0 = h0.dirs
     require(!dirs0.exists { d =>
       val p = new org.apache.hadoop.fs.Path(s"${dataPath(root, d)}/_vec.json")
       fs(spark, p).exists(p)
     }, s"$root is a vector-index table; its cell rewrite is " +
       "VectorIndex.optimizeCells — a generic rewrite would orphan the sidecars")
-    val rows = dirRows(spark, root, head0)
+    val rows = h0.rows.getOrElse(Map.empty[String, Long])
     // a dir with vectors but no recorded row count (legacy) is flagged
     // too: its fraction is unprovable without I/O and it pays the
     // anti-join tax on every read
     val flagged = dirs0.filter(d => deleted.get(d).exists(dv => dv > 0 &&
       rows.get(d).forall(n => dv.toDouble / math.max(n, 1L) > maxDvFraction)))
     if (flagged.isEmpty) return None
-    val headFrame = readDirs(spark, root, head0, Seq(flagged.head))
+    val headFrame = readDirsDv(spark, root, h0, Seq(flagged.head), keepPos = false, h0)
     require(!headFrame.columns.contains("_rw"),
       "table column _rw collides with the rewrite partitioner")
     // ONE staged job: each flagged dir's DV-APPLIED content lands under
     // its own `_rw=i` partition — 1:1, never a cross-dir shuffle
     val base = s"data/${java.util.UUID.randomUUID()}"
     flagged.zipWithIndex.map { case (d, i) =>
-        readDirs(spark, root, head0, Seq(d)).withColumn("_rw", lit(i)) }
+        readDirsDv(spark, root, h0, Seq(d), keepPos = false, h0).withColumn("_rw", lit(i)) }
       .reduce(_ unionByName _)
       .write.mode("errorifexists").partitionBy("_rw").parquet(s"$root/$base")
     val bp = new org.apache.hadoop.fs.Path(s"$root/$base")
@@ -2964,7 +2739,7 @@ object Versioned {
       .map(st => s"$base/${st.getPath.getName}").sorted.toSeq
     // per-new-dir stats + row counts in ONE batched job (the
     // writeClustered pattern); bloom entries via the shared staged path
-    val sc = statsColOf(spark, root, head0)
+    val sc = h0.statsCol
     val (pre, nRows) = if (rels.isEmpty) {
       // every flagged dir was fully deleted: nothing staged, the dirs
       // simply leave the manifest below
@@ -2985,23 +2760,18 @@ object Versioned {
       (p, agg.map(r => s"$base/_rw=${r.get(0)}" -> r.getLong(4)).toMap)
     }
     val blooms = if (rels.isEmpty) None
-      else bloomsForStaged(spark, root, head0, base, "_rw", rels,
+      else bloomsForStaged(spark, root, h0, base, "_rw", rels,
         leafSchema = Some(headFrame.schema))
     val flaggedSet = flagged.toSet
-    val dv0 = dvOf(spark, root, head0)
     val v = publishRecord(spark, root,
       head => {
-        val dirs = manifest(spark, root, head).filterNot(flaggedSet) ++ rels
-        (dirs, extraFields(spark, root, head, dirs, None, "", pre,
-          None, nRows, blooms, opArg = "reorg"))
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs.filterNot(flaggedSet) ++ rels, None, pre,
+          None, nRows, blooms, opArg = "reorg")
       },
       // a concurrent commit REPLACING a flagged dir, or changing its
       // vector state, invalidates the staged copy — abort, reclaim
-      abortIf = head => head != head0 && {
-        val m = manifest(spark, root, head).toSet
-        val dvH = dvOf(spark, root, head)
-        !flaggedSet.subsetOf(m) || flagged.exists(d => dvH.get(d) != dv0.get(d))
-      })
+      abortIf = head => rewriteConflicts(spark, root, head, h0, flagged))
     if (v.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(s"$root/$base")
       fs(spark, p).delete(p, true)
@@ -3025,21 +2795,20 @@ object Versioned {
   def optimizeIndex(spark: SparkSession, root: String): Option[Int] = {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    if (bloomColOf(spark, root, head0).isEmpty) return None
-    val have = dirBlooms(spark, root, head0).keySet
-    val missing = manifest(spark, root, head0).filterNot(have)
+    val h0 = record(spark, root, head0)
+    val (decl, bits) = h0.bloomCol.getOrElse(return None)
+    val missing = h0.dirs.filterNot(h0.bloom.contains)
     if (missing.isEmpty) return None
     val entries = missing.flatMap(d =>
-      bloomForDir(spark, root, head0, d).map(_._3).getOrElse(Map.empty))
+      bloomForDir(spark, root, h0, d).map(_._3).getOrElse(Map.empty))
     if (entries.isEmpty) return None // nothing eligible (column absent)
-    val (decl, bits) = bloomColOf(spark, root, head0).get
     // pure metadata publish: dirs are immutable, so the entries stay
-    // valid whatever head the rename lands on (extraFields serializes
+    // valid whatever head the rename lands on (the record serializes
     // only the dirs still in that manifest)
     Some(publishRecord(spark, root, head => {
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        blooms = Some((decl, bits, entries.toMap)), opArg = "optimize"))
+      val ht = record(spark, root, head)
+      extraFields(spark, root, ht, ht.dirs, None,
+        blooms = Some((decl, bits, entries.toMap)), opArg = "optimize")
     }).get)
   }
 
@@ -3090,7 +2859,8 @@ object Versioned {
     // ([[commitDeclarePolicy]], carried in the head record) > global
     // default — so `maintain(root)` with no knobs does each table's
     // right thing, and a catalog sweep needs no per-member parameters
-    val pol = policyOf(spark, root, head0)
+    val h0 = record(spark, root, head0)
+    val pol = h0.policy
     val smallRowsR = if (smallRows >= 0L) smallRows
                      else pol.map(_.smallRows).getOrElse(0L)
     val targetRowsR = if (targetRows >= 0L) targetRows
@@ -3099,8 +2869,7 @@ object Versioned {
     val maxCoverR = if (maxCover >= 1) maxCover else pol.map(_.maxCover).getOrElse(2)
     val maxDvFractionR = if (maxDvFraction >= 0.0) maxDvFraction
                          else pol.map(_.maxDvFraction).getOrElse(0.3)
-    val dirs0 = manifest(spark, root, head0)
-    val isVector = dirs0.exists { d =>
+    val isVector = h0.dirs.exists { d =>
       val p = new org.apache.hadoop.fs.Path(s"${dataPath(root, d)}/_vec.json")
       fs(spark, p).exists(p)
     }
@@ -3116,7 +2885,7 @@ object Versioned {
     // 2-D Morton tables route through the SAME folds: the overlap sweep
     // and range shuffle operate on the Morton code — exactly how the
     // layout was built (Zonemap2DSpec proves box reads stay sharp)
-    val sc = statsColOf(spark, root, head0)
+    val sc = h0.statsCol
     var last: Option[Int] = None
     if (sc.isDefined) {
       last = optimizeClustered(spark, root, sc.get, bucketsR, maxCoverR)
@@ -3128,7 +2897,7 @@ object Versioned {
       // still fragment: defrag on the FIRST declared column — the fold
       // needs *a* measured expression, and the multi-column map
       // re-measures every member on the fresh dirs
-      statsColsOf(spark, root, head0).headOption.foreach { c =>
+      h0.statsCols.headOption.foreach { c =>
         optimizeSmallOn(spark, root, c, smallRowsR, tgtRows)
           .foreach(v => last = Some(v))
       }
@@ -3189,8 +2958,8 @@ object Versioned {
         else Some(s"$base/_b=${r.get(0)}" -> (r.getLong(1), r.getLong(2)))
       }.toMap
     val rows = agg.map(r => s"$base/_b=${r.get(0)}" -> r.getLong(4)).toMap
-    (rels, pre, rows,
-      bloomsForStaged(spark, root, currentVersion(spark, root), base, "_b", rels))
+    (rels, pre, rows, bloomsForStaged(spark, root,
+      record(spark, root, currentVersion(spark, root)), base, "_b", rels))
   }
 
   /** Zero-copy shallow CLONE: publish `dstRoot`'s v1 as a manifest of
@@ -3208,84 +2977,11 @@ object Versioned {
     * vacuuming the SOURCE past `v` invalidates clones taken at `v` —
     * keep sources within clone lifetimes, or compact the clone to
     * materialize it. */
-  /** Re-serialize version `v`'s carried record fields — stats, rows,
-    * sums (+ void markers), blooms, alters, CHECK constraints, deletion
-    * vectors — for a SNAPSHOT-REPLAY record (restore, shallow clone,
-    * branch snapshot merge) whose dir names pass through `remap` and
-    * whose DV sidecar names pass through `sideRemap`.  One serializer
-    * for every replay path: a record field added here flows through all
-    * of them, instead of silently vanishing on whichever path forgot it
-    * (which is exactly how the checks/sums fields went missing from
-    * three hand-rolled copies of this block). */
-  private[io] def carryFieldsOf(spark: SparkSession, root: String, v: Int,
-      dirs: Seq[String], remap: String => String = identity,
-      sideRemap: String => String = identity): String = {
-    val vt = recordText(spark, root, v) // ONE read serves every field
-    val st = parseDirStats(vt)
-    val statsJson = parseStatsCol(vt).map { c =>
-      val entries = dirs.flatMap(d =>
-        st.get(d).map { case (a, b) => s""""${remap(d)}":[$a,$b]""" })
-      s""","statsCol":"$c","stats":{${entries.mkString(",")}}"""
-    }.getOrElse("")
-    val mcols = parseStatsCols(vt)
-    val mstatsJson = if (mcols.isEmpty) "" else {
-      val m = parseMstats(vt)
-      val entries = for {
-        c <- mcols; d <- dirs; e <- m.get((c, d))
-      } yield s""""$c|${remap(d)}":[${e._1},${e._2}]"""
-      s""","statsCols":"${mcols.mkString(",")}","mstats":{${entries.mkString(",")}}"""
-    }
-    val rows = parseDirRows(vt)
-    val rowEntries = dirs.flatMap(d => rows.get(d).map(n => s""""${remap(d)}":$n"""))
-    val rowsJson =
-      if (rowEntries.isEmpty) "" else s""","rows":{${rowEntries.mkString(",")}}"""
-    val byt = parseDirBytes(vt)
-    val byteEntries = dirs.flatMap(d => byt.get(d).map(n => s""""${remap(d)}":$n"""))
-    val bytesJson =
-      if (byteEntries.isEmpty) "" else s""","bytes":{${byteEntries.mkString(",")}}"""
-    val sumJson = parseSumCol(vt).map { mc =>
-      val sums = parseDirSums(vt)
-      val entries = dirs.flatMap(d => sums.get(d).map(n => s""""${remap(d)}":$n"""))
-      val void = parseSumVoid(vt).filter(dirs.contains).map(remap)
-      val voidJson =
-        if (void.isEmpty) "" else s""","sumsVoid":"${void.toSeq.sorted.mkString(",")}""""
-      s""","sumCol":"$mc","sums":{${entries.mkString(",")}}$voidJson"""
-    }.getOrElse("")
-    val bl = parseDirBlooms(vt)
-    val bloomJson = parseBloomCol(vt).map { case (c, m) =>
-      val entries = dirs.flatMap(d => bl.get(d).map(b => s""""${remap(d)}":"$b""""))
-      s""","bloomCol":"$c","bloomBits":$m,"bloom":{${entries.mkString(",")}}"""
-    }.getOrElse("")
-    val altersJson = {
-      val entries = parseAlters(vt).map { case (c, t, ds) =>
-        s""""$c|$t":"${ds.toSeq.map(remap).sorted.mkString(",")}""""
-      }
-      if (entries.isEmpty) "" else s""","alters":{${entries.mkString(",")}}"""
-    }
-    val checksJson = parseChecksFrag(vt)
-      .map(c => s""","checks":{$c}""").getOrElse("")
-    // deletion vectors carry remapped: the replay reads the SAME
-    // physical files, so the sidecars' (file, position) identities stay
-    // valid verbatim — only the manifest-facing names change
-    val dvJson = {
-      val dv = parseDv(vt)
-      val dvr = parseDvRows(vt)
-      val keep = dirs.filter(dv.contains)
-      if (keep.isEmpty) ""
-      else {
-        val e = keep.map(d =>
-          s""""${remap(d)}":"${dv(d).map(sideRemap).mkString(",")}"""")
-        val n = keep.map(d => s""""${remap(d)}":${dvr.getOrElse(d, 0L)}""")
-        s""","dv":{${e.mkString(",")}},"dvRows":{${n.mkString(",")}}"""
-      }
-    }
-    s"$statsJson$mstatsJson$rowsJson$bytesJson$sumJson$bloomJson$altersJson$checksJson$dvJson"
-  }
-
   def cloneAt(spark: SparkSession, srcRoot: String, dstRoot: String, v: Int): Int = {
     require(srcRoot.startsWith("/") || srcRoot.contains(":/"),
       s"clone source must be an absolute path: $srcRoot")
-    val orig = manifest(spark, srcRoot, v)
+    val src = record(spark, srcRoot, v)
+    val orig = src.dirs
     require(orig.nonEmpty, s"version $v of $srcRoot has no data")
     // replay-pin the SOURCE dirs across the clone's publish (restore's
     // discipline): a concurrent vacuum on the source past v must either
@@ -3298,11 +2994,10 @@ object Versioned {
           s"version $v of $srcRoot was vacuumed during the clone ($d is gone)")
       }
       val remap: String => String = d => dataPath(srcRoot, d)
-      val carried = carryFieldsOf(spark, srcRoot, v, orig, remap, remap)
+      val carried = src.replayed(remap, remap)
       publishRecord(spark, dstRoot, head => {
         require(head == 0, s"clone target $dstRoot is not empty")
-        (orig.map(remap),
-          s""","ts":${System.currentTimeMillis()},"op":"clone"$carried""")
+        carried.copy(ts = System.currentTimeMillis(), op = Some("clone"))
       }).get
     }
   }
@@ -3326,7 +3021,8 @@ object Versioned {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
     require(v >= 1 && v <= head0, s"cannot restore $root to nonexistent version $v")
-    val dirs = manifest(spark, root, v) // throws if v's record was vacuumed
+    val src = record(spark, root, v) // throws if v's record was vacuumed
+    val dirs = src.dirs
     require(dirs.nonEmpty, s"version $v of $root has no data")
     // PIN the referenced dirs across the WHOLE publish, then verify they
     // still exist: a concurrent vacuum whose retention floor passed v
@@ -3342,10 +3038,9 @@ object Versioned {
         require(fs(spark, p).exists(p),
           s"version $v of $root was vacuumed during the restore ($d is gone)")
       }
-      publishRecord(spark, root, head => {
-        val ts = math.max(System.currentTimeMillis(), tsOf(spark, root, head))
-        (dirs, s""","ts":$ts,"op":"restore"${carryFieldsOf(spark, root, v, dirs)}""")
-      }).get
+      publishRecord(spark, root, head => src.replayed().copy(
+        ts = math.max(System.currentTimeMillis(), tsOf(spark, root, head)),
+        op = Some("restore"))).get
     }
   }
 
@@ -3427,8 +3122,8 @@ object Versioned {
     // zero-copy fork), so reclaiming those would break every branch —
     // the refs walk below adds them to the live set.
     val live: Set[String] =
-      (floor to head).flatMap(v =>
-        manifest(spark, root, v) ++ dvOf(spark, root, v).values.flatten).toSet ++
+      (floor to head).flatMap { v =>
+        val r = record(spark, root, v); r.dirs ++ r.dv.values.flatten }.toSet ++
         Branches.pinnedByRefs(spark, root)
     val dataDir = new org.apache.hadoop.fs.Path(s"$root/data")
     val f = fs(spark, dataDir)
@@ -3497,8 +3192,8 @@ object Versioned {
       // same live-set construction as the sweep (dv sidecars + branch
       // refs pin exactly as there)
       val live: Set[String] =
-        (floor to head).flatMap(v =>
-          manifest(spark, root, v) ++ dvOf(spark, root, v).values.flatten).toSet ++
+        (floor to head).flatMap { v =>
+          val r = record(spark, root, v); r.dirs ++ r.dv.values.flatten }.toSet ++
           Branches.pinnedByRefs(spark, root)
       val dataDir = new org.apache.hadoop.fs.Path(s"$root/data")
       val f = fs(spark, dataDir)
@@ -3568,8 +3263,9 @@ object Versioned {
     if (lastBatchId(spark, root).exists(_ >= batchId)) return None
     val rel = writeDataDir(spark, root, df)
     val v = publishRecord(spark, root, head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel
-        (dirs, extraFields(spark, root, head, dirs, None, s""","batchId":$batchId""", opArg = "stream-append"))
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs :+ rel, None, opArg = "stream-append")
+          .copy(batchId = Some(batchId))
       },
       abortIf = head => lastBatchId(spark, root).exists(_ >= batchId))
     if (v.isEmpty) { // lost to a racing replay that carried our batch
@@ -3594,11 +3290,11 @@ object Versioned {
       df: DataFrame): Option[Int] = {
     if (lastBatchId(spark, root).exists(_ >= batchId)) return None
     val rel = writeDataDir(spark, root, df)
-    val blooms = bloomForDir(spark, root, currentVersion(spark, root), rel)
+    val blooms = bloomForDir(spark, root, record(spark, root, currentVersion(spark, root)), rel)
     val v = publishRecord(spark, root, head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel
-        (dirs, extraFields(spark, root, head, dirs, None, s""","batchId":$batchId""",
-          blooms = blooms, opArg = "stream-append"))
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs :+ rel, None,
+          blooms = blooms, opArg = "stream-append").copy(batchId = Some(batchId))
       },
       abortIf = head => lastBatchId(spark, root).exists(_ >= batchId))
     if (v.isEmpty) { // lost to a racing replay that carried our batch
@@ -3620,7 +3316,8 @@ object Versioned {
     if (lastBatchId(spark, root).exists(_ >= batchId)) return None
     val rel = writeDataDir(spark, root, df)
     val v = publishRecord(spark, root, head =>
-        (Seq(rel), extraFields(spark, root, head, Seq(rel), None, s""","batchId":$batchId""", opArg = "stream-snapshot")),
+        extraFields(spark, root, record(spark, root, head), Seq(rel), None,
+          opArg = "stream-snapshot").copy(batchId = Some(batchId)),
       abortIf = _ => lastBatchId(spark, root).exists(_ >= batchId))
     if (v.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
@@ -3642,10 +3339,10 @@ object Versioned {
     if (lastBatchId(spark, root).exists(_ >= batchId)) return None
     val (rels, pre, rows, blooms) = writeClustered(spark, root, df, statsCol, buckets)
     val v = publishRecord(spark, root, head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) ++ rels
-        (dirs, extraFields(spark, root, head, dirs, Some(statsCol),
-          s""","batchId":$batchId""", precomputed = pre,
-          precomputedRows = rows, blooms = blooms, opArg = "stream-append"))
+        val ht = record(spark, root, head)
+        extraFields(spark, root, ht, ht.dirs ++ rels, Some(statsCol), precomputed = pre,
+          precomputedRows = rows, blooms = blooms, opArg = "stream-append")
+          .copy(batchId = Some(batchId))
       },
       abortIf = _ => lastBatchId(spark, root).exists(_ >= batchId))
     if (v.isEmpty) reclaimStaged(spark, root, rels)
@@ -3673,12 +3370,8 @@ object Versioned {
     * between two separate reads would make the pair inconsistent). */
   private[graft] def lastBatchIdAt(spark: SparkSession, root: String, from: Int): Option[Long] = {
     val head = currentVersion(spark, root)
-    (math.min(from, head) to lowestVersion(spark, root, head) by -1).iterator.flatMap { v =>
-      val p = new org.apache.hadoop.fs.Path(logDir(root), f"v$v%05d.json")
-      val in = fs(spark, p).open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      """"batchId":\s*(-?\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    }.nextOption()
+    (math.min(from, head) to lowestVersion(spark, root, head) by -1).iterator
+      .flatMap(v => record(spark, root, v).batchId).nextOption()
   }
 
   /** Row-level snapshot diff `va → vb`: multiset EXCEPT ALL both ways,
@@ -3692,22 +3385,15 @@ object Versioned {
     * (zero full-table scan), while two unrelated full snapshots degrade
     * gracefully to the complete compare. */
   def diff(spark: SparkSession, root: String, va: Int, vb: Int): DataFrame = {
-    val da = manifest(spark, root, va)
-    val db = manifest(spark, root, vb)
-    require((da ++ db).nonEmpty, s"diff of two empty versions of $root")
-    // both sides read under the NEWER version's schema, so a diff across
-    // an alter compares null-filled old rows against full-schema rows
-    // and rows untouched but for the schema change still cancel
-    val vMax = math.max(va, vb)
+    val (ra, rb) = (record(spark, root, va), record(spark, root, vb))
+    require((ra.dirs ++ rb.dirs).nonEmpty, s"diff of two empty versions of $root")
     // a dir shared by both manifests cancels ONLY if its deletion-vector
     // state also matches: a MOR delete between va and vb changes the
     // dir's live rows without changing the manifest entry, and each side
     // must be read under ITS OWN vectors to surface those removals
-    val dvA = dvOf(spark, root, va)
-    val dvB = dvOf(spark, root, vb)
-    val cancel = da.toSet.intersect(db.toSet)
-      .filter(d => dvA.get(d) == dvB.get(d))
-    diffOn(spark, root, va, vb, da.filterNot(cancel), db.filterNot(cancel))
+    val cancel = ra.dirs.toSet.intersect(rb.dirs.toSet)
+      .filter(d => ra.dv.get(d) == rb.dv.get(d))
+    diffRecords(spark, root, ra, rb, ra.dirs.filterNot(cancel), rb.dirs.filterNot(cancel))
   }
 
   /** [[diff]] restricted to EXPLICIT dir subsets — `aDirs` read at `va`
@@ -3717,15 +3403,22 @@ object Versioned {
     * subset shares still cancel under EXCEPT ALL.  `vMax`'s schema
     * governs both sides, exactly as in [[diff]]. */
   private[graft] def diffOn(spark: SparkSession, root: String, va: Int,
-      vb: Int, aDirs: Seq[String], bDirs: Seq[String]): DataFrame = {
-    val vMax = math.max(va, vb)
-    def read(only: Seq[String], dvV: Int): DataFrame =
+      vb: Int, aDirs: Seq[String], bDirs: Seq[String]): DataFrame =
+    diffRecords(spark, root, record(spark, root, va), record(spark, root, vb), aDirs, bDirs)
+
+  private def diffRecords(spark: SparkSession, root: String, ra: Record,
+      rb: Record, aDirs: Seq[String], bDirs: Seq[String]): DataFrame = {
+    // both sides read under the NEWER version's schema, so a diff across
+    // an alter compares null-filled old rows against full-schema rows
+    // and rows untouched but for the schema change still cancel
+    val rMax = if (ra.version >= rb.version) ra else rb
+    def read(only: Seq[String], dvAt: Record): DataFrame =
       if (only.isEmpty) { // schema from whichever side has data dirs
-        val any = (manifest(spark, root, va) ++ manifest(spark, root, vb)).distinct
-        readDirs(spark, root, vMax, any).limit(0)
-      } else readDirsDv(spark, root, vMax, only, keepPos = false, dvV = dvV)
-    val a = read(aDirs, va)
-    val b = read(bDirs, vb)
+        val any = (ra.dirs ++ rb.dirs).distinct
+        readDirsDv(spark, root, rMax, any, keepPos = false, rMax).limit(0)
+      } else readDirsDv(spark, root, rMax, only, keepPos = false, dvAt)
+    val a = read(aDirs, ra)
+    val b = read(bDirs, rb)
     b.exceptAll(a).withColumn("op", lit("added"))
       .unionByName(a.exceptAll(b).withColumn("op", lit("removed")))
   }
@@ -4294,12 +3987,12 @@ object Versioned {
       docs.filter(col("doc_id") % 2 === 1 && col("doc_id") % 10 >= 5))
     Versioned.commitDeleteMOR(spark, root, col("doc_id") % 11 === 3)
     val v = Versioned.maintain(spark, root).get
-    val st = Versioned.dirStats(spark, root, v)
-    val spans = Versioned.manifest(spark, root, v).flatMap(st.get).sortBy(_._1)
+    val r = record(spark, root, v)
+    val spans = r.dirs.flatMap(r.stats.get).sortBy(_._1)
     val worst = spans.map { case (lo, _) =>
       spans.count { case (a, b) => a <= lo && lo <= b } }.max
     require(worst <= 2, s"maintain must restore the overlap law (cover $worst)")
-    require(Versioned.dvOf(spark, root, v).isEmpty,
+    require(r.dv.isEmpty,
       "the fold must retire the deletion vectors")
     require(Versioned.maintain(spark, root).isEmpty,
       "the steady state must answer None")
@@ -4331,8 +4024,8 @@ object Versioned {
     val sidecars = Versioned.dvOf(spark, root, h).values.map(_.size).sum
     require(sidecars >= 2, s"the chain must accrete sidecars (got $sidecars)")
     val v = Versioned.maintain(spark, root, maxDvFraction = 0.1).get
-    require(Versioned.dvOf(spark, root, v).isEmpty &&
-      Versioned.dvRowsOf(spark, root, v).isEmpty,
+    val r = record(spark, root, v)
+    require(r.dv.isEmpty && r.dvRows.isEmpty,
       "the rewrite must retire every sidecar")
     // read-tax gone: the metadata count is plain row arithmetic again
     // and matches the scan exactly

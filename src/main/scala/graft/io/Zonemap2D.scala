@@ -53,7 +53,8 @@ object Zonemap2D {
     * file listing; the box filter is re-applied to the rows read. */
   def readRange2(spark: SparkSession, root: String, v: Int,
       loX: Long, hiX: Long, loY: Long, hiY: Long): DataFrame = {
-    val sc = Versioned.statsColOf(spark, root, v).getOrElse(
+    val r = Versioned.record(spark, root, v)
+    val sc = r.statsCol.getOrElse(
       throw new IllegalArgumentException(s"$root has no zone-map column"))
     val (xc, yc, bits) = sc match {
       case Versioned.Z2(x, y, b) => (x, y, b.toInt)
@@ -63,15 +64,12 @@ object Zonemap2D {
     val side = 1L << bits
     require(0 <= loX && hiX < side && 0 <= loY && hiY < side,
       s"box out of the z-domain [0, $side): ($loX,$hiX)x($loY,$hiY)")
-    val st = Versioned.dirStats(spark, root, v)
-    val keep = Versioned.manifest(spark, root, v).filter(d =>
-      st.get(d).forall { case (zlo, zhi) =>
+    val keep = r.dirs.filter(d =>
+      r.stats.get(d).forall { case (zlo, zhi) =>
         zRangeOverlapsBox(zlo, zhi, loX, hiX, loY, hiY, bits)
       })
-    val base =
-      if (keep.isEmpty) Versioned.readAt(spark, root, v).limit(0)
-      else Versioned.readDirs(spark, root, v, keep)
-    base.filter(col(xc).between(loX, hiX) && col(yc).between(loY, hiY))
+    Versioned.readPruned(spark, root, r, keep)
+      .filter(col(xc).between(loX, hiX) && col(yc).between(loY, hiY))
   }
 
   /** Does the z-interval [zlo,zhi] contain any Morton code whose
@@ -174,13 +172,13 @@ object Zonemap2D {
     Versioned.commitAppend(spark, root, docs.filter(col("doc_id") % 10 === 9))
     Versioned.commitDeleteMOR(spark, root, col("doc_id") % 13 === 5)
     val v = Versioned.maintain(spark, root, buckets = 8).get
-    val st = Versioned.dirStats(spark, root, v)
-    val spans = Versioned.manifest(spark, root, v).flatMap(st.get).sortBy(_._1)
+    val r = Versioned.record(spark, root, v)
+    val spans = r.dirs.flatMap(r.stats.get).sortBy(_._1)
     val worst = spans.map { case (lo, _) =>
       spans.count { case (a, b) => a <= lo && lo <= b } }.max
     require(worst <= 2,
       s"maintain must restore the 2-D overlap law (z-cover $worst)")
-    require(Versioned.dvOf(spark, root, v).isEmpty,
+    require(r.dv.isEmpty,
       "the fold must retire the deletion vectors")
     require(Versioned.maintain(spark, root, buckets = 8).isEmpty,
       "the steady state must answer None")

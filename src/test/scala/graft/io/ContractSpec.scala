@@ -141,4 +141,37 @@ class ContractSpec extends AnyFunSuite {
       Seq(("51", "ok")).toDF("id", "s"), "id")
     assert(Versioned.countAt(spark, root, v) == 52)
   }
+
+  test("checks named statsCol and op stay checks, never record fields") {
+    val root = newRoot()
+    Versioned.commit(spark, root, Seq((1L, 5L)).toDF("id", "m"))
+    Versioned.commitDeclareChecks(spark, root,
+      Seq("statsCol" -> "id > 0", "op" -> "m > 0"))
+    val v3 = Versioned.commitAppend(spark, root, Seq((2L, 6L)).toDF("id", "m"))
+    assert(Versioned.statsColOf(spark, root, v3).isEmpty)
+    assert(Versioned.checksOf(spark, root, v3) ==
+      Seq("statsCol" -> "id > 0", "op" -> "m > 0"))
+    assert(Versioned.history(spark, root).orderBy("version").select("op")
+      .as[String].collect().toSeq == Seq("commit", "declare", "append"))
+    val v4 = Versioned.commitAppendClustered(spark, root,
+      (10L until 20L).map(i => (i, i)).toDF("id", "m"), "id", buckets = 2)
+    assert(Versioned.statsColOf(spark, root, v4).contains("id"))
+    assert(Versioned.readRange(spark, root, v4, 1L, 12L)
+      .select(col("id")).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 10L, 11L, 12L))
+  }
+
+  test("a check expression holding quotes and braces round-trips and gates") {
+    val root = newRoot()
+    Versioned.commit(spark, root, Seq((1L, "a")).toDF("id", "s"))
+    val decl = Seq("no_brace" -> "s <> '}'", "no_quote" -> "s <> '\"'")
+    val v2 = Versioned.commitDeclareChecks(spark, root, decl)
+    assert(Versioned.checksOf(spark, root, v2) == decl)
+    val rejected = intercept[Versioned.CommitRejected] {
+      Versioned.commitAppendGated(spark, root, Seq((2L, "}")).toDF("id", "s"))
+    }
+    assert(rejected.violations == Map("no_brace" -> 1L))
+    val v3 = Versioned.commitAppendGated(spark, root, Seq((3L, "b")).toDF("id", "s"))
+    assert(Versioned.checksOf(spark, root, v3) == decl)
+    assert(Versioned.countAt(spark, root, v3) == 2)
+  }
 }

@@ -249,4 +249,31 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val vDrop = Versioned.commitAlterDrop(spark, root, "v")
     assert(Versioned.readAt(spark, root, vDrop).columns.toSeq == Seq("id"))
   }
+
+  test("a rename to a name holding a brace is recorded and maps old rows forward") {
+    val root = newRoot()
+    Versioned.commit(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
+    val v2 = Versioned.commitAlterRename(spark, root, "s", "s}x")
+    assert(Versioned.altersOf(spark, root, v2).map(a => (a._1, a._2)) ==
+      Seq(("s>s}x", "#rename")))
+    val v3 = Versioned.commitAppend(spark, root, Seq((3L, "c")).toDF("id", "s}x"))
+    assert(Versioned.altersOf(spark, root, v3).map(a => (a._1, a._2)) ==
+      Seq(("s>s}x", "#rename")))
+    val head = Versioned.readAt(spark, root, v3)
+    assert(head.columns.toSeq == Seq("id", "s}x"))
+    assert(head.filter(col("id") <= 2L).select(col("`s}x`")).as[String]
+      .collect().sorted.toSeq == Seq("a", "b"))
+  }
+
+  test("column names holding a record delimiter or an internal name are refused") {
+    val root = newRoot()
+    Versioned.commit(spark, root, Seq((1L, 2L)).toDF("id", "v"))
+    for (bad <- Seq("a|b", "a,b", "a>b", "_dvf", "_d", ""))
+      intercept[IllegalArgumentException](
+        Versioned.commitAlterRename(spark, root, "v", bad))
+    intercept[IllegalArgumentException](Versioned.commitAlterAdd(spark, root, "q|r", "bigint"))
+    intercept[IllegalArgumentException](Versioned.commitDeclareStatsCols(spark, root, Seq("a,b")))
+    intercept[IllegalArgumentException](Versioned.commitDeclareSum(spark, root, "v>w"))
+    assert(Versioned.currentVersion(spark, root) == 1, "refused names publish nothing")
+  }
 }
